@@ -1,24 +1,14 @@
 package graft
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.runner.Cli
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional arg: comma-separated query-name filter for local
     // re-measurement of specific queries (the driver passes no args)
-    val only: Option[Set[String]] =
-      args.lift(0).map(_.split(",").map(_.trim).toSet)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    val only = SparkEntry.nameFilter(args.lift(0))
+    var spark = Cli.buildSpark("graft-bench")
     // Untimed per-query warmup immediately before each timed slot:
     // whole-stage codegen caches at most 100 generated classes, so with
     // this many queries any earlier warm pass is long evicted by the time
@@ -49,19 +39,15 @@ object Bench {
     // every query two independent draws of JVM/GC/neighborhood state;
     // the min is the steady-state estimate.
     def sweep(
-        ordered: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)],
+        ordered: Seq[(String, (SparkSession, String) => DataFrame)],
         prewarm: Boolean): Seq[(String, Double)] = ordered.map { case (name, fn) =>
       if (prewarm) {
         try { fn(spark, warmDir).count() } catch { case _: Throwable => }
       }
-      spark.catalog.clearCache()
-      // catalog.clearCache() misses RDD-level persistence: the iterative
-      // operators (pointer-jump CC, PageRank, label-prop) localCheckpoint
-      // each round, and those blocks sit in the BlockManager until the
-      // async ContextCleaner gets to them — ~170 queries of that debt
-      // inflated the dedup family 3-5x in-suite vs isolated (observed
-      // 16.7s vs 3.4s for q_dedup_keep_best). Release them synchronously.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // release synchronously (the prewarm's blocks included): RDD-level
+      // debt once inflated q_dedup_keep_best 16.7s in-suite vs 3.4s
+      // isolated
+      SparkEntry.release(spark)
       // settle the heap before the timed window: 150+ queries of byte[]
       // payloads and cached signature tables leave GC debt that
       // otherwise lands inside whichever sub-second query runs next
@@ -81,8 +67,7 @@ object Bench {
       // Failed runs return NaN (poisoning min), print a loud marker,
       // and publish as -1 so downstream gates can refuse them.
       def timedRun(): Double = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        SparkEntry.release(spark)
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
@@ -98,7 +83,7 @@ object Bench {
           // query's BENCHFAIL.
           if (spark.sparkContext.isStopped) {
             System.err.println(s"[bench] SparkContext died during $name — rebuilding session")
-            spark = newSession()
+            spark = Cli.buildSpark("graft-bench")
           }
           Double.NaN
         }
@@ -110,7 +95,7 @@ object Bench {
       // signature/hash tables (the reusable-index idiom) hand cache
       // lifetime to the caller — release between queries so one query's
       // working set can't poison the next one's measurement
-      spark.catalog.clearCache()
+      SparkEntry.release(spark)
       name -> sec
     }
     // BENCH-ONLY timing surfaces (not in SparkEntry.queries, so no
@@ -120,9 +105,9 @@ object Bench {
     // twin to self-gate the estimate (harness cost, round 15), which
     // means the wrapper's timing no longer measures the sketch path;
     // this entry does, end to end at every benched SF (round-16 ADVICE).
-    val benchOnly: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    val benchOnly: Seq[(String, (SparkSession, String) => DataFrame)] =
       Seq("q_dq_profile_approx_raw" ->
-        ((s: org.apache.spark.sql.SparkSession, d: String) =>
+        ((s: SparkSession, d: String) =>
           graft.operators.DqOps.qDqProfileApproxRaw(s, d)))
     val ordered = (SparkEntry.queries.toSeq ++ benchOnly)
       .filter { case (name, _) => only.forall(_.contains(name)) }

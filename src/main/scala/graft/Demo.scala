@@ -2,13 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.Variables
 import graft.ds.{DataSourceRegistry, FileDataSource, FsDataSource, SparkDataSource}
 import graft.jobclass.JobContext
 import graft.net.{FileTaskQueue, JobRef}
-import graft.runner.{Application, JobNetRunner, JobListener}
+import graft.runner.{Application, Cli, JobNetRunner, JobListener}
 
 /** End-to-end demo of the framework surface: builds a fixture home
   * (create → load → transform → unload jobnet + a streaming_load queue)
@@ -20,14 +18,7 @@ object Demo {
 
   def main(args: Array[String]): Unit = {
     val wh = graft.core.TempDirs.create("demo-warehouse")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh.toString)
-      .getOrCreate()
+    val spark = Cli.buildSpark("graft-demo", "spark.sql.warehouse.dir" -> wh.toString)
     spark.sparkContext.setLogLevel("ERROR")
     spark.sql("CREATE DATABASE IF NOT EXISTS demo")
 

@@ -2,25 +2,28 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.debug._
+import graft.runner.Cli
 
 /** Dumps the formatted physical plan of each headline query to PLANS.md —
   * the scale audit: check PushedFilters / ReadSchema on every scan,
   * broadcast joins on dim tables, and WholeStageCodegen coverage.
   *
-  * Usage: runMain graft.Explain [sfDir] [outFile]
+  * Usage: runMain graft.Explain [sfDir] [outFile] [q_a,q_b,...]
+  *
+  * The optional third argument replaces the headline list with any
+  * registered queries (the filter Bench and Verify take), so a plan diff
+  * around a code change is two runs and a `diff`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val only = SparkEntry.nameFilter(args.lift(2))
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    val spark = Cli.buildSpark("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
 
     val headline = Seq("q1_pricing_summary", "q3_shipping_priority",
@@ -221,14 +224,14 @@ object Explain {
     sb ++= "`ReadSchema` on scans (pushdown + pruning), `BroadcastHashJoin` on\n"
     sb ++= "dimension joins, `WholeStageCodegen` span coverage, and partial\n"
     sb ++= "(`HashAggregate` before exchange) aggregation.\n"
-    headline.foreach { name =>
+    only.map(_.toSeq.sorted).getOrElse(headline).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n"
       sb ++= df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb ++= "```\n"
       notes.get(name).foreach(n => sb ++= s"\n> $n\n")
-      spark.catalog.clearCache() // per-query persisted tables (see Bench)
+      SparkEntry.release(spark)
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1-and-beyond testdata generator for the scaling audit
@@ -159,13 +159,7 @@ object GenScale {
           s"from a prior run; verify they were generated at factor $factor")
     }
     def wants(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runner.Cli.buildSpark("graft-genscale")
     import spark.implicits._
 
     def out(name: String) = s"$outDir/$name.parquet"

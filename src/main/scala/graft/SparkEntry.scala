@@ -33,4 +33,24 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The optional comma-separated query-name filter that Bench, Verify
+    * and Explain take; None keeps every query.
+    */
+  def nameFilter(arg: Option[String]): Option[Set[String]] =
+    arg.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** Release what a query left persisted before the next one runs:
+    * catalog-cached tables (signature/hash tables whose lifetime the
+    * operators hand to the caller) and RDD-level blocks, which
+    * `catalog.clearCache()` misses. The iterative operators (pointer-jump
+    * CC, PageRank, label-prop) localCheckpoint each round, and those
+    * blocks otherwise sit in the BlockManager until the async
+    * ContextCleaner gets to them — ~170 queries of that debt once
+    * inflated the dedup family 3-5x in a suite run versus isolated.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.runner.Cli
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,16 +9,8 @@ object Verify {
     val outDir = args(1)
     // optional 3rd arg: comma-separated query-name filter for local
     // iteration (the driver always passes exactly two args)
-    val only: Option[Set[String]] =
-      args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = SparkEntry.nameFilter(args.lift(2))
+    val spark = Cli.buildSpark("graft-verify")
     new java.io.File(outDir).mkdirs()
     var nOk, nFail, nZero = 0
     SparkEntry.queries
@@ -41,12 +33,7 @@ object Verify {
         nFail += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release per-query persisted tables (signature/hash caches whose
-      // lifetime belongs to the caller) AND RDD-level blocks — the
-      // iterative operators localCheckpoint per round, and those blocks
-      // are invisible to catalog.clearCache()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      SparkEntry.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

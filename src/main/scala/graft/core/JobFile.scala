@@ -24,9 +24,15 @@ object JobFile {
 
   private val yaml = new ObjectMapper(new YAMLFactory())
 
+  /** A YAML mapping; an empty or comment-only document is no keys. */
   def parseYamlMap(text: String): Map[String, Any] = {
-    val node = yaml.readValue(text, classOf[java.util.Map[String, Object]])
-    if (node == null) Map.empty else fromJava(node).asInstanceOf[Map[String, Any]]
+    val parser = yaml.createParser(text)
+    try {
+      val node =
+        if (parser.nextToken() == null) null
+        else yaml.readValue(parser, classOf[java.util.Map[String, Object]])
+      if (node == null) Map.empty else fromJava(node).asInstanceOf[Map[String, Any]]
+    } finally parser.close()
   }
 
   private def fromJava(v: Any): Any = v match {

@@ -206,7 +206,6 @@ object ErbContext {
 object EmbeddedFunctions {
   import java.nio.file.{Files, Path, Paths}
   import java.time.LocalDate
-  import java.time.format.DateTimeFormatter
 
   private val Erb = """<%=\s*(.*?)\s*%>""".r
   private val TodayArith = """today\s*([+-])\s*(\d+)""".r

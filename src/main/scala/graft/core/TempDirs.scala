@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 /** Run-scoped temp directories with guaranteed cleanup.
@@ -24,22 +24,28 @@ object TempDirs {
     // SPARK_GRAFT_TMPROOT relocates all run-scoped scratch (stream
     // checkpoints/sinks, queue dirs, derby stores) — e.g. onto a
     // RAM-backed fs for I/O-bound sweeps. Default: java.io.tmpdir.
-    val r = sys.env.get("SPARK_GRAFT_TMPROOT") match {
+    val r = rootBase(sys.env.get("SPARK_GRAFT_TMPROOT")) match {
       case Some(base) =>
-        Files.createTempDirectory(
-          Files.createDirectories(java.nio.file.Paths.get(base)), "graft_run_")
+        Files.createTempDirectory(Files.createDirectories(base), "graft_run_")
       case None => Files.createTempDirectory("graft_run_")
     }
-    // Liveness marker for the audit scripts' stale-scratch sweep: a
+    // Liveness marker for the launcher's stale-scratch sweep: a
     // long-lived run (sf10 benches exceed 2h) may never refresh the
     // root's mtime, so mtime alone can't distinguish "stale" from
     // "owned by a still-running JVM". The sweep skips any root whose
-    // owner.pid names a live process (tools/run_sf*_audit.sh).
+    // owner.pid names a live process (tools/graft_java.sh).
     Files.write(r.resolve("owner.pid"),
       ProcessHandle.current().pid().toString.getBytes("UTF-8"))
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
     r
   }
+
+  /** The `SPARK_GRAFT_TMPROOT` setting as an absolute path. A relative
+    * setting resolves against the working directory once, here, so the
+    * sbt-forked JVM and `tools/graft_java.sh` launches agree on it.
+    */
+  private[core] def rootBase(setting: Option[String]): Option[Path] =
+    setting.map(Paths.get(_).toAbsolutePath.normalize)
 
   /** A fresh directory `<root>/<prefix>…` — drop-in replacement for
     * `Files.createTempDirectory(prefix)` with end-of-run cleanup.

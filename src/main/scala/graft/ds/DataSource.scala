@@ -3,7 +3,7 @@ package graft.ds
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{JobError, JobFailure, SqlStatement, TableSpec}
 

@@ -574,6 +574,19 @@ object GramHelper {
     b
   }
 
+  /** Power-of-two size of the shingle dedup table for `n` candidates:
+    * load factor ≤ 0.5, clamped at 2^30. Without the clamp and the Long
+    * compare, an Int capacity wraps negative once n > 2^29 and the
+    * doubling loop never ends. At the clamp the load factor can reach 1
+    * and a probe still finds a slot: `bounds` holds two Ints per word,
+    * so n < 2^30.
+    */
+  private[functions] def tableCapacity(n: Int): Int = {
+    var cap = 4
+    while (cap < (1 << 30) && cap < n.toLong * 2) cap <<= 1
+    cap
+  }
+
   /** Distinct '_'-joined k-word shingles in first-occurrence order,
     * optionally binary-sorted. k-shingles exist when words ≥ k (the
     * slice-length guards in the SQL forms); a lone empty token (empty
@@ -596,9 +609,7 @@ object GramHelper {
     val nWords = b.length / 2
     val n = nWords - k + 1 // candidate shingles (one per word window)
     if (n <= 0) return new GenericArrayData(new Array[Any](0))
-    // power-of-two table, load factor ≤ 0.5
-    var cap = 4
-    while (cap < n * 2) cap <<= 1
+    val cap = tableCapacity(n)
     val mask = cap - 1
     val table = new Array[Int](cap)
     java.util.Arrays.fill(table, -1)
@@ -742,36 +753,31 @@ case class DHash56(child: Expression) extends UnaryExpression {
 }
 
 object VectorFunctions {
-  /** Register `vec_dot` / `vec_norm` / `simhash16` as SQL functions on the
-    * session, so `expr("vec_dot(a, b)")` resolves to the codegen'd
-    * expressions.
+  /** Every graft SQL function: name, expression class and builder. Both
+    * [[register]] and [[GraftExtensions]] install exactly this table.
+    */
+  val all: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
+    ("vec_norm", classOf[VecNorm], e => VecNorm(e.head)),
+    ("simhash16", classOf[SimHash16], e => SimHash16(e.head)),
+    ("simhash48", classOf[SimHash48], e => SimHash48(e.head)),
+    ("jaccard4", classOf[Jaccard4], e => Jaccard4(e(0), e(1))),
+    ("minhash32", classOf[MinHash32], e => MinHash32(e.head)),
+    ("container_decode", classOf[ContainerDecode], e => ContainerDecode(e.head)),
+    ("dhash56", classOf[DHash56], e => DHash56(e.head)),
+    ("pixelgrid64", classOf[PixelGrid64], e => PixelGrid64(e.head)),
+    ("bigrams2", classOf[Bigrams2], e => Bigrams2(e.head)),
+    ("bigrams2_sorted", classOf[Bigrams2Sorted], e => Bigrams2Sorted(e.head)),
+    ("grams4w", classOf[Grams4W], e => Grams4W(e.head)))
+
+  /** Register the functions in [[all]] on the session, so
+    * `expr("vec_dot(a, b)")` resolves to the codegen'd expressions.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("vec_dot",
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("vec_norm",
-      (exprs: Seq[Expression]) => VecNorm(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("simhash16",
-      (exprs: Seq[Expression]) => SimHash16(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("simhash48",
-      (exprs: Seq[Expression]) => SimHash48(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("jaccard4",
-      (exprs: Seq[Expression]) => Jaccard4(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("minhash32",
-      (exprs: Seq[Expression]) => MinHash32(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("container_decode",
-      (exprs: Seq[Expression]) => ContainerDecode(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("dhash56",
-      (exprs: Seq[Expression]) => DHash56(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("pixelgrid64",
-      (exprs: Seq[Expression]) => PixelGrid64(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("bigrams2",
-      (exprs: Seq[Expression]) => Bigrams2(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("bigrams2_sorted",
-      (exprs: Seq[Expression]) => Bigrams2Sorted(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("grams4w",
-      (exprs: Seq[Expression]) => Grams4W(exprs.head), "built-in")
+    all.foreach { case (name, _, build) =>
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }
 
@@ -786,42 +792,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VecNorm].getName, "vec_norm"),
-      (exprs: Seq[Expression]) => VecNorm(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (exprs: Seq[Expression]) => SimHash16(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash48"),
-      new ExpressionInfo(classOf[SimHash48].getName, "simhash48"),
-      (exprs: Seq[Expression]) => SimHash48(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("jaccard4"),
-      new ExpressionInfo(classOf[Jaccard4].getName, "jaccard4"),
-      (exprs: Seq[Expression]) => Jaccard4(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("minhash32"),
-      new ExpressionInfo(classOf[MinHash32].getName, "minhash32"),
-      (exprs: Seq[Expression]) => MinHash32(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("container_decode"),
-      new ExpressionInfo(classOf[ContainerDecode].getName, "container_decode"),
-      (exprs: Seq[Expression]) => ContainerDecode(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("dhash56"),
-      new ExpressionInfo(classOf[DHash56].getName, "dhash56"),
-      (exprs: Seq[Expression]) => DHash56(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("pixelgrid64"),
-      new ExpressionInfo(classOf[PixelGrid64].getName, "pixelgrid64"),
-      (exprs: Seq[Expression]) => PixelGrid64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("bigrams2"),
-      new ExpressionInfo(classOf[Bigrams2].getName, "bigrams2"),
-      (exprs: Seq[Expression]) => Bigrams2(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("bigrams2_sorted"),
-      new ExpressionInfo(classOf[Bigrams2Sorted].getName, "bigrams2_sorted"),
-      (exprs: Seq[Expression]) => Bigrams2Sorted(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("grams4w"),
-      new ExpressionInfo(classOf[Grams4W].getName, "grams4w"),
-      (exprs: Seq[Expression]) => Grams4W(exprs.head)))
+    VectorFunctions.all.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     // whole-operator extension: the native as-of join planner rule
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

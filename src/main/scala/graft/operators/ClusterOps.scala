@@ -606,7 +606,7 @@ object ClusterOps {
     // the query under audit — sampling first would undercount buckets
     // past the cap and silently skip the subdivision path
     // persisted: perBand plus both self-join sides read this frame; the
-    // caller owns cache lifetime (Bench/Verify/RunOne clear between
+    // caller owns cache lifetime (Bench, Verify and Explain release between
     // queries — same discipline as simhashBandPairs). An unpersist here
     // would run eagerly while BUILDING the lazy plan, before the
     // returned DataFrame executes, and the cache would never be used.
@@ -1028,7 +1028,6 @@ object ClusterOps {
     */
   def qLabelProp(s: SparkSession, dir: String, rounds: Int = 2, k: Int = 5): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     // plane count sized to the corpus (log₂(n/8), floor 8 — see
     // Similarity.planesFor): the candidate bucket space must grow with n
     // or bucket occupancy — and the bucket-blocked scored join's pair

@@ -419,7 +419,7 @@ object CurationOps {
   /** [[qContainment]] plus a release handle for the persisted gram table —
     * the loan-pattern callers (specs, pipelines embedding this op) use to
     * scope the cache without nuking the whole session's cache
-    * (Bench/Verify/RunOne still clearCache between queries).
+    * (Bench, Verify and Explain still release between queries).
     *
     * Round 15 — the df cap is now min(n/20, 512) (was n/20 alone). The
     * inverted-index join pays df_eval × df_train pairs per gram, so the

@@ -375,7 +375,7 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // NOTE the returned plan reads the persisted gram/band tables — the
-    // caller owns their lifetime (Bench/Verify/RunOne clear the cache
+    // caller owns their lifetime (Bench, Verify and Explain release it
     // between queries; a pipeline embedding this keeps the signature
     // table alive deliberately, it IS the reusable LSH index)
     verifyPairs(cand, grams, 0.8).orderBy("doc_a", "doc_b")

@@ -37,7 +37,6 @@ object Similarity {
     */
   def qCosineTopK(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val q = e.filter(col("vec_id") < 3)
@@ -337,7 +336,6 @@ object Similarity {
     */
   def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
         hyperplaneBucket.as("bucket"))
@@ -434,7 +432,6 @@ object Similarity {
     */
   def qMultiprobeRecall(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
         hyperplaneBucket.as("bucket"))
@@ -576,7 +573,6 @@ object Similarity {
     */
   def qNdcgEval(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
         hyperplaneBucket.as("bucket"))
@@ -1063,7 +1059,6 @@ object Similarity {
     */
   def qIvfSearch(s: SparkSession, dir: String, nprobe: Int = 2, k: Int = 5): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val scores = centScores(seedCentroids(e))
@@ -1321,7 +1316,6 @@ object Similarity {
     */
   def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"), expr(normExpr).as("nrm"))
     val q = e.filter(pmod(col("vec_id"), lit(25)) === 0)
@@ -1433,7 +1427,6 @@ object Similarity {
     */
   def qTruncRecall(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    import s.implicits._
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr(normExpr).as("nrm"),

@@ -226,7 +226,6 @@ object WarehouseOps {
       .select("l_orderkey", "l_extendedprice", "l_discount")
     val cust = t(s, dir, "customer")
       .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy("c_custkey", "c_name", "c_mktsegment")

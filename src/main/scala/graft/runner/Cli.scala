@@ -2,9 +2,10 @@ package graft.runner
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{EmbeddedFunctions, JobFile, JobResult, ParameterError, Variables}
+import graft.core.{EmbeddedFunctions, JobFile, ParameterError, Variables}
 import graft.ds.{DataSourceRegistry, FileDataSource, FsDataSource, SparkDataSource}
 import graft.jobclass.{JobClass, JobContext}
 import graft.net.{FileTaskQueue, MemoryTaskQueue, TaskQueue}
@@ -25,16 +26,33 @@ object Cli {
     */
   val Version = "0.3.0"
 
-  def buildSpark(appName: String): SparkSession = {
+  /** The one SparkSession factory: the CLI mains and the harness mains
+    * (Bench, Verify, Explain, GenScale, Demo) all build here, so their
+    * timings and plans come from the same session settings.
+    *
+    * The master is `SPARK_MASTER` (a deployment address), else
+    * `local[$SPARK_GRAFT_CPUS]`, else every local core. Shuffle width is
+    * the master's core count. `conf` adds per-caller settings.
+    */
+  def buildSpark(appName: String, conf: (String, String)*): SparkSession = {
+    val master = sys.env.getOrElse("SPARK_MASTER",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]")
+    // The context comes first so its core count can be a builder option:
+    // setting it on the built session instead would initialize the
+    // session state eagerly (~0.5 s of startup) and keep the width from
+    // sessions made with newSession().
+    val sc = SparkContext.getOrCreate(new SparkConf()
+      .setMaster(master)
+      .setAppName(appName)
+      .set("spark.ui.enabled", "false")
+      .setAll(conf))
+    // the builder reuses `sc` on purpose; silence its warning about that
+    sc.setLogLevel("ERROR")
     val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", sc.defaultParallelism.toLong)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    sc.setLogLevel("WARN")
     s
   }
 
@@ -538,12 +556,10 @@ object BricolageMain {
     val logFiles = LogFilePath.default(
       opts.logDir.orElse(saved("log-dir")),
       opts.logPath.orElse(saved("log-path")))
-    def execute(): graft.core.JobResult =
-      if (classMode) job.execute()
-      else Application.runJobFile(jobPath, ctx, opts.jobOptions, opts.varAssigns)
+    val ref = graft.net.JobRef(subsys, jobPath.getFileName.toString, isNet = false)
+    def execute(): graft.core.JobResult = Application.runJob(job, ref, JobListener.registered)
     val result = logFiles match {
       case Some(lp) =>
-        val ref = graft.net.JobRef(subsys, jobPath.getFileName.toString, isNet = false)
         val now = java.time.LocalDateTime.now()
         val p = Paths.get(lp.format(ref, s"$subsys/${jobPath.getFileName}", now, now))
         val upload = opts.s3Log.orElse(saved("s3-log")).map { spec =>
@@ -591,7 +607,7 @@ object JobNetMain {
       Cli.printOptionPairs(opts, saved)
       return 0
     }
-    val runner = new JobNetRunner(ctx)
+    val runner = new JobNetRunner(ctx, JobListener.registered)
     val executorId = Cli.executorId(
       if (opts.ecsExecutor) Some(sys.env.getOrElse("ECS_CONTAINER_METADATA_URI",
         throw new ParameterError("--ecs-executor requires ECS_CONTAINER_METADATA_URI")))

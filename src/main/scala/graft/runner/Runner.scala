@@ -5,7 +5,7 @@ import scala.collection.mutable
 
 import graft.core._
 import graft.jobclass.{Action, JobClass, JobContext}
-import graft.net.{FileTaskQueue, JobDAG, JobNet, JobRef, MemoryTaskQueue, TaskQueue}
+import graft.net.{JobDAG, JobNet, JobRef, MemoryTaskQueue, TaskQueue}
 
 /** Lifecycle hooks with error-swallowing handlers
   * (reference: lib/bricolage/eventhandlers.rb:2-51; fired at
@@ -162,11 +162,16 @@ object Application {
       cliOptions: Map[String, String] = Map.empty,
       cliVariables: Variables = Variables.empty,
       listeners: Seq[JobListener] = Nil): JobResult = {
-    val jf = JobFile.load(path)
-    val ref = JobRef(ctx.subsys, path.getFileName.toString, isNet = false)
+    val name = path.getFileName.toString
+    val job = new Job(name, JobFile.load(path), ctx, cliOptions, cliVariables,
+      Some(path.toAbsolutePath))
+    runJob(job, JobRef(ctx.subsys, name, isNet = false), listeners)
+  }
+
+  /** Execute a built job between the beforeJob/afterJob hooks. */
+  def runJob(job: Job, ref: JobRef, listeners: Seq[JobListener]): JobResult = {
     JobListener.fire(listeners)(_.beforeJob(ref))
-    val result = new Job(path.getFileName.toString, jf, ctx, cliOptions, cliVariables,
-      Some(path.toAbsolutePath)).execute()
+    val result = job.execute()
     JobListener.fire(listeners)(_.afterJob(ref, result))
     result
   }

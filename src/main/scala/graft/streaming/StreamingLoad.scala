@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import scala.util.matching.Regex
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.ds.{ObjectStore, SparkDataSource}
-import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
+import graft.jobclass.{Action, JobClass, JobContext}
 
 /** Micro-batch load from a filesystem object queue
   * (reference: jobclass/streaming_load.rb — the only "streaming" in the

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Variables
 import graft.ds.DataSourceRegistry
 import graft.jobclass.{JobContext, LoadOptions}
-import graft.net.{FileTaskQueue, JobDAG, JobNet, JobRef}
+import graft.net.{FileTaskQueue, JobRef}
 import graft.runner.JobNetRunner
 
 /** 1:1 ports of the reference's remaining small test suites:

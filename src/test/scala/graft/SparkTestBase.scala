@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession with a throwaway warehouse for framework tests. */

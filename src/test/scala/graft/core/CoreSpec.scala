@@ -278,3 +278,12 @@ class JobFileSpec extends AnyFunSuite {
     assert(jf.jobClass == "exec")
   }
 }
+
+class TempDirsSpec extends AnyFunSuite {
+  test("a relative SPARK_GRAFT_TMPROOT resolves to an absolute path once") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    assert(TempDirs.rootBase(Some("scratch/../tmproot")) == Some(cwd.resolve("tmproot")))
+    assert(TempDirs.rootBase(Some("/var/tmp/x")).map(_.toString) == Some("/var/tmp/x"))
+    assert(TempDirs.rootBase(None).isEmpty)
+  }
+}

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ds.DataSourceRegistry

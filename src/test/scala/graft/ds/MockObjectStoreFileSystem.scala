@@ -1,6 +1,6 @@
 package graft.ds
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException, IOException, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException, IOException}
 import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger

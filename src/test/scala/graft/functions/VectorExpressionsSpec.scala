@@ -44,6 +44,17 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(rows(3).getDouble(1) == 0.0)
   }
 
+  test("shingle table sizing: power of two at load factor <= 0.5, terminates near 2^30") {
+    assert(GramHelper.tableCapacity(1) == 4)
+    assert(GramHelper.tableCapacity(3) == 8)
+    assert(GramHelper.tableCapacity(4) == 8)
+    assert(GramHelper.tableCapacity(1000) == 2048)
+    // n * 2 and the doubled capacity overflow Int here; the size clamps
+    assert(GramHelper.tableCapacity((1 << 29) + 1) == (1 << 30))
+    assert(GramHelper.tableCapacity(1 << 30) == (1 << 30))
+    assert(GramHelper.tableCapacity(Int.MaxValue) == (1 << 30))
+  }
+
   test("jaccard4 matches the array_intersect/array_union round(4) formulation") {
     import spark.implicits._
     VectorFunctions.register(spark)

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.core._
 import graft.ds.{DataSourceRegistry, FileDataSource, FsDataSource, SparkDataSource}
-import graft.net.{FileTaskQueue, JobRef}
-import graft.runner.{Application, Job, JobNetRunner}
+import graft.net.FileTaskQueue
+import graft.runner.{Application, JobNetRunner}
 
 /** End-to-end job-class runs against a temp warehouse + fixture home,
   * mirroring the reference's fixture tree (test/home/subsys).

@@ -1,6 +1,5 @@
 package graft.net
 
-import java.nio.file.Files
 import java.time.LocalDateTime
 
 import org.scalatest.funsuite.AnyFunSuite

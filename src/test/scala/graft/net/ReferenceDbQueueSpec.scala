@@ -1,6 +1,6 @@
 package graft.net
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 

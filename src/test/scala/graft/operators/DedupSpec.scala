@@ -376,7 +376,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash hot-bucket subdivision: cold buckets untouched, hot buckets bounded, candidates only shrink") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // synthetic signatures: 40 docs share band 0 (low 16 bits = 0x1111)
     // forming one hot bucket, while their bands 1 and 2 stay distinct so

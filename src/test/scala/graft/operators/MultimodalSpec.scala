@@ -115,7 +115,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("phash subdivision: cold buckets untouched, hot buckets split, keys refine") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // 40 assets share band 0 (low 14 bits) with bands 1-3 varying, so the
     // subdivision bits (next band's low 8) actually differ; 20 assets

@@ -32,7 +32,6 @@ class SkewUtilsSpec extends AnyFunSuite {
   }
 
   test("saltedJoin left keeps unmatched big-side rows") {
-    import spark.implicits._
     val dimMissing = dim.filter("k <> 0") // hot key unmatched
     val plain = skewed.join(dimMissing, Seq("k"), "left")
     val salted = SkewUtils.saltedJoin(skewed, dimMissing, "k", salt = 4, "left")

@@ -46,6 +46,10 @@ class CliSpec extends AnyFunSuite {
     Files.writeString(home.resolve("bricolage.yml"),
       "log_dir: /var/log/graft\nwho: system\n")
     Files.writeString(home.resolve("variable.yml"), "who: user\n")
+    // an empty and a comment-only layer load as no variables
+    Files.createDirectories(home.resolve("config"))
+    Files.writeString(home.resolve("config/variable.yml"), "")
+    Files.writeString(home.resolve("config/bricolage.yml"), "# nothing set yet\n\n")
     val vars = Cli.loadVariables(home, "")
     assert(vars("log_dir") == "/var/log/graft")
     assert(vars("who") == "user")
@@ -670,6 +674,7 @@ class CliSpec extends AnyFunSuite {
 
   test("before_option_parsing hook fires before argv parsing and can inject options") {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val jobEvents = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val home = graft.core.TempDirs.create("cli-home4")
     JobListener.register(new JobListener {
       override def beforeOptionParsing(args: Seq[String]): Seq[String] = {
@@ -677,6 +682,10 @@ class CliSpec extends AnyFunSuite {
         // inject a default option, as the reference's hooks do via ARGV
         if (args.exists(_.endsWith("nop2.job"))) s"--home=$home" +: args else args
       }
+      override def beforeJob(ref: graft.net.JobRef): Unit =
+        jobEvents.add(s"before ${ref.name}")
+      override def afterJob(ref: graft.net.JobRef, result: graft.core.JobResult): Unit =
+        jobEvents.add(s"after ${ref.name}")
     })
     Files.writeString(home.resolve("nop.job"), "class: noop\n")
     assert(BricolageMain.run(Seq(s"--home=$home",
@@ -686,6 +695,24 @@ class CliSpec extends AnyFunSuite {
     Files.writeString(home.resolve("nop2.job"), "class: noop\n")
     assert(BricolageMain.run(Seq(home.resolve("nop2.job").toString),
       Some(SparkTestBase.spark)) == 0)
+    // beforeJob/afterJob reach global hooks from BricolageMain (job file
+    // and class mode)...
+    jobEvents.clear()
+    Files.writeString(home.resolve("hooked.job"), "class: noop\n")
+    assert(BricolageMain.run(Seq(s"--home=$home",
+      home.resolve("hooked.job").toString), Some(SparkTestBase.spark)) == 0)
+    assert(BricolageMain.run(Seq(s"--home=$home", "noop"), Some(SparkTestBase.spark)) == 0)
+    // ...and from JobNetMain, for every job of the net
+    Files.createDirectories(home.resolve("hnet"))
+    Files.writeString(home.resolve("hnet/hooked_a.job"), "class: noop\n")
+    Files.writeString(home.resolve("hnet/hooked_b.job"), "class: noop\n")
+    Files.writeString(home.resolve("hnet/n.jobnet"), "hooked_a -> hooked_b\n")
+    assert(JobNetMain.run(Seq(s"--home=$home",
+      home.resolve("hnet/n.jobnet").toString), Some(SparkTestBase.spark)) == 0)
+    import scala.jdk.CollectionConverters._
+    assert(jobEvents.asScala.toSeq == Seq(
+      "before hooked.job", "after hooked.job", "before noop", "after noop",
+      "before hooked_a", "after hooked_a", "before hooked_b", "after hooked_b"))
   }
 
   test("prelude.conf auto-requires features at context creation (reference context.rb:55)") {

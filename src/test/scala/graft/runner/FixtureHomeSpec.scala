@@ -7,7 +7,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.net.MemoryTaskQueue
 
 /** End-to-end run of the ported reference fixture home
   * (reference: the test/home tree its own test suite drives; SURVEY §5).

@@ -14,6 +14,8 @@
 #
 # Usage: tools/run_pipeline_bench.sh [SF_DIR]   (default /tmp/graft_sf1)
 #        PIPE_RUNS=N   min-of-N (default 3)
+#        SPARK_GRAFT_CPUS=N   local cores (default: all), read by the
+#                             session factory like every other main
 #
 # Round 13: launches through tools/graft_java.sh (plain `java -cp` over
 # the compiled classes) instead of `sbt runMain` — the engine is the
@@ -64,8 +66,6 @@ for i in $(seq 1 "$RUNS"); do
   rm -rf "$OUT" spark-warehouse/pipe.db
   echo "== pipeline jobnet at $SF_DIR (run $i/$RUNS) =="
   START=$(date +%s.%N)
-  SPARK_MASTER="local[${SPARK_GRAFT_CPUS:-32}]" \
-  SPARK_SHUFFLE_PARTITIONS="${SPARK_GRAFT_CPUS:-32}" \
   tools/graft_java.sh graft.runner.JobNetMain --home=bench-home \
     -v sf_dir="$SF_DIR" -v unload_dir="$OUT" \
     -v queue_objects="$QUEUE_OBJECTS" -v stream_batch="$STREAM_BATCH" \

@@ -14,16 +14,6 @@
 set -e
 cd "$(dirname "$0")/.."
 
-# sweep stale scratch — liveness-guarded, see run_sf1_audit.sh for the
-# rationale (owner.pid beats mtime for >2h runs)
-for d in /tmp/graft_run_* /tmp/graft_stream_ckpt*; do
-  [ -d "$d" ] || continue
-  pid=$(cat "$d/owner.pid" 2>/dev/null || true)
-  if [ -n "$pid" ] && kill -0 "$pid" 2>/dev/null; then continue; fi
-  if [ -z "$pid" ] && [ -n "$(find "$d" -maxdepth 0 -mmin -120)" ]; then continue; fi
-  rm -rf "$d" 2>/dev/null || true
-done
-
 SUBSET=$(python3 - <<'EOF'
 import json
 d = json.load(open('/tmp/bench_sf1.json'))

@@ -25,22 +25,6 @@
 set -e
 cd "$(dirname "$0")/.."
 
-# Sweep scratch litter from pre-TempDirs rounds and from runs whose JVM
-# died before its shutdown hook (a fatal sf10 OOM leaves the graft_run_
-# root behind). The per-sf-dir caches (graft_bucketed__*, graft_cbo__*,
-# ...) are kept on purpose: they're bounded (one per sf dir) and reused.
-# Liveness, not mtime, decides: each graft_run_ root carries an
-# owner.pid (TempDirs) — a run alive longer than any mtime window (sf10
-# benches exceed 2h) must never have its scratch deleted mid-run.
-# Pidless dirs are pre-pidfile litter and keep the 2h mtime guard.
-for d in /tmp/graft_run_* /tmp/graft_stream_ckpt*; do
-  [ -d "$d" ] || continue
-  pid=$(cat "$d/owner.pid" 2>/dev/null || true)
-  if [ -n "$pid" ] && kill -0 "$pid" 2>/dev/null; then continue; fi
-  if [ -z "$pid" ] && [ -n "$(find "$d" -maxdepth 0 -mmin -120)" ]; then continue; fi
-  rm -rf "$d" 2>/dev/null || true
-done
-
 SF1_SKIPS="q_allpairs_jaccard"
 
 echo "== bench at sf1 (full suite, two-sweep min) =="

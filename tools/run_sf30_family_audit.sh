@@ -18,14 +18,6 @@ cd "$(dirname "$0")/.."
 
 QS="q_er_clusters,q_dup_triangles,q_minhash_recall,q_dedup_clusters,q_fuzzy_match,q_cluster_size_hist"
 
-for d in /tmp/graft_run_* /tmp/graft_stream_ckpt*; do
-  [ -d "$d" ] || continue
-  pid=$(cat "$d/owner.pid" 2>/dev/null || true)
-  if [ -n "$pid" ] && kill -0 "$pid" 2>/dev/null; then continue; fi
-  if [ -z "$pid" ] && [ -n "$(find "$d" -maxdepth 0 -mmin -120)" ]; then continue; fi
-  rm -rf "$d" 2>/dev/null || true
-done
-
 export SPARK_LOCAL_DIRS=/tmp/graft_spark_scratch
 rm -rf "$SPARK_LOCAL_DIRS"; mkdir -p "$SPARK_LOCAL_DIRS"
 

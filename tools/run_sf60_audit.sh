@@ -19,15 +19,6 @@ cd "$(dirname "$0")/.."
 
 QS="q_containment,q_dedup_keep_best"
 
-# liveness-guarded scratch sweep (same rationale as run_sf1_audit.sh)
-for d in /tmp/graft_run_* /tmp/graft_stream_ckpt*; do
-  [ -d "$d" ] || continue
-  pid=$(cat "$d/owner.pid" 2>/dev/null || true)
-  if [ -n "$pid" ] && kill -0 "$pid" 2>/dev/null; then continue; fi
-  if [ -z "$pid" ] && [ -n "$(find "$d" -maxdepth 0 -mmin -120)" ]; then continue; fi
-  rm -rf "$d" 2>/dev/null || true
-done
-
 export SPARK_LOCAL_DIRS=/tmp/graft_spark_scratch
 
 for SF in sf30 sf60; do
