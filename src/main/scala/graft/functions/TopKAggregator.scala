@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, posexplode, udaf}
 
 /** Bounded top-k as a typed Aggregator: each partition keeps at most k
   * (score, id) pairs, partials merge pairwise — so per-group top-k costs a
@@ -42,24 +43,33 @@ final class TopKAggregator(k: Int)
 }
 
 object TopKAggregator {
-  /** Typed column for `KeyValueGroupedDataset.agg`. */
-  def topK(k: Int): TypedColumn[(Double, Long), Seq[(Double, Long)]] =
-    new TopKAggregator(k).toColumn
-
-  /** The same aggregator as a DataFrame UDAF: `groupBy(col).agg(topKUdaf
-    * (k)(scoreCol, idCol))`. Identical semantics and output shape
-    * (array<struct<_1,_2>>), but the key stays a native column — the
-    * `groupByKey(_._1)` form plans an AppendColumns step that
-    * deserializes EVERY input row into a Scala tuple to run the key
-    * lambda, which at a 10^10-row scored-pair stream (the sf10
-    * pagerank edge build) is the dominant per-row cost, not the
-    * bounded heap itself. Only the aggregator's (score, id) input pays
-    * the encoder here; scan → aggregate stays whole-stage codegen.
+  /** Per-group top-k of `df` as rows: the `keys` columns, a 1-based `rk`
+    * (int), `score` and `id` — one row per kept item, ranked by
+    * (score DESC, id), i.e. `row_number() OVER (PARTITION BY keys ORDER
+    * BY score DESC, id) <= k`.
+    *
+    * The aggregator runs as a DataFrame UDAF so the key stays a native
+    * column: the typed `groupByKey(_._1)` form plans an AppendColumns
+    * step that deserializes EVERY input row into a Scala tuple to run
+    * the key lambda, which at a 10^10-row scored-pair stream (the sf10
+    * pagerank edge build) is the dominant per-row cost, not the bounded
+    * heap itself. Only the aggregator's (score, id) input pays the
+    * encoder here; scan → aggregate stays whole-stage codegen.
     */
-  def topKUdaf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(
-      new TopKAggregator(k),
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
+  def ranked(df: DataFrame, keys: Seq[String], k: Int, score: Column,
+      id: Column): DataFrame =
+    rankRows(df, keys, udaf(new TopKAggregator(k),
+      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))(score, id))
+
+  /** Groups `df` by `keys`, aggregates `top` and explodes it in buffer
+    * order: the aggregators keep their buffer sorted, so position + 1 is
+    * the rank.
+    */
+  private[functions] def rankRows(df: DataFrame, keys: Seq[String], top: Column): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(top.as("top"))
+      .select(keys.map(col) :+ posexplode(col("top")).as(Seq("pos", "item")): _*)
+      .select(keys.map(col) ++ Seq((col("pos") + 1).as("rk"),
+        col("item._1").as("score"), col("item._2").as("id")): _*)
 }
 
 /** Bounded SMALLEST-k by a string key — the ascending sibling of
@@ -101,19 +111,13 @@ final class MinKAggregator(k: Int)
 }
 
 object MinKAggregator {
-  /** Typed column for `KeyValueGroupedDataset.agg`. */
-  def minK(k: Int): TypedColumn[(String, Long), Seq[(String, Long)]] =
-    new MinKAggregator(k).toColumn
-
-  /** The same aggregator as a DataFrame UDAF — see
-    * [[TopKAggregator.topKUdaf]] for why: the `groupByKey(_._1)` form
-    * plans an AppendColumns step that deserializes EVERY input row into
-    * a Scala tuple just to run the key lambda; the UDAF form keeps the
-    * key a native column and only the (priority, id) input pays the
-    * encoder.
+  /** Per-group smallest-k of `df` as rows: the `keys` columns, a 1-based
+    * `rk` (int), `score` (the string key) and `id`, ranked by (key, id)
+    * — [[TopKAggregator.ranked]] in ascending order, with the same
+    * native-key UDAF plan.
     */
-  def minKUdaf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(
-      new MinKAggregator(k),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+  def ranked(df: DataFrame, keys: Seq[String], k: Int, key: Column,
+      id: Column): DataFrame =
+    TopKAggregator.rankRows(df, keys, udaf(new MinKAggregator(k),
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong))(key, id))
 }

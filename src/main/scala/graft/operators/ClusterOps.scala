@@ -38,8 +38,8 @@ object ClusterOps {
     * majority, filtered out before any iteration). Each round is one
     * key-equality shuffle of (id, label) pairs — never the corpus, never
     * doc × doc. `localCheckpoint` truncates the growing lineage each
-    * round (on a real cluster, `sparkContext.setCheckpointDir` + reliable
-    * checkpoint); the convergence probe is a scalar count, not a collect.
+    * round (see [[connectedComponents]] for its failure mode); the
+    * convergence probe is a scalar count, not a collect.
     *
     * Output: one row per duplicate cluster (representative = min doc_id,
     * member count, max member) — the "keep one, drop n-1" manifest.
@@ -49,12 +49,7 @@ object ClusterOps {
     // persisted: the self-join below reads it on BOTH branches — without
     // this the signature pass (explode + min-hash agg) runs twice
     val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
     val pairs = Dedup.verifyPairs(cand, grams, 0.8).select("doc_a", "doc_b")
     val labels = connectedComponents(pairs, maxIter)
     // blocking: the gram/band caches are the big allocations of this
@@ -71,6 +66,11 @@ object ClusterOps {
     * (doc_a, doc_b) → one (id, lbl) row per vertex with lbl = component
     * min. Exposed separately so the log-round convergence can be tested
     * on adversarial graphs (long chains) the LSH corpus never produces.
+    *
+    * Failure mode: each round's labels are a `localCheckpoint`, whose
+    * blocks live only in executor storage and cannot be recomputed (the
+    * lineage is cut). Losing an executor mid-loop therefore fails the
+    * query; the recovery is a rerun.
     */
   private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int,
       hops: Int = 1): DataFrame =
@@ -199,10 +199,6 @@ object ClusterOps {
       if (prevAgg != null)
         org.apache.spark.sql.graftbridge.GraftBridge.unpersistLocalCheckpoint(prevAgg)
       prevAgg = agg
-      if (sys.env.contains("GRAFT_CC_DEBUG")) {
-        val full = agg.filter(col("lbl") < col("old_lbl")).count()
-        println(s"CCDEBUG round=$it changed=$full")
-      }
       converged = changed == 0
       // pointer jumps: relabel through the label's own label, `hops`
       // times per round. Every lbl value is a node id (by induction from
@@ -370,12 +366,7 @@ object ClusterOps {
     val nDocs = graft.Tables.rowCount(s, dir, "documents")
     val grams = Dedup.gramsOf(docs).persist()
     val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
     val pairs = Dedup.verifyPairs(cand, grams, 0.8).select("doc_a", "doc_b")
     val labels = connectedComponents(pairs, maxIter)
     grams.unpersist(blocking = true)
@@ -584,7 +575,7 @@ object ClusterOps {
     * ((band_idx·31 + band_sig) mod 97 = 0 — arithmetic on the key, no
     * RNG, identical in both engines) is carried through the exact same
     * machinery the full query runs: band/bucket-count/subdivide
-    * ([[Dedup.simhashKeyedBands]]), the banded candidate self-join, the
+    * ([[Dedup.cappedBands]]), the banded candidate self-join, the
     * hamming ≤ 8 verify, and the TTR keep rule applied pairwise. Output
     * is one row per band: bucket/row counts of the stratum, candidate
     * and verified pair counts, how often the LEFT doc wins the keep rule
@@ -610,7 +601,8 @@ object ClusterOps {
     // queries — same discipline as simhashBandPairs). An unpersist here
     // would run eagerly while BUILDING the lazy plan, before the
     // returned DataFrame executes, and the cache would never be used.
-    val keyed = Dedup.simhashKeyedBands(sigs, Dedup.SimhashBucketCap)
+    val keyed = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
+        cap = Dedup.BandBucketCap)
       .filter((col("band_idx") * 31 + col("band_sig")) % 97 === 0)
       .persist()
     val perBand = keyed.groupBy("band_idx")
@@ -896,6 +888,10 @@ object ClusterOps {
     * round — with `localCheckpoint` truncating lineage per round exactly
     * like [[connectedComponents]]. Nothing driver-side but the node
     * count (one scalar action).
+    *
+    * Failure mode: as in [[connectedComponents]], losing an executor
+    * mid-loop fails the query, because local-checkpoint blocks cannot be
+    * recomputed. The recovery is a rerun.
     */
   def qPagerank(s: SparkSession, dir: String, iters: Int = 3, k: Int = 3): DataFrame = {
     graft.functions.VectorFunctions.register(s)
@@ -918,14 +914,9 @@ object ClusterOps {
         struct(col("id_b").as("src"), col("id_a").as("dst"), col("cos_sim").as("cos"))))
         .as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.cos").as("cos"))
-    // native-key UDAF form: the blocked scored-pair stream is the
-    // quadratic surface here, so the per-row cost of reaching the
-    // bounded heap is what scales — see TopKAggregator.topKUdaf
-    val edges = scored
-      .groupBy(col("src"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(k)(col("cos"), col("dst")).as("top"))
-      .select(col("src"), explode(col("top")).as("item"))
-      .select(col("src"), col("item._2").as("dst"))
+    val edges = graft.functions.TopKAggregator
+      .ranked(scored, Seq("src"), k, col("cos"), col("dst"))
+      .select(col("src"), col("id").as("dst"))
       .persist()
     val nodes = e.select(col("vec_id").as("id")).persist()
     // N is the unfiltered embeddings row count — a parquet-footer scalar
@@ -1024,7 +1015,10 @@ object ClusterOps {
     * occupancy — and with it the scored join's per-bucket pair surface —
     * stays constant as the corpus grows, exactly the multi-table
     * discipline the simhash/phash band caps apply; the oracle computes
-    * the same count from the data in SQL.
+    * the same count from the data in SQL. Each round's labels are a
+    * `localCheckpoint`: as in [[connectedComponents]], losing an
+    * executor mid-loop fails the query, because those blocks cannot be
+    * recomputed. The recovery is a rerun.
     */
   def qLabelProp(s: SparkSession, dir: String, rounds: Int = 2, k: Int = 5): DataFrame = {
     graft.functions.VectorFunctions.register(s)
@@ -1045,14 +1039,9 @@ object ClusterOps {
     val scored = a.join(b, Seq("bucket")).filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
         round(expr(Similarity.dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos"))
-    // native-key UDAF form: the blocked scored-pair stream is the
-    // quadratic surface here, so the per-row cost of reaching the
-    // bounded heap is what scales — see TopKAggregator.topKUdaf
-    val edges = scored
-      .groupBy(col("src"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(k)(col("cos"), col("dst")).as("top"))
-      .select(col("src"), explode(col("top")).as("item"))
-      .select(col("src"), col("item._2").as("dst"))
+    val edges = graft.functions.TopKAggregator
+      .ranked(scored, Seq("src"), k, col("cos"), col("dst"))
+      .select(col("src"), col("id").as("dst"))
       .persist()
     val nodes = e.select(col("vec_id").as("id"), col("label").as("true_lbl"))
       .persist()

@@ -472,15 +472,12 @@ object CorpusOps {
     * [[graft.operators.Relational.qWindowTopN]]).
     */
   def qReservoirSample(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    t(s, dir, "documents")
+    val docs = t(s, dir, "documents")
       .select(col("lang"), md5(encode(col("text"), "UTF-8")).as("priority"),
         col("doc_id"))
-      .groupBy(col("lang"))
-      .agg(graft.functions.MinKAggregator.minKUdaf(k)(
-        col("priority"), col("doc_id")).as("keep"))
-      .select(col("lang"), posexplode(col("keep")).as(Seq("pos", "item")))
-      .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
-        col("item._2").as("doc_id"))
+    graft.functions.MinKAggregator.ranked(docs, Seq("lang"), k,
+        col("priority"), col("doc_id"))
+      .select(col("lang"), col("rk"), col("id").as("doc_id"))
       .orderBy("lang", "rk")
   }
 
@@ -636,19 +633,16 @@ object CorpusOps {
     * at any corpus size.
     */
   def qWeightedSample(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    t(s, dir, "documents")
+    val docs = t(s, dir, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("w"),
         expr("conv(substring(md5(concat(cast(doc_id AS string), ':', text)), 1, 6), 16, 10)")
           .cast("long").as("h"))
       .select(col("lang"), col("doc_id"),
         lpad(expr("(h * 100000L) div w").cast("string"), 16, "0").as("priority"))
-      .groupBy(col("lang"))
-      .agg(graft.functions.MinKAggregator.minKUdaf(k)(
-        col("priority"), col("doc_id")).as("keep"))
-      .select(col("lang"), posexplode(col("keep")).as(Seq("pos", "item")))
-      .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
-        col("item._2").as("doc_id"))
+    graft.functions.MinKAggregator.ranked(docs, Seq("lang"), k,
+        col("priority"), col("doc_id"))
+      .select(col("lang"), col("rk"), col("id").as("doc_id"))
       .orderBy("lang", "rk")
   }
 

@@ -247,6 +247,25 @@ object Dedup {
       posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_sig"))): _*)
   }
 
+  /** Join key of a [[bandsOf]] frame; [[cappedBands]] frames add `sub`. */
+  private[operators] val BandKey = Seq("band_idx", "band_sig")
+
+  /** Distinct band-collision pairs of a band frame: rows equal on every
+    * `key` column pair up once, ordered `a.<id> < b.<id>`, however many
+    * bands they share. Output (doc_a, doc_b) plus `<c>_a`, `<c>_b` for
+    * each `carry` column. The band self-join is the only shuffle and
+    * only colliding rows meet — candidate generation never pairs the
+    * corpus with itself.
+    */
+  private[operators] def bandPairs(bands: DataFrame, key: Seq[String], id: String,
+      carry: String*): DataFrame =
+    bands.as("a").join(bands.as("b"),
+        key.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+      .select(Seq(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b")) ++
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+      .distinct()
+
   /** Exact-Jaccard verification of a candidate pair frame (doc_a, doc_b)
     * against a (doc_id, grams) frame → (doc_a, doc_b, jaccard ≥ minJ).
     *
@@ -366,14 +385,7 @@ object Dedup {
     // are the standard LSH "signature table" — ~1% the width of the corpus.
     val grams = gramsOf(t(s, dir, "documents")).persist()
     val bands = bandsOf(sigOf(grams)).persist()
-    val a = bands.as("a")
-    val b = bands.as("b")
-    val cand = a.join(b,
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = bandPairs(bands, BandKey, "doc_id")
     // NOTE the returned plan reads the persisted gram/band tables — the
     // caller owns their lifetime (Bench, Verify and Explain release it
     // between queries; a pipeline embedding this keeps the signature
@@ -465,7 +477,7 @@ object Dedup {
     * Scale shape vs MinHash: the signature pass is a narrow projection
     * (8 bytes per doc shuffles, never text); candidates come from a
     * key-equality self-join on (band_idx, band_sig, sub) where `sub` is
-    * the [[simhashKeyedBands]] hot-bucket subdivision (16-bit band keys
+    * the [[cappedBands]] hot-bucket subdivision (16-bit band keys
     * cap at 65,536 buckets, so without it per-bucket pair counts grow
     * quadratically with corpus size); verify needs NO
     * join back to token sets — the signature alone carries the distance
@@ -489,22 +501,24 @@ object Dedup {
       .orderBy("hamming")
   }
 
-  /** Band-bucket occupancy cap: buckets holding more rows than this get
-    * their join key extended by [[SimhashSubBits]] extra signature bits.
+  /** Band-bucket occupancy cap of the simhash and phash bands: buckets
+    * holding more rows than this get their join key extended by
+    * [[BandSubBits]] extra signature bits.
     */
-  val SimhashBucketCap = 32
+  val BandBucketCap = 32
   /** Extra key bits (from the NEXT band — the only bits that still vary
     * inside a bucket) used to subdivide hot buckets.
     */
-  val SimhashSubBits = 8
+  val BandSubBits = 8
 
-  /** Banded simhash rows with HOT-BUCKET SUBDIVISION — the 100 TB fix for
-    * the 16-bit band-key cardinality cap: 3 bands × 16 bits tops out at
-    * 65,536 buckets per band, so bucket occupancy grows linearly with
-    * corpus size and the banded self-join's per-bucket pair count grows
-    * quadratically. Discipline: count rows per (band_idx, band_sig); any
-    * bucket over [[SimhashBucketCap]] has its join key extended by
-    * [[SimhashSubBits]] bits of the next band (deterministic, so the
+  /** Banded signature rows with HOT-BUCKET SUBDIVISION — the 100 TB fix
+    * for the band-key cardinality cap. `hash` is cut into `bands` bands
+    * of `width` bits (simhash48: 3 × 16, tops out at 65,536 buckets per
+    * band; phash56: 4 × 14, 16,384), so bucket occupancy grows linearly
+    * with corpus size and the banded self-join's per-bucket pair count
+    * grows quadratically. Discipline: count rows per (band_idx,
+    * band_sig); any bucket over `cap` has its join key extended by
+    * [[BandSubBits]] bits of the next band (deterministic, so the
     * DuckDB oracle replays it bit-for-bit), cutting a hot bucket into up
     * to 256 bounded cells. Recall trade (documented, inherent): a pair in
     * a hot bucket differing inside those 8 bits is only found via its
@@ -514,43 +528,38 @@ object Dedup {
     * behavior. The counts join is bucket-cardinality-sized and AQE
     * size-chosen.
     *
-    * Output: one row per (doc, band) with the final join key
-    * (band_idx, band_sig, sub) plus the raw bucket_n for audit.
+    * Output: one row per (id, band) with `id`, `hash`, the final join
+    * key (band_idx, band_sig, sub) plus sub_key and the raw bucket_n for
+    * audit.
     */
-  private[operators] def simhashKeyedBands(sigs: DataFrame, cap: Int): DataFrame = {
-    val bands = sigs.select(col("doc_id"), col("sig"),
-        posexplode(array((0 until 3).map(m =>
-          shiftright(col("sig"), 16 * m).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("doc_id", "sig", "band_idx", "band_sig")
-      .withColumn("sub_key",
-        expr("shiftright(sig, CAST(((band_idx + 1) % 3) * 16 AS INT)) & 255"))
-    val counts = bands.groupBy("band_idx", "band_sig")
+  private[operators] def cappedBands(hashes: DataFrame, id: String, hash: String,
+      bands: Int, width: Int, cap: Int): DataFrame = {
+    val banded = hashes.select(col(id), col(hash),
+        posexplode(array((0 until bands).map(m =>
+          shiftright(col(hash), width * m).bitwiseAND(lit((1L << width) - 1))): _*))
+          .as(Seq("band_idx", "band_sig")))
+      .withColumn("sub_key", expr(s"shiftright($hash, " +
+        s"CAST(((band_idx + 1) % $bands) * $width AS INT)) & ${(1 << BandSubBits) - 1}"))
+    val counts = banded.groupBy("band_idx", "band_sig")
       .agg(count(lit(1)).as("bucket_n"))
-    bands.join(counts, Seq("band_idx", "band_sig"))
+    banded.join(counts, BandKey)
       .withColumn("sub",
         when(col("bucket_n") > cap, col("sub_key")).otherwise(lit(0L)))
   }
 
   /** Distinct simhash candidate pairs (doc_a, doc_b, sig_a, sig_b) via
-    * the capped/subdivided band join of [[simhashKeyedBands]]. Shared by
-    * [[qSimhashNearDup]], [[ClusterOps.qDedupKeepBest]], and
-    * [[StressOps.qStressHotBand]].
+    * the capped/subdivided band join of [[cappedBands]] over a
+    * (doc_id, sig) frame. Shared by [[qSimhashNearDup]],
+    * [[qDedupEnsemble]] and [[ClusterOps.qDedupKeepBest]].
     */
-  private[operators] def simhashBandPairs(
-      sigs: DataFrame, cap: Int = SimhashBucketCap): DataFrame = {
+  private[operators] def simhashBandPairs(sigs: DataFrame): DataFrame = {
     // persisted: the self-join reads the banded+counted frame twice, and
     // without the cache the band explode + bucket-count aggregate run
     // once per side (same discipline as qMinhashLsh's band table; the
     // caller owns cache lifetime, Bench/Verify clear between queries)
-    val keyed = simhashKeyedBands(sigs, cap).persist()
-    keyed.as("a").join(keyed.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.sub") === col("b.sub") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
+    val keyed = cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
+      cap = BandBucketCap).persist()
+    bandPairs(keyed, BandKey :+ "sub", "doc_id", "sig")
   }
 
   /** DuckDB CTE fragment replicating the 48-bit simhash signature pass:
@@ -579,7 +588,7 @@ object Dedup {
       |      (a, x) -> a + x) AS sig
       |  FROM ths)""".stripMargin
 
-  /** DuckDB CTE fragment replicating [[simhashKeyedBands]] +
+  /** DuckDB CTE fragment replicating [[cappedBands]] (3 × 16 bits) +
     * [[simhashBandPairs]]: reads a CTE named `sigs(doc_id, sig)`, defines
     * `bands`, `counts`, `keyed`, and `cand(doc_a, doc_b, sig_a, sig_b)`.
     */
@@ -594,7 +603,7 @@ object Dedup {
       |  FROM bands GROUP BY 1, 2),
       |keyed AS (
       |  SELECT b.*, c.bucket_n,
-      |    CASE WHEN c.bucket_n > $SimhashBucketCap THEN b.sub_key ELSE CAST(0 AS BIGINT) END AS sub
+      |    CASE WHEN c.bucket_n > $BandBucketCap THEN b.sub_key ELSE CAST(0 AS BIGINT) END AS sub
       |  FROM bands b JOIN counts c USING (band_idx, band_sig)),
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -633,12 +642,7 @@ object Dedup {
     graft.functions.VectorFunctions.register(s)
     val grams = gramsOf(t(s, dir, "documents")).persist()
     val bands = bandsOf(sigOf(grams)).persist()
-    val mhCand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val mhCand = bandPairs(bands, BandKey, "doc_id")
     val mh = verifyPairs(mhCand, grams, 0.8)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("mh"))
     val sigs = t(s, dir, "documents")
@@ -863,12 +867,7 @@ object Dedup {
   def qJaccardCurve(s: SparkSession, dir: String): DataFrame = {
     val grams = gramsOf(t(s, dir, "documents")).persist()
     val bands = bandsOf(sigOf(grams)).persist()
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = bandPairs(bands, BandKey, "doc_id")
     verifyPairs(cand, grams, 0.5)
       .withColumn("bin20", floor(col("jaccard") * 20).cast("long"))
       .groupBy("bin20").agg(count(lit(1)).as("n_pairs"))

@@ -296,28 +296,6 @@ object Multimodal {
     grids.select(col("asset_id"), expr("dhash56(px)").as("phash"))
   }
 
-  /** Banded (asset_id, phash) rows with HOT-BUCKET SUBDIVISION — the
-    * [[Dedup.simhashKeyedBands]] discipline on media signatures: a
-    * 14-bit band key caps at 16,384 buckets, so any bucket over `cap`
-    * gets its join key extended by 8 bits of the NEXT band — bounded
-    * per-bucket pair work as the asset corpus outgrows the key space;
-    * cold buckets keep exact-banding behavior. Shared by
-    * [[qPhashNearDup]] and [[StressOps.qStressHotPhash]].
-    */
-  private[operators] def phashKeyedBands(hashes: DataFrame, cap: Int = 32): DataFrame = {
-    val bands = hashes.select(col("asset_id"), col("phash"),
-      posexplode(array((0 until 4).map(m =>
-        expr(s"shiftright(phash, ${14 * m}) & CAST(16383 AS BIGINT)")): _*))
-        .as(Seq("band_idx", "band_sig")))
-      .withColumn("sub_key",
-        expr("shiftright(phash, CAST(((band_idx + 1) % 4) * 14 AS INT)) & 255"))
-    val counts = bands.groupBy("band_idx", "band_sig")
-      .agg(count(lit(1)).as("bucket_n"))
-    bands.join(counts, Seq("band_idx", "band_sig"))
-      .withColumn("sub",
-        when(col("bucket_n") > cap, col("sub_key")).otherwise(lit(0L)))
-  }
-
   def qPhashNearDup(s: SparkSession, dir: String): DataFrame = {
     val base = pixelGrids(s, dir)
     // +1-brightness twin of every sampled grid (ascii bodies top out well
@@ -329,17 +307,11 @@ object Multimodal {
     val hashes = phashOf(base.unionByName(brightened))
       .persist() // both sides of the band self-join read it; caller
                  // (Bench/Verify) owns cache lifetime, like qCmsHeavyHitters
-    val keyed = phashKeyedBands(hashes)
-    keyed.as("a").join(keyed.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.sub") === col("b.sub") &&
-        col("a.asset_id") < col("b.asset_id"))
-      .select(col("a.asset_id").as("asset_a"), col("b.asset_id").as("asset_b"),
-        col("a.phash").as("ha"), col("b.phash").as("hb"))
-      .distinct()
-      .select(col("asset_a"), col("asset_b"),
-        expr("CAST(bit_count(ha ^ hb) AS BIGINT)").as("hamming"))
+    val keyed = Dedup.cappedBands(hashes, "asset_id", "phash", bands = 4, width = 14,
+      cap = Dedup.BandBucketCap)
+    Dedup.bandPairs(keyed, Dedup.BandKey :+ "sub", "asset_id", "phash")
+      .select(col("doc_a").as("asset_a"), col("doc_b").as("asset_b"),
+        expr("CAST(bit_count(phash_a ^ phash_b) AS BIGINT)").as("hamming"))
       .filter(col("hamming") <= 6)
       .orderBy("asset_a", "asset_b")
   }

@@ -215,13 +215,10 @@ object Relational {
     * Window/Sort. Top-2 orders per customer by price.
     */
   def qGroupedTopK(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(2)(
-        col("o_totalprice"), col("o_orderkey")).as("top"))
-      .select(col("o_custkey"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("o_custkey"), col("item._2").as("o_orderkey"),
-        col("item._1").as("o_totalprice"), (col("pos") + 1).cast("long").as("rn"))
+    graft.functions.TopKAggregator.ranked(t(s, dir, "orders"), Seq("o_custkey"), 2,
+        col("o_totalprice"), col("o_orderkey"))
+      .select(col("o_custkey"), col("id").as("o_orderkey"),
+        col("score").as("o_totalprice"), col("rk").cast("long").as("rn"))
       .orderBy("o_custkey", "rn")
   }
 

@@ -156,16 +156,14 @@ object ScaleOps {
         (col("cx") + col("dx")).as("kx"), (col("cy") + col("dy")).as("ky"))
     val cand = p.select(col("id").as("id_b"), col("xi").as("xb"),
       col("yi").as("yb"), col("cx").as("kx"), col("cy").as("ky"))
-    probes.join(cand, Seq("kx", "ky"))
+    val near = probes.join(cand, Seq("kx", "ky"))
       .filter(col("id_a") =!= col("id_b"))
       .withColumn("d2", expr("(xa-xb)*(xa-xb) + (ya-yb)*(ya-yb)"))
       .filter(col("d2") < r2)
-      .groupBy(col("id_a"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(3)(
-        (-col("d2")).cast("double"), col("id_b")).as("top"))
-      .select(col("id_a"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("id_a"), (col("pos") + 1).cast("long").as("rk"),
-        col("item._2").as("id_b"), (-col("item._1")).cast("long").as("d2"))
+    graft.functions.TopKAggregator.ranked(near, Seq("id_a"), 3,
+        (-col("d2")).cast("double"), col("id_b"))
+      .select(col("id_a"), col("rk").cast("long").as("rk"),
+        col("id").as("id_b"), (-col("score")).cast("long").as("d2"))
       .orderBy("id_a", "rk")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.Tables.t
+import graft.functions.TopKAggregator
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, dim 64).
   *
@@ -50,16 +51,9 @@ object Similarity {
     // partition) instead of every scored row — the 100 TB shape (a window
     // row_number would shuffle + sort the full scored set). Tie-breaks
     // match row_number() OVER (ORDER BY cos_sim DESC, vec_id).
-    // Native-key UDAF form, not groupByKey: the typed form deserializes
-    // every scored row into a tuple just to run the key lambda — see
-    // TopKAggregator.topKUdaf.
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(10)(
-        col("cos_sim"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("query_id"), col("item._2").as("vec_id"),
-        col("item._1").as("cos_sim"), (col("pos") + 1).cast("long").as("rk"))
+    TopKAggregator.ranked(scored, Seq("query_id"), 10, col("cos_sim"), col("vec_id"))
+      .select(col("query_id"), col("id").as("vec_id"),
+        col("score").as("cos_sim"), col("rk").cast("long").as("rk"))
       .orderBy("query_id", "rk")
   }
 
@@ -320,6 +314,34 @@ object Similarity {
       |SELECT label, id_a, id_b, cos_sim FROM scored WHERE cos_sim >= 0.3
       |ORDER BY id_a, id_b""".stripMargin
 
+  /** The ANN-eval harness of [[qAnnRecall]], [[qMultiprobeRecall]] and
+    * [[qNdcgEval]]: the 3-row query set `q` (query_id, qv, qnrm,
+    * qbucket), the `corpus` (vec_id >= 3, with its 8-plane bucket), the
+    * rounded-cosine scorer and the bounded top-10 ranking, so every arm
+    * of every eval scores and ranks exactly like the oracle.
+    */
+  private final class AnnEval(s: SparkSession, dir: String) {
+    graft.functions.VectorFunctions.register(s)
+    private val e = t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
+        hyperplaneBucket.as("bucket"))
+    val q: DataFrame = e.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("nrm").as("qnrm"), col("bucket").as("qbucket"))
+    val corpus: DataFrame = e.filter(col("vec_id") >= 3)
+    /** (query_id, vec_id, cos_sim) of each (query, corpus) row of `df`. */
+    def score(df: DataFrame): DataFrame =
+      df.select(col("query_id"), col("vec_id"),
+        round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
+    /** Per-query top-10 (query_id, rk, score, id) by (cos_sim DESC, vec_id). */
+    def top10(scored: DataFrame): DataFrame =
+      TopKAggregator.ranked(scored, Seq("query_id"), 10, col("cos_sim"), col("vec_id"))
+    /** The exact top-10: every corpus row scored against every query. */
+    def exact: DataFrame = top10(score(corpus.crossJoin(broadcast(q))))
+    /** Single-probe candidates: corpus rows in the query's own bucket. */
+    def bucketCand: DataFrame = corpus.join(broadcast(q), col("bucket") === col("qbucket"))
+  }
+
   /** ANN quality measurement — recall@10 of the hyperplane-bucket search
     * against exact brute force, per query: the standard eval every
     * approximate index ships with, and the number that decides whether
@@ -335,31 +357,12 @@ object Similarity {
     * recall join is over 10-row-per-query frames.
     */
   def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
-        hyperplaneBucket.as("bucket"))
-    val q = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    val corpus = e.filter(col("vec_id") >= 3)
-    def score(df: DataFrame): DataFrame =
-      df.select(col("query_id"), col("vec_id"),
-        round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
-    def top10(scored: DataFrame): DataFrame =
-      scored
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAggregator.topKUdaf(10)(
-          col("cos_sim"), col("vec_id")).as("top"))
-        .select(col("query_id"), explode(col("top")).as("item"))
-        .select(col("query_id"), col("item._2").as("vec_id"))
-    val exact = top10(score(corpus.crossJoin(broadcast(q))))
-    val cand = corpus.join(broadcast(q), col("bucket") === col("qbucket"))
-    val ann = top10(score(cand))
+    val ev = new AnnEval(s, dir)
+    val cand = ev.bucketCand
     val nCand = cand.groupBy("query_id").agg(count(lit(1)).as("n_candidates"))
-    val hits = exact.join(ann, Seq("query_id", "vec_id"), "left_semi")
+    val hits = ev.exact.join(ev.top10(ev.score(cand)), Seq("query_id", "id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    q.select("query_id")
+    ev.q.select("query_id")
       .join(nCand, Seq("query_id"), "left")
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"),
@@ -431,46 +434,29 @@ object Similarity {
     * and hit join are [[qAnnRecall]] verbatim.
     */
   def qMultiprobeRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
-        hyperplaneBucket.as("bucket"))
-    val q = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    val corpus = e.filter(col("vec_id") >= 3)
-    def score(df: DataFrame): DataFrame =
-      df.select(col("query_id"), col("vec_id"),
-        round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
-    def top10(scored: DataFrame): DataFrame =
-      scored
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAggregator.topKUdaf(10)(
-          col("cos_sim"), col("vec_id")).as("top"))
-        .select(col("query_id"), explode(col("top")).as("item"))
-        .select(col("query_id"), col("item._2").as("vec_id"))
-    val exact = top10(score(corpus.crossJoin(broadcast(q)))).persist()
+    val ev = new AnnEval(s, dir)
+    val exact = ev.exact.select("query_id", "id").persist()
     // probe frame: the query's bucket plus each single-bit flip (p = 8
     // keeps the original bucket; p < 8 flips plane p's sign bit)
-    val probes = q.select(col("query_id"), col("qv"), col("qnrm"),
+    val probes = ev.q.select(col("query_id"), col("qv"), col("qnrm"),
       explode(expr(
         "transform(sequence(0, 8), p -> CASE WHEN p = 8 THEN qbucket " +
           "ELSE CAST(qbucket ^ shiftleft(CAST(1 AS BIGINT), p) AS BIGINT) END)"))
         .as("probe"))
     def arm(cand: DataFrame, pfx: String): DataFrame = {
-      val scored = score(cand).distinct()
+      val scored = ev.score(cand).distinct()
       val n = scored.groupBy("query_id").agg(count(lit(1)).as(s"n_cand_$pfx"))
       val hits = exact
-        .join(top10(scored), Seq("query_id", "vec_id"), "left_semi")
+        .join(ev.top10(scored), Seq("query_id", "id"), "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as(s"n_hits_$pfx"))
       n.join(hits, Seq("query_id"), "left")
         .select(col("query_id"), col(s"n_cand_$pfx"),
           round(coalesce(col(s"n_hits_$pfx"), lit(0L)) / 10.0, 4)
             .as(s"recall_$pfx"))
     }
-    val single = arm(corpus.join(broadcast(q), col("bucket") === col("qbucket")), "single")
-    val multi = arm(corpus.join(broadcast(probes), col("bucket") === col("probe")), "multi")
-    q.select("query_id")
+    val single = arm(ev.bucketCand, "single")
+    val multi = arm(ev.corpus.join(broadcast(probes), col("bucket") === col("probe")), "multi")
+    ev.q.select("query_id")
       .join(single, Seq("query_id"), "left")
       .join(multi, Seq("query_id"), "left")
       .select(col("query_id"),
@@ -572,33 +558,14 @@ object Similarity {
     * 10-row-per-query frames.
     */
   def qNdcgEval(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    val e = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
-        hyperplaneBucket.as("bucket"))
-    val q = e.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    val corpus = e.filter(col("vec_id") >= 3)
-    def score(df: DataFrame): DataFrame =
-      df.select(col("query_id"), col("vec_id"),
-        round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
-    // bounded top-10 with (cos DESC, vec_id) ranks — posexplode order IS
-    // the aggregator's sort order, so rank = position + 1
-    def top10(scored: DataFrame): DataFrame =
-      scored
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAggregator.topKUdaf(10)(
-          col("cos_sim"), col("vec_id")).as("top"))
-        .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "item")))
-        .select(col("query_id"), col("item._2").as("vec_id"),
-          col("item._1").as("gain"), (col("pos") + 1).cast("double").as("rk"))
+    val ev = new AnnEval(s, dir)
+    // gain = the ranked cosine, discounted by log2(rank + 1)
     def dcg(ranked: DataFrame, out: String): DataFrame =
       ranked.groupBy("query_id").agg(
-        sum(greatest(col("gain"), lit(0.0)) / log2(col("rk") + 1.0)).as(out))
-    val ideal = dcg(top10(score(corpus.crossJoin(broadcast(q)))), "idcg")
-    val ann = dcg(top10(score(
-      corpus.join(broadcast(q), col("bucket") === col("qbucket")))), "dcg")
+        sum(greatest(col("score"), lit(0.0)) / log2(col("rk").cast("double") + 1.0))
+          .as(out))
+    val ideal = dcg(ev.exact, "idcg")
+    val ann = dcg(ev.top10(ev.score(ev.bucketCand)), "dcg")
     ideal.join(ann, Seq("query_id"), "left")
       .select(col("query_id"),
         round(coalesce(col("dcg"), lit(0.0)), 4).as("dcg4"),
@@ -777,14 +744,10 @@ object Similarity {
       .join(broadcast(dt), Seq("m", "code"))
       .groupBy("query_id", "vec_id")
       .agg(sum("qd2i").as("d2i"))
-    adc
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(5)(
-        (-col("d2i")).cast("double"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("query_id"), col("item._2").as("vec_id"),
-        (-col("item._1")).cast("long").as("d2i"),
-        (col("pos") + 1).cast("long").as("rk"))
+    TopKAggregator.ranked(adc, Seq("query_id"), 5,
+        (-col("d2i")).cast("double"), col("vec_id"))
+      .select(col("query_id"), col("id").as("vec_id"),
+        (-col("score")).cast("long").as("d2i"), col("rk").cast("long").as("rk"))
       .orderBy("query_id", "rk")
   }
 
@@ -857,14 +820,10 @@ object Similarity {
       .join(broadcast(dt), Seq("query_id", "m", "code"))
       .groupBy("query_id", "vec_id")
       .agg(sum("qd2i").as("d2i"))
-    adc
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(k)(
-        (-col("d2i")).cast("double"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("query_id"), col("item._2").as("vec_id"),
-        (-col("item._1")).cast("long").as("d2i"),
-        (col("pos") + 1).cast("long").as("rk"))
+    TopKAggregator.ranked(adc, Seq("query_id"), k,
+        (-col("d2i")).cast("double"), col("vec_id"))
+      .select(col("query_id"), col("id").as("vec_id"),
+        (-col("score")).cast("long").as("d2i"), col("rk").cast("long").as("rk"))
       .orderBy("query_id", "rk")
   }
 
@@ -1081,13 +1040,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(k)(
-        col("cos_sim"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "item")))
-      .select(col("query_id"), col("item._2").as("vec_id"),
-        col("item._1").as("cos_sim"), (col("pos") + 1).cast("long").as("rk"))
+    TopKAggregator.ranked(scored, Seq("query_id"), k, col("cos_sim"), col("vec_id"))
+      .select(col("query_id"), col("id").as("vec_id"),
+        col("score").as("cos_sim"), col("rk").cast("long").as("rk"))
       .orderBy("query_id", "rk")
   }
 
@@ -1335,14 +1290,10 @@ object Similarity {
         // `ORDER BY cos_sim DESC, vec_id`.
         (col("vec_id") * 100000L + col("label")).as("packed"),
         round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim"))
-    scored
-      .groupBy(col("query_id"), col("true_label"))
-      .agg(graft.functions.TopKAggregator.topKUdaf(5)(
-        col("cos_sim"), col("packed")).as("top"))
-      .select(col("query_id"), col("true_label"),
-        explode(col("top")).as("item"))
+    TopKAggregator.ranked(scored, Seq("query_id", "true_label"), 5,
+        col("cos_sim"), col("packed"))
       .select(col("query_id"), col("true_label").cast("long").as("true_label"),
-        pmod(col("item._2"), lit(100000L)).cast("long").as("nbr_label"))
+        pmod(col("id"), lit(100000L)).cast("long").as("nbr_label"))
       .groupBy("query_id", "true_label", "nbr_label")
       .agg(count(lit(1)).as("n_votes"))
       .withColumn("vr", row_number().over(
@@ -1438,19 +1389,14 @@ object Similarity {
         col("nrm16").as("qnrm16"))
     val corpus = e.filter(col("vec_id") >= 3)
     val joined = corpus.crossJoin(broadcast(q))
-    def top10(scored: DataFrame): DataFrame =
-      scored
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAggregator.topKUdaf(10)(
-          col("cos_sim"), col("vec_id")).as("top"))
-        .select(col("query_id"), explode(col("top")).as("item"))
-        .select(col("query_id"), col("item._2").as("vec_id"))
-    val full = top10(joined.select(col("query_id"), col("vec_id"),
-      round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4).as("cos_sim")))
-    val trunc = top10(joined.select(col("query_id"), col("vec_id"),
-      round(expr("vec_dot(qv16, emb16)") / (col("qnrm16") * col("nrm16")), 4)
-        .as("cos_sim")))
-    val hits = full.join(trunc, Seq("query_id", "vec_id"), "left_semi")
+    def top10(cos: Column): DataFrame =
+      TopKAggregator.ranked(
+        joined.select(col("query_id"), col("vec_id"), cos.as("cos_sim")),
+        Seq("query_id"), 10, col("cos_sim"), col("vec_id"))
+    val full = top10(round(expr(dotExpr) / (col("qnrm") * col("nrm")), 4))
+    val trunc = top10(
+      round(expr("vec_dot(qv16, emb16)") / (col("qnrm16") * col("nrm16")), 4))
+    val hits = full.join(trunc, Seq("query_id", "id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
     q.select("query_id")
       .join(hits, Seq("query_id"), "left")
@@ -1517,12 +1463,7 @@ object Similarity {
     graft.functions.VectorFunctions.register(s)
     val grams = Dedup.gramsOf(t(s, dir, "documents")).persist()
     val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
     val pairs = Dedup.verifyPairs(cand, grams, 0.8)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))

@@ -44,18 +44,7 @@ object StreamOps {
     val key = "spark.sql.shuffle.partitions"
     val saved = s.conf.get(key)
     s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "2"))
-    // sweepable state-store provider (unset = Spark's HDFS-backed default;
-    // qStreamTokenBudget pins RocksDB regardless — the v2 state API needs it)
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val pSaved = s.conf.getOption(pKey)
-    sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").foreach(s.conf.set(pKey, _))
-    try body finally {
-      s.conf.set(key, saved)
-      if (sys.env.contains("SPARK_GRAFT_STREAM_STATESTORE")) pSaved match {
-        case Some(v) => s.conf.set(pKey, v)
-        case None => s.conf.unset(pKey)
-      }
-    }
+    try body finally s.conf.set(key, saved)
   }
 
   /** File-stream source for `<dir>/<name>.parquet` in BOTH testdata

@@ -275,7 +275,7 @@ object StressOps {
     * document's low 16 signature bits are forced to zero, so one band-0
     * bucket holds 25% of the corpus — the adversarial version of what
     * 16-bit band keys do to ANY corpus at scale (65,536 buckets cannot
-    * stay sparse past ~10⁶ docs). [[Dedup.simhashKeyedBands]] must
+    * stay sparse past ~10⁶ docs). [[Dedup.cappedBands]] must
     * subdivide that bucket by extra signature bits; the output is the
     * per-band bucket audit — raw max occupancy vs subdivided max
     * occupancy — proving the candidate stage's per-bucket work stays
@@ -288,7 +288,8 @@ object StressOps {
     val sigs = t(s, dir, "documents").select(col("doc_id"),
         expr("CASE WHEN doc_id % 4 = 0 THEN simhash48(text) & -65536 ELSE simhash48(text) END").as("sig"))
       .persist() // the band pass + counts join read it twice; caller clears
-    val keyed = Dedup.simhashKeyedBands(sigs, Dedup.SimhashBucketCap)
+    val keyed = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
+      cap = Dedup.BandBucketCap)
     keyed.groupBy("band_idx", "band_sig", "sub")
       .agg(count(lit(1)).as("sub_n"), max("bucket_n").as("bucket_n"))
       .groupBy(col("band_idx").cast("long").as("band_idx"))
@@ -329,7 +330,8 @@ object StressOps {
         expr("CASE WHEN asset_id % 4 = 0 THEN phash & -16384 ELSE phash END")
           .as("phash"))
       .persist() // band pass + counts join read it twice; caller clears
-    Multimodal.phashKeyedBands(sigs)
+    Dedup.cappedBands(sigs, "asset_id", "phash", bands = 4, width = 14,
+        cap = Dedup.BandBucketCap)
       .groupBy("band_idx", "band_sig", "sub")
       .agg(count(lit(1)).as("sub_n"), max("bucket_n").as("bucket_n"))
       .groupBy(col("band_idx").cast("long").as("band_idx"))

@@ -638,7 +638,7 @@ object TextOps {
     * into one block) — both sides filter them out explicitly.
     */
   /** Hot blocks get their join key EXTENDED by the next two words — the
-    * [[graft.operators.Dedup.simhashKeyedBands]] subdivision idiom
+    * [[graft.operators.Dedup.cappedBands]] subdivision idiom
     * applied to record-linkage blocking. On natural (Zipf) text the
     * two-word-prefix block degenerates at scale: the head block ("the
     * the"-style) holds a constant FRACTION of the corpus, so its pair

@@ -50,24 +50,40 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val rows = (1 to 500).map { i =>
       (s"g${i % 7}", (i % 13).toDouble, i.toLong) // deliberate score ties
     }
-    val df = rows.toDF("grp", "score", "id")
+    val df = rows.toDF("grp", "val", "key")
 
     val expected = df
       .withColumn("rk", row_number().over(
-        Window.partitionBy("grp").orderBy(desc("score"), col("id"))))
+        Window.partitionBy("grp").orderBy(desc("val"), col("key"))))
       .filter(col("rk") <= 3)
-      .select("grp", "score", "id")
-      .as[(String, Double, Long)].collect().toSet
+      .select("grp", "rk", "val", "key")
+      .as[(String, Int, Double, Long)].collect().toSet
 
-    val got = df.as[(String, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(TopKAggregator.topK(3))
-      .collect()
-      .flatMap { case (g, items) => items.map(it => (g, it._1, it._2)) }
-      .toSet
+    val got = TopKAggregator.ranked(df, Seq("grp"), 3, col("val"), col("key"))
+      .select("grp", "rk", "score", "id")
+      .as[(String, Int, Double, Long)].collect().toSet
 
     assert(got == expected)
+  }
+
+  test("ranked: rk is 1-based in order, score ties go to the smaller id") {
+    import spark.implicits._
+    val df = Seq(("a", 1.0, 5L), ("a", 2.0, 9L), ("a", 2.0, 3L), ("a", 0.5, 1L),
+      ("b", 7.0, 4L), ("b", 7.0, 2L)).toDF("grp", "val", "key")
+    val got = TopKAggregator.ranked(df, Seq("grp"), 3, col("val"), col("key"))
+      .orderBy("grp", "rk").as[(String, Int, Double, Long)].collect().toSeq
+    assert(got == Seq(("a", 1, 2.0, 3L), ("a", 2, 2.0, 9L), ("a", 3, 1.0, 5L),
+      ("b", 1, 7.0, 2L), ("b", 2, 7.0, 4L)))
+  }
+
+  test("MinKAggregator.ranked: rk is 1-based ascending, key ties go to the smaller id") {
+    import spark.implicits._
+    val df = Seq(("a", "m", 5L), ("a", "c", 9L), ("a", "c", 3L), ("a", "z", 1L),
+      ("b", "q", 4L), ("b", "q", 2L)).toDF("grp", "pri", "key")
+    val got = MinKAggregator.ranked(df, Seq("grp"), 3, col("pri"), col("key"))
+      .orderBy("grp", "rk").as[(String, Int, String, Long)].collect().toSeq
+    assert(got == Seq(("a", 1, "c", 3L), ("a", 2, "c", 9L), ("a", 3, "m", 5L),
+      ("b", 1, "q", 2L), ("b", 2, "q", 4L)))
   }
 
   test("reduce keeps the buffer bounded at k") {

@@ -385,7 +385,7 @@ class DedupSpec extends AnyFunSuite {
     val cold = (100L until 120L).map(i => (i, 0x2222L | (i << 16) | (i << 32)))
     val sigs = (hot ++ cold).toDF("doc_id", "sig")
     val cap = 32
-    val keyed = Dedup.simhashKeyedBands(sigs, cap)
+    val keyed = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16, cap)
       .select("doc_id", "band_idx", "band_sig", "bucket_n", "sub").collect()
 
     // cold rows (bucket_n <= cap) must keep sub = 0 — exact banding
@@ -400,12 +400,53 @@ class DedupSpec extends AnyFunSuite {
 
     // subdivision can only REMOVE candidate pairs relative to plain
     // banding (it refines the join key) — the recall trade is one-sided
-    def pairSet(cap: Int) = Dedup.simhashBandPairs(sigs, cap)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    def pairSet(cap: Int) = Dedup.bandPairs(
+        Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16, cap),
+        Dedup.BandKey :+ "sub", "doc_id")
+      .as[(Long, Long)].collect().toSet
     val subdivided = pairSet(cap)
     val plain = pairSet(Int.MaxValue)
     assert(subdivided.subsetOf(plain),
       "subdivided candidates must be a subset of plain banding")
+  }
+
+  test("bandPairs: one row per pair however many bands collide, oriented a < b") {
+    import spark.implicits._
+    // docs 7 and 3 collide in bands 0 AND 1; 5 collides with 3 in band 2
+    // only; 9 collides with nobody. Rows are listed out of id order.
+    val bands = Seq(
+      (7L, 0, "x", 70L), (7L, 1, "y", 70L), (7L, 2, "p", 70L),
+      (3L, 0, "x", 30L), (3L, 1, "y", 30L), (3L, 2, "q", 30L),
+      (5L, 0, "u", 50L), (5L, 1, "v", 50L), (5L, 2, "q", 50L),
+      (9L, 0, "w", 90L), (9L, 1, "z", 90L), (9L, 2, "r", 90L))
+      .toDF("doc_id", "band_idx", "band_sig", "sig")
+    val pairs = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id", "sig")
+    assert(pairs.columns.toSeq == Seq("doc_a", "doc_b", "sig_a", "sig_b"))
+    val got = pairs.as[(Long, Long, Long, Long)].collect().toSeq.sorted
+    assert(got == Seq((3L, 5L, 30L, 50L), (3L, 7L, 30L, 70L)),
+      "each colliding pair comes out once, smaller id as doc_a, carry columns follow")
+  }
+
+  test("cappedBands: a bucket over the cap splits on sub, and bandPairs keys on it") {
+    import spark.implicits._
+    // 3 docs share band 0's low 16 bits; their band-1 low 8 bits (the
+    // sub key) are 1, 1, 2. Each band-1/band-2 value is unique.
+    val sigs = Seq((1L, 0x1111L | (0x101L << 16) | (1L << 32)),
+      (2L, 0x1111L | (0x201L << 16) | (2L << 32)),
+      (3L, 0x1111L | (0x302L << 16) | (3L << 32))).toDF("doc_id", "sig")
+    def pairs(cap: Int) = Dedup.bandPairs(
+        Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16, cap),
+        Dedup.BandKey :+ "sub", "doc_id")
+      .as[(Long, Long)].collect().toSet
+    val band0 = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16, cap = 2)
+      .filter($"band_idx" === 0).select("doc_id", "bucket_n", "sub")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(band0 == Set((1L, 3L, 1L), (2L, 3L, 1L), (3L, 3L, 2L)),
+      "the over-cap bucket must carry the next band's low bits as sub")
+    assert(pairs(cap = 3) == Set((1L, 2L), (1L, 3L), (2L, 3L)),
+      "at the cap the bucket stays whole")
+    assert(pairs(cap = 2) == Set((1L, 2L)),
+      "over the cap only docs with equal sub still pair")
   }
 
   /** Deterministic planted-pair corpus: `nPairs` base docs of
@@ -456,16 +497,9 @@ class DedupSpec extends AnyFunSuite {
 
   private def minhashPlantedRecall(docs: org.apache.spark.sql.DataFrame,
       nPairs: Int): Double = {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val grams = Dedup.gramsOf(docs).persist()
-    val bands = Dedup.bandsOf(Dedup.sigOf(grams))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = Dedup.bandPairs(Dedup.bandsOf(Dedup.sigOf(grams)), Dedup.BandKey, "doc_id")
     val pairs = Dedup.verifyPairs(cand, grams, 0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     grams.unpersist()

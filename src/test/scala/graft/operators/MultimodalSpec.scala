@@ -125,7 +125,7 @@ class MultimodalSpec extends AnyFunSuite {
       (i, 0x222L | (i << 14) | (i << 28) | (i << 42)))
     val hashes = (hot ++ cold).toDF("asset_id", "phash")
     val cap = 32
-    val keyed = Multimodal.phashKeyedBands(hashes, cap)
+    val keyed = Dedup.cappedBands(hashes, "asset_id", "phash", bands = 4, width = 14, cap)
       .select("asset_id", "band_idx", "band_sig", "bucket_n", "sub").collect()
     assert(keyed.filter(r => r.getLong(3) <= cap).forall(_.getLong(4) == 0L),
       "cold buckets must pass through unsubdivided")

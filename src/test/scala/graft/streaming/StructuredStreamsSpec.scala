@@ -468,12 +468,10 @@ class StructuredStreamsSpec extends AnyFunSuite {
       .select(col("lang"), explode(col("keep")).as("item"))
       .select(col("lang"), col("item._2").as("doc_id"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    import spark.implicits._
-    val batch = docs.as[(String, String, Long)]
-      .groupByKey(_._1).mapValues(r => (r._2, r._3))
-      .agg(graft.functions.MinKAggregator.minK(7))
-      .collect().flatMap { case (lang, keep) => keep.map(p => (lang, p._2)) }
-      .toSet
+    val batch = graft.functions.MinKAggregator
+      .ranked(docs, Seq("lang"), 7, col("priority"), col("doc_id"))
+      .select("lang", "id")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == batch,
       "streamed min-k sample diverged from the batch fold under shard reversal")
   }
