@@ -303,7 +303,7 @@ object LoadJobClass extends JobClass("load") {
           case None => throw new JobError(s"load: table ${dest} does not exist and no table-def")
         }
       }
-      LoadOptions.withRead(ds.spark, path, p.string("format"),
+      LoadOptions.withRead(ds.spark, Seq(path), p.string("format"),
         p.pairs("options"), ds.table(dest).schema) { df =>
         df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
       }

@@ -55,18 +55,18 @@ object LoadOptions {
     * pins its full-parse cache until the session ends (test/diagnostic use).
     * Production load paths go through [[withRead]], which releases it.
     */
-  def read(spark: SparkSession, path: String, format: String,
+  def read(spark: SparkSession, paths: Seq[String], format: String,
       options: Map[String, Any], schema: StructType): DataFrame =
-    readReleasable(spark, path, format, options, schema)._1
+    readReleasable(spark, paths, format, options, schema)._1
 
   /** Loan-style read: `consume` the loaded frame (typically a write), then
     * the maxerror full-parse cache — which backs the frame's corrupt-row
     * filter — is dropped. The cache must outlive consumption, so plain
     * `read` cannot release it; this is the shape production loads use.
     */
-  def withRead[A](spark: SparkSession, path: String, format: String,
+  def withRead[A](spark: SparkSession, paths: Seq[String], format: String,
       options: Map[String, Any], schema: StructType)(consume: DataFrame => A): A = {
-    val (df, release) = readReleasable(spark, path, format, options, schema)
+    val (df, release) = readReleasable(spark, paths, format, options, schema)
     try consume(df) finally release()
   }
 
@@ -76,47 +76,60 @@ object LoadOptions {
     * release via the handle — unpersist() on the returned frame would be a
     * no-op on an uncached plan.
     */
-  def readReleasable(spark: SparkSession, path: String, format: String,
+  def readReleasable(spark: SparkSession, paths: Seq[String], format: String,
       options: Map[String, Any], schema: StructType): (DataFrame, () => Unit) = {
+    // parquet maps columns by position, as a Redshift COPY does, so it
+    // takes the file schema rather than the table's
+    val df =
+      if (format == "parquet") spark.read.parquet(paths: _*)
+      else {
+        val (name, readerOptions, readSchema) = source(format, options, schema)
+        spark.read.format(name).schema(readSchema).options(readerOptions).load(paths: _*)
+      }
+    checked(df, format, options, paths.mkString(", "))
+  }
 
-    def opt(k: String): Option[String] =
-      options.get(k).map(String.valueOf).filter(_ != "false")
-    def has(k: String): Boolean = opt(k).isDefined
-
-    val maxError = opt("maxerror").map(_.toLong)
-    val permissive =
-      maxError.isDefined || has("acceptinvchars") || has("acceptanydate")
-
+  /** The one COPY format mapping: Spark source name, reader options and
+    * read schema for a format and option bag. The batch reader above and
+    * streaming_load's file stream both read through it.
+    */
+  def source(format: String, options: Map[String, Any], schema: StructType)
+      : (String, Map[String, String], StructType) = {
+    val opt = lookup(options) _
+    val permissive = opt("maxerror").isDefined ||
+      opt("acceptinvchars").isDefined || opt("acceptanydate").isDefined
+    val parse =
+      (if (permissive)
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
+      else Map("mode" -> "FAILFAST")) ++
+        opt("dateformat").map(f => "dateFormat" -> cFormat(f)) ++
+        opt("timeformat").map(f => "timestampFormat" -> cFormat(f)) ++
+        opt("emptyasnull").map(_ => "nullValue" -> "")
     // maxerror needs the corrupt-record column declared in the read schema
     val readSchema =
-      if (maxError.isDefined && format != "parquet")
-        schema.add(CorruptCol, StringType, nullable = true)
+      if (opt("maxerror").isDefined) schema.add(CorruptCol, StringType, nullable = true)
       else schema
-
-    var reader = spark.read.schema(readSchema)
-    if (permissive)
-      reader = reader.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CorruptCol)
-    else reader = reader.option("mode", "FAILFAST")
-    opt("dateformat").foreach(f => reader = reader.option("dateFormat", cFormat(f)))
-    opt("timeformat").foreach(f => reader = reader.option("timestampFormat", cFormat(f)))
-    if (has("emptyasnull")) reader = reader.option("nullValue", "")
-
-    var df = format match {
+    format match {
+      case "parquet" => ("parquet", Map.empty, schema)
       case "tsv" =>
         // delimited load: quotes are literal data unless removequotes
-        val r =
-          if (has("removequotes")) reader.option("quote", "\"")
-          else reader.option("quote", "")
-        r.option("sep", "\t").csv(path)
-      case "csv" => reader.csv(path)
-      case "json" => reader.json(path)
-      case "parquet" => spark.read.parquet(path)
+        val quote = if (opt("removequotes").isDefined) "\"" else ""
+        ("csv", parse + ("sep" -> "\t") + ("quote" -> quote), readSchema)
+      case "csv" | "json" => (format, parse, readSchema)
       case other => throw new graft.core.JobError(s"load: unknown format $other")
     }
+  }
 
+  /** The post-read half of the option bag over a frame read through
+    * [[source]]: the maxerror count and corrupt-row filter, then
+    * trimblanks. Returns the frame plus the handle releasing its cache.
+    */
+  def checked(read: DataFrame, format: String, options: Map[String, Any],
+      what: String): (DataFrame, () => Unit) = {
+    val opt = lookup(options) _
+    var df = read
     var release: () => Unit = () => ()
-    maxError.foreach { limit =>
+    opt("maxerror").map(_.toLong).foreach { limit =>
       if (format != "parquet") {
         // The cache is REQUIRED for correctness, not speed: corrupt-record
         // detection only fires for columns the scan actually parses, and
@@ -131,13 +144,13 @@ object LoadOptions {
         if (bad > limit) {
           cached.unpersist()
           throw new graft.core.JobFailure(
-            s"load error count $bad exceeds maxerror $limit ($path)")
+            s"load error count $bad exceeds maxerror $limit ($what)")
         }
         df = cached.filter(col(CorruptCol).isNull).drop(CorruptCol)
       }
     }
 
-    if (has("trimblanks")) {
+    if (opt("trimblanks").isDefined) {
       val cols = df.schema.fields.map { f =>
         if (f.dataType == StringType) trim(col(f.name)).as(f.name) else col(f.name)
       }
@@ -145,6 +158,9 @@ object LoadOptions {
     }
     (df, release)
   }
+
+  private def lookup(options: Map[String, Any])(k: String): Option[String] =
+    options.get(k).map(String.valueOf).filter(_ != "false")
 
   /** Redshift strptime-ish format → java.time pattern (subset). */
   private def cFormat(f: String): String =

@@ -1,9 +1,7 @@
 package graft.net
 
-import java.nio.file.{Files, Path, StandardCopyOption}
 import java.time.Instant
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import graft.core.{JobFailure, JobResult}
 
@@ -41,194 +39,7 @@ final case class StateTransition(
 
 class IllegalJobStateException(msg: String) extends JobFailure(msg)
 
-/** Store surface for job executions — the reference's DAO layer
-  * (lib/bricolage/dao/jobexecution.rb + dao/jobnet.rb). Two backends:
-  * [[ExecutionStore]] (in-process, optional TSV durability, single-writer)
-  * and [[JdbcExecutionStore]] (embedded Derby with the reference's SQL
-  * idioms — state-guarded UPDATEs and `executor_id is null` optimistic
-  * locks — the multi-runner coordination path).
-  */
-trait ExecutionStoreApi {
-  def all: Seq[JobExecution]
-  def stateTransitions: Seq[StateTransition]
-  def get(id: Long): Option[JobExecution]
-  def enqueueJob(jobnet: String, ref: JobRef, sequence: Int): JobExecution
-  def enqueuedJobs(jobnet: String): Seq[JobExecution]
-  def transitionToRunning(id: Long): JobExecution
-  def transitionToSucceeded(id: Long): JobExecution
-  def transitionToFailed(id: Long, message: String): JobExecution
-  def cancelJobnet(jobnet: String, message: String): Unit
-  def lock(key: String, executorId: String): Unit
-  def unlock(key: String, executorId: String): Unit
-  def lockedBy(key: String): Option[String]
-  def close(): Unit = ()
-}
-
-/** Durable store for job executions. In the reference this is a set of
-  * PostgreSQL tables with optimistic `executor_id` locks
-  * (lib/bricolage/dao/job.rb:129-166, dao/jobnet.rb:289-305); here it is an
-  * in-process store with optional TSV-file durability (atomic tmp+rename,
-  * same discipline as [[FileTaskQueue]]). Single-writer per store file.
-  */
-final class ExecutionStore(path: Option[Path] = None) extends ExecutionStoreApi {
-
-  import ExecutionStatus._
-
-  private val execs = mutable.LinkedHashMap.empty[Long, JobExecution]
-  private val audit = mutable.ArrayBuffer.empty[StateTransition]
-  private val locks = mutable.Map.empty[String, String] // lock key -> executor id
-  private var nextId = 1L
-
-  path.foreach(load)
-
-  def all: Seq[JobExecution] = synchronized { execs.values.toSeq }
-  def stateTransitions: Seq[StateTransition] = synchronized { audit.toSeq }
-  def get(id: Long): Option[JobExecution] = synchronized { execs.get(id) }
-
-  /** Enqueue one job of a jobnet. Reuses an existing non-terminal
-    * execution for the same (jobnet, job) if present — a restarted jobnet
-    * must not double-enqueue its unfinished jobs.
-    */
-  def enqueueJob(jobnet: String, ref: JobRef, sequence: Int): JobExecution =
-    synchronized {
-      val existing = execs.values.find(e =>
-        e.jobnet == jobnet && e.subsys == ref.subsys && e.jobName == ref.name &&
-          (e.status == Waiting || e.status == Running || e.status == Failed))
-      existing.getOrElse {
-        val e = JobExecution(nextId, jobnet, ref.subsys, ref.name, sequence,
-          Waiting, "", Instant.now(), None, None)
-        nextId += 1
-        execs(e.id) = e
-        record(e.id, Waiting, "")
-        e
-      }
-    }
-
-  /** Executions of a jobnet still needing work, in execution order
-    * (reference: dao/jobexecution.rb `enqueued_jobs`).
-    */
-  def enqueuedJobs(jobnet: String): Seq[JobExecution] = synchronized {
-    execs.values.toSeq
-      .filter(e => e.jobnet == jobnet &&
-        (e.status == Waiting || e.status == Running || e.status == Failed))
-      .sortBy(e => (e.executionSequence, e.id))
-  }
-
-  /** waiting|failed → running (retry of a failed job is legal —
-    * reference: dao/jobexecution.rb:155-160). running → running re-claims
-    * an execution a crashed runner left behind (restart path).
-    */
-  def transitionToRunning(id: Long): JobExecution =
-    transition(id, Set(Waiting, Failed, Running), Running, "",
-      e => e.copy(startedAt = Some(Instant.now()), finishedAt = None))
-
-  def transitionToSucceeded(id: Long): JobExecution =
-    transition(id, Set(Running), Succeeded, "",
-      e => e.copy(finishedAt = Some(Instant.now())))
-
-  def transitionToFailed(id: Long, message: String): JobExecution =
-    transition(id, Set(Running), Failed, message,
-      e => e.copy(finishedAt = Some(Instant.now())))
-
-  /** Cancel every non-terminal execution of a jobnet and clear its locks
-    * (reference: taskqueue.rb `cancel_jobnet`).
-    */
-  def cancelJobnet(jobnet: String, message: String): Unit = synchronized {
-    execs.values.toSeq
-      .filter(e => e.jobnet == jobnet &&
-        (e.status == Waiting || e.status == Running || e.status == Failed))
-      .foreach { e =>
-        execs(e.id) = e.copy(status = Canceled, message = message,
-          finishedAt = Some(Instant.now()))
-        record(e.id, Canceled, message)
-      }
-    locks.filterInPlace((k, _) => !k.startsWith(s"$jobnet#") && k != jobnet)
-    save()
-  }
-
-  private def transition(id: Long, from: Set[String], to: String,
-      message: String, touch: JobExecution => JobExecution): JobExecution =
-    synchronized {
-      val e = execs.getOrElse(id,
-        throw new IllegalJobStateException(s"no such job execution: $id"))
-      if (!from.contains(e.status))
-        throw new IllegalJobStateException(
-          s"illegal transition ${e.status} -> $to: job_execution_id=$id")
-      val updated = touch(e).copy(status = to, message = message)
-      execs(id) = updated
-      record(id, to, message)
-      save()
-      updated
-    }
-
-  private def record(id: Long, status: String, message: String): Unit =
-    audit += StateTransition(id, status, message, Instant.now())
-
-  /** Optimistic lock keyed by executor id: acquiring a lock someone else
-    * holds raises (reference: dao/jobnet.rb:289-305 —
-    * `update ... where executor_id is null returning`).
-    */
-  def lock(key: String, executorId: String): Unit = synchronized {
-    locks.get(key) match {
-      case Some(holder) if holder != executorId =>
-        throw new IllegalJobStateException(s"already locked by $holder: $key")
-      case _ => locks(key) = executorId
-    }
-  }
-
-  def unlock(key: String, executorId: String): Unit = synchronized {
-    if (locks.get(key).contains(executorId)) locks.remove(key)
-  }
-
-  def lockedBy(key: String): Option[String] = synchronized { locks.get(key) }
-
-  // -- durability ------------------------------------------------------
-
-  private def save(): Unit = path.foreach { p =>
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val lines = execs.values.map { e =>
-      Seq(e.id.toString, esc(e.jobnet), esc(e.subsys), esc(e.jobName),
-        e.executionSequence.toString, e.status, esc(e.message),
-        e.submittedAt.toString, e.startedAt.map(_.toString).getOrElse(""),
-        e.finishedAt.map(_.toString).getOrElse("")).mkString("\t")
-    }
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def load(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).foreach { line =>
-      val f = line.split("\t", -1)
-      val e = JobExecution(f(0).toLong, unesc(f(1)), unesc(f(2)), unesc(f(3)),
-        f(4).toInt, f(5), unesc(f(6)), Instant.parse(f(7)),
-        if (f(8).isEmpty) None else Some(Instant.parse(f(8))),
-        if (f(9).isEmpty) None else Some(Instant.parse(f(9))))
-      execs(e.id) = e
-      nextId = math.max(nextId, e.id + 1)
-    }
-  }
-
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 't' => b += '\t'; case 'n' => b += '\n'; case c => b += c
-        }
-        i += 2
-      } else { b += s.charAt(i); i += 1 }
-    }
-    b.toString
-  }
-}
-
-/** DB-backed task queue semantics over [[ExecutionStore]]
+/** DB-backed task queue semantics over [[JdbcExecutionStore]]
   * (reference: lib/bricolage/taskqueue.rb:175-310 `DatabaseTaskQueue`):
   * enqueue creates waiting executions in topological order; consume walks
   * them with running/succeeded/failed transitions, stops at the first
@@ -237,7 +48,7 @@ final class ExecutionStore(path: Option[Path] = None) extends ExecutionStoreApi 
   * jobs; optional jobnet/job locks are keyed by executor id.
   */
 final class DatabaseTaskQueue(
-    store: ExecutionStoreApi,
+    store: JdbcExecutionStore,
     jobnetId: String,
     executorId: String,
     enableLock: Boolean = false) extends TaskQueue {

@@ -17,7 +17,7 @@ import java.time.Instant
   */
 final class JdbcExecutionStore(jdbcUrl: String,
     connProps: java.util.Properties = new java.util.Properties())
-    extends ExecutionStoreApi with AutoCloseable {
+    extends AutoCloseable {
 
   import ExecutionStatus._
 

@@ -191,7 +191,7 @@ object DataMovement {
         when(col("l_orderkey") % 97 === 0, lit("not-a-number"))
           .otherwise(col("qty").cast("string"))).as("value"))
       .write.mode(SaveMode.Overwrite).text(out)
-    graft.jobclass.LoadOptions.withRead(s, out, "csv",
+    graft.jobclass.LoadOptions.withRead(s, Seq(out), "csv",
       Map("maxerror" -> "1000000"),
       org.apache.spark.sql.types.StructType.fromDDL("l_orderkey BIGINT, qty DOUBLE")) {
       loaded =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -98,6 +98,43 @@ object StreamOps {
       .option("pathGlobFilter", s"$name.parquet").parquet(dir)
   }
 
+  /** The events table as a stream, `ts` normalized as [[graft.Tables.t]]
+    * does it (the batch reader's resolved schema provides the streaming
+    * schema).
+    */
+  private def eventStream(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    streamTable(s, dir, "events").transform(graft.Tables.normalizeEventsTs)
+  }
+
+  /** Drain `stream` once — `Trigger.AvailableNow` over a fresh checkpoint,
+    * so every call reprocesses the whole input — and read the result back
+    * as a batch frame. The output mode picks the sink. `complete` goes to
+    * a memory sink, the only sink that accepts complete mode; it holds
+    * the re-emitted aggregate on the driver, so only bounded aggregates
+    * use it. `append` goes to a parquet files sink, which keeps a
+    * corpus-proportional output on executors/disk; it is read back with
+    * the query's schema, so a zero-row drain reads back empty instead of
+    * failing schema inference.
+    */
+  private def drain(stream: Dataset[_], outputMode: String): DataFrame = {
+    val s = stream.sparkSession
+    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt")
+    val writer = stream.writeStream.outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt.toString)
+    outputMode match {
+      case "complete" =>
+        val sink = "stream_" + ckpt.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
+        writer.format("memory").queryName(sink).start().awaitTermination()
+        try s.table(sink) finally s.catalog.dropTempView(sink)
+      case "append" =>
+        val sinkDir = graft.core.TempDirs.create("graft_stream_sink").toString
+        writer.format("parquet").option("path", sinkDir).start().awaitTermination()
+        s.read.schema(stream.schema).parquet(sinkDir)
+    }
+  }
+
   /** Streaming twin of [[Relational.qEventsHourly]]: hourly event counts
     * and value sums computed by a watermarked tumbling-window streaming
     * aggregate drained with `Trigger.AvailableNow` (no distinct-count —
@@ -111,25 +148,11 @@ object StreamOps {
     * query runs incrementally over arriving files instead of draining.
     */
   def qStreamHourly(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    // events.ts normalization matches graft.Tables.t, but through
-    // readStream (the batch reader's resolved schema provides the
-    // streaming schema)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = streamTable(s, dir, "events")
-      .transform(graft.Tables.normalizeEventsTs)
     val agg = graft.streaming.StructuredStreams
-      .windowedEventStats(ev, "1 hour", "1 hour")
-    val sink = "stream_hourly_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete") // re-emit all windows; append would hold
-      // open windows back behind the watermark at end-of-input
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+      .windowedEventStats(eventStream(s, dir), "1 hour", "1 hour")
+    // complete re-emits all windows; append would hold open windows back
+    // behind the watermark at end-of-input
+    drain(agg, "complete")
       .select(
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
         col("event_type"), col("n_events"),
@@ -151,24 +174,13 @@ object StreamOps {
     * -chosen, not hinted (see the helper's doc).
     */
   def qStreamEnriched(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = streamTable(s, dir, "events")
-      .transform(graft.Tables.normalizeEventsTs)
+    val ev = eventStream(s, dir)
     val dim = graft.Tables.t(s, dir, "events")
       .select(col("user_id")).distinct()
       .withColumn("segment", concat(lit("seg"), col("user_id") % 4))
     val agg = graft.streaming.StructuredStreams
       .enrichedSegmentStats(ev, dim, "1 hour", "1 hour")
-    val sink = "stream_enriched_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(agg, "complete")
       .select(
         date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
         col("segment"), col("n_events"),
@@ -195,23 +207,11 @@ object StreamOps {
     * batch plan.
     */
   def qStreamCdcLatest(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = streamTable(s, dir, "events")
-      .transform(graft.Tables.normalizeEventsTs)
-    val agg = ev.groupBy("user_id")
+    val agg = eventStream(s, dir).groupBy("user_id")
       .agg(count(lit(1)).as("n_versions"),
         max(struct(col("ts"), col("event_id"),
           col("event_type"), col("value"))).as("last"))
-    val sink = "stream_cdc_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(agg, "complete")
       .select(col("user_id"), col("n_versions"),
         col("last.event_type").as("last_type"),
         round(col("last.value"), 4).as("last_value"))
@@ -240,21 +240,16 @@ object StreamOps {
     * stays tiny. Inner-join results emit as they match — append mode
     * never withholds them behind the watermark.
     *
-    * The streaming query materializes matched pairs to a PARQUET files
-    * sink (chaining an aggregate after a stream-stream join is
-    * restricted in append mode, and the roll-up is not the part under
-    * streaming test); the hourly roll-up is a batch aggregate reading
-    * that table back. A files sink keeps the unbounded matched-pair set
-    * on executors/disk — the driver never holds it — unlike a memory
-    * sink, which is only safe for the bounded-aggregate sinks the other
-    * streaming queries use. The pairs are projected to the three
-    * roll-up columns (v_ts, v_user, p_value) BEFORE the sink so the
-    * materialized table is as narrow as the downstream aggregate needs.
+    * The streaming query drains matched pairs in append mode (chaining an
+    * aggregate after a stream-stream join is restricted in append mode,
+    * and the roll-up is not the part under streaming test); the hourly
+    * roll-up is a batch aggregate reading the drained pairs back. The
+    * pairs are projected to the three roll-up columns (v_ts, v_user,
+    * p_value) BEFORE the sink so the materialized table is as narrow as
+    * the downstream aggregate needs.
     */
   def qStreamJoin(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def side(tp: String, pfx: String) = streamTable(s, dir, "events")
-      .transform(graft.Tables.normalizeEventsTs)
+    def side(tp: String, pfx: String) = eventStream(s, dir)
       .filter(col("event_type") === tp)
       .select(col("user_id").as(s"${pfx}_user"), col("ts").as(s"${pfx}_ts"),
         col("value").as(s"${pfx}_value"))
@@ -262,19 +257,7 @@ object StreamOps {
     val joined = side("view", "v").join(side("purchase", "p"),
       expr("v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 30 MINUTES"))
       .select(col("v_ts"), col("v_user"), col("p_value"))
-    val sinkDir = graft.core.TempDirs.create("graft_stream_join_sink").toString
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = joined.writeStream
-      .format("parquet").option("path", sinkDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    // explicit schema: a zero-row sink directory (possible on a filtered
-    // corpus where no view/purchase pair lands in-window) must read back
-    // as an empty frame, not throw "Unable to infer schema"
-    s.read.schema(joined.schema).parquet(sinkDir)
+    drain(joined, "append")
       .groupBy(date_format(date_trunc("hour", col("v_ts")), "yyyy-MM-dd HH:mm:ss").as("hr"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("v_user")).as("n_users"),
@@ -322,26 +305,9 @@ object StreamOps {
     s.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dec = graft.streaming.StructuredStreams
-        .streamingTokenBudget(docs, budget)
-      // files sink, not memory: the emitted set is ONE ROW PER DOCUMENT
-      // (every admission decision), i.e. corpus-proportional — a memory
-      // sink would spool the whole corpus's decisions into driver heap.
-      // The parquet sink keeps them on executors/disk (same pattern as
-      // qStreamJoin's matched-pair sink); the driver holds nothing
-      // corpus-sized — only the bounded per-source Long state in RocksDB.
-      val sinkDir = graft.core.TempDirs.create("graft_stream_budget_sink").toString
-      val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-      val q = dec.writeStream
-        .format("parquet").option("path", sinkDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.awaitTermination()
-      // explicit schema so an empty queue (zero admission decisions)
-      // reads back as an empty frame rather than failing schema inference
-      s.read.schema(dec.schema).parquet(sinkDir)
+      // append: the emitted set is ONE ROW PER DOCUMENT (every admission
+      // decision), so the driver holds only the per-source Long state
+      drain(graft.streaming.StructuredStreams.streamingTokenBudget(docs, budget), "append")
         .select(col("source"), col("doc_id"), col("admitted"),
           col("spent_after"))
         .orderBy("source", "doc_id")
@@ -399,16 +365,7 @@ object StreamOps {
         org.apache.spark.sql.Encoders.scalaLong))
     val agg = docs.groupBy("lang")
       .agg(mink(col("priority"), col("doc_id")).as("keep"))
-    val sink = "stream_reservoir_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(agg, "complete")
       .select(col("lang"), posexplode(col("keep")).as(Seq("pos", "item")))
       .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
         col("item._2").as("doc_id"))
@@ -440,31 +397,16 @@ object StreamOps {
     */
   def qStreamSessions(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = streamTable(s, dir, "events")
-      .transform(graft.Tables.normalizeEventsTs)
+    val ev = eventStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
       .as[graft.streaming.StructuredStreams.Event]
     val sessions = graft.streaming.StructuredStreams
       .sessionize(ev, gapMs = 30L * 60 * 1000)
-    // files sink, not memory: emitted rows are ONE PER CLOSED SESSION —
-    // corpus-proportional over a replayed history — so a memory sink
-    // would hold the full session log on the driver. Parquet keeps it on
-    // executors/disk (qStreamJoin's pattern); the driver holds only the
-    // bounded per-active-user {start, last, n} state inside the store,
-    // and the per-user roll-up below is a batch aggregate over the files.
-    val sinkDir = graft.core.TempDirs.create("graft_stream_sessions_sink").toString
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = sessions.writeStream
-      .format("parquet").option("path", sinkDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    // explicit schema: with a small input no session may close before the
-    // final watermark, leaving a row-less sink — read it back empty
-    s.read.schema(sessions.schema).parquet(sinkDir)
+    // append: emitted rows are ONE PER CLOSED SESSION, so the driver holds
+    // only the per-active-user {start, last, n} state, and the per-user
+    // roll-up below is a batch aggregate over the drained sessions (with a
+    // small input no session may close before the final watermark)
+    drain(sessions, "append")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"),
         sum("n_events").as("n_events"),
@@ -563,17 +505,9 @@ object StreamOps {
     val agg = stream.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val sink = "stream_late_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    val ckpt = graft.core.TempDirs.create("graft_stream_ckpt").toString
-    val q = agg.writeStream
-      .format("memory").queryName(sink)
-      .outputMode("append") // emission gated on the watermark — the mode
-      // in which late-drop semantics are actually observable
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.awaitTermination()
-    s.table(sink)
+    // append: emission gated on the watermark — the mode in which
+    // late-drop semantics are actually observable
+    drain(agg, "append")
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
         col("event_type"), col("n"))
       .orderBy("hr", "event_type")

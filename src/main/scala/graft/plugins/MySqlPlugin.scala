@@ -142,7 +142,7 @@ object MySqlPlugin {
         val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
           Some(destDs.qualify(dest)))
         publishRebuild(destDs, dest, Some(ct.createSql), wk => {
-          LoadOptions.withRead(destDs.spark, url, "json",
+          LoadOptions.withRead(destDs.spark, Seq(url), "json",
             p.pairs("options"), destDs.table(wk).schema) { df =>
             df.write.mode(SaveMode.Append).insertInto(destDs.qualify(wk))
           }
@@ -210,7 +210,7 @@ object MySqlPlugin {
         val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
           Some(destDs.qualify(dest)))
         publishRebuild(destDs, dest, Some(ct.createSql), wk => {
-          LoadOptions.withRead(destDs.spark, store.urlString(s3File), "json",
+          LoadOptions.withRead(destDs.spark, Seq(store.urlString(s3File)), "json",
             p.pairs("options"), destDs.table(wk).schema) { df =>
             df.write.mode(SaveMode.Append).insertInto(destDs.qualify(wk))
           }
@@ -262,7 +262,7 @@ object MySqlPlugin {
         destDs.stagedOverwrite(dest) { wk =>
           destDs.sql(s"CREATE TABLE ${destDs.qualify(wk)} USING parquet AS " +
             s"SELECT * FROM ${destDs.qualify(dest)} WHERE NOT ($cond)")
-          LoadOptions.withRead(destDs.spark, url, "json",
+          LoadOptions.withRead(destDs.spark, Seq(url), "json",
             p.pairs("options"), destDs.table(wk).schema) { df =>
             df.write.mode(SaveMode.Append).insertInto(destDs.qualify(wk))
           }

@@ -416,7 +416,9 @@ object Cli {
   /** Cmdline/env values overlaid on bricolage.yml saved options
     * (reference: application.rb:236-249 merge_saved_options +
     * build_common_options!: default < saved < env < cmdline). Returns the
-    * effective (value, source) per common option name.
+    * effective (value, source) per common option name. `--dump-options`
+    * prints these rows and the mains build their queue and log wiring
+    * from [[effectiveOptions]], so the dump is what runs.
     */
   def commonOptionPairs(opts: Options, saved: String => Option[String]):
       Seq[(String, Option[String], String)] = {
@@ -428,10 +430,11 @@ object Cli {
           case None    => (name, None, "default value")
         }
       }
-    // queue options report what queue construction actually uses: the
-    // disable veto hides saved values, queue layering is by group (any
-    // cmdline queue option hides ALL saved queue values), and a saved
-    // enable-queue counts
+    // the disable veto hides saved queue values too. Queue layering is by
+    // GROUP, not per option: any cmdline/env queue option hides ALL saved
+    // queue values, so a saved higher-priority type (db-queue) never
+    // overrides an explicit lower-priority one (--queue). A saved
+    // enable-queue counts.
     val anyCmdlineQueue =
       opts.dbName.isDefined || opts.dbQueuePath.isDefined || opts.queuePath.isDefined
     def pairQ(name: String, parsed: Option[String]): (String, Option[String], String) =
@@ -459,6 +462,11 @@ object Cli {
       ("ecs-executor", Some(opts.ecsExecutor.toString), opts.source("ecs-executor")),
     )
   }
+
+  /** Effective value per common option name (see [[commonOptionPairs]]). */
+  def effectiveOptions(opts: Options, saved: String => Option[String])
+      : Map[String, Option[String]] =
+    commonOptionPairs(opts, saved).map { case (name, value, _) => name -> value }.toMap
 
   /** Print `name=value (source)` pairs for `--dump-options`
     * (reference: application.rb:45-50 / jobnetrunner.rb:51-58 print
@@ -549,28 +557,14 @@ object BricolageMain {
       return 0
     }
     // single-job log wiring (reference: application.rb:77-80 builds the
-    // same LogLocator the jobnet runner uses, jobnet id = subsys/job).
-    // log-dir beats log-path even when log-path is the cmdline one — the
-    // reference's log_path_format order (application.rb:260-268)
-    val saved = ctx.globalVariables.get _
-    val logFiles = LogFilePath.default(
-      opts.logDir.orElse(saved("log-dir")),
-      opts.logPath.orElse(saved("log-path")))
+    // same LogLocator the jobnet runner uses, jobnet id = subsys/job)
     val ref = graft.net.JobRef(subsys, jobPath.getFileName.toString, isNet = false)
     def execute(): graft.core.JobResult = Application.runJob(job, ref, JobListener.registered)
-    val result = logFiles match {
-      case Some(lp) =>
+    val logs = JobLogs(Cli.effectiveOptions(opts, ctx.globalVariables.get), ctx.registry)
+    val result = logs match {
+      case Some(l) =>
         val now = java.time.LocalDateTime.now()
-        val p = Paths.get(lp.format(ref, s"$subsys/${jobPath.getFileName}", now, now))
-        val upload = opts.s3Log.orElse(saved("s3-log")).map { spec =>
-          val (dsName, key) = spec.split(":", 2) match {
-            case Array(ds, k) if k.trim.nonEmpty => (ds, k.trim)
-            case other => (other.head, "logs")
-          }
-          val store = ctx.registry.store(dsName)
-          (f: Path) => store.put(f, key.stripSuffix("/") + "/" + f.getFileName.toString)
-        }
-        LogLocator.redirect(p, upload)(execute())
+        l.redirect(ref, s"$subsys/${jobPath.getFileName}", now, now)(execute())
       case None => execute()
     }
     if (!result.success) System.err.println(result.message)
@@ -612,27 +606,13 @@ object JobNetMain {
       if (opts.ecsExecutor) Some(sys.env.getOrElse("ECS_CONTAINER_METADATA_URI",
         throw new ParameterError("--ecs-executor requires ECS_CONTAINER_METADATA_URI")))
       else None)
-    // effective queue selection layers bricolage.yml saved values under
-    // cmdline/env (reference: merge_saved_options + make_queue), so
-    // --dump-options reports what actually runs; --disable-queue (or the
-    // env var) vetoes saved enablement too
-    // layering is by GROUP, not per option: any cmdline/env queue option
-    // makes the whole cmdline group win, otherwise the saved group
-    // applies — a saved higher-priority type (db-queue) must never
-    // override an explicit cmdline lower-priority one (--queue)
-    val anyCmdlineQueue =
-      opts.dbName.isDefined || opts.dbQueuePath.isDefined || opts.queuePath.isDefined
-    val (effDbName, effDbQueue, effQueuePath) =
-      if (opts.queueDisabled) (None, None, None)
-      else if (anyCmdlineQueue) (opts.dbName, opts.dbQueuePath, opts.queuePath)
-      else (saved("db-name"), saved("db-queue").map(Paths.get(_)),
-        saved("queue-path").map(Paths.get(_)))
-    val effEnableQueue = !opts.queueDisabled &&
-      (opts.enableQueue || saved("enable-queue").contains("true"))
-    // queue construction is side-effect-free: clear/restore happen AFTER
-    // the locked check below, so a locked queue is never mutated
+    // the queue the dumped options name (reference: merge_saved_options +
+    // make_queue). Construction is side-effect-free: clear/restore happen
+    // AFTER the locked check below, so a locked queue is never mutated
+    val eff = Cli.effectiveOptions(opts, saved)
     val (queue: TaskQueue, clearAction: (() => Unit)) =
-      (effDbName, effDbQueue, effQueuePath) match {
+      (eff("db-name"), eff("db-queue").map(Paths.get(_)),
+          eff("queue-path").map(Paths.get(_))) match {
         case (Some(name), _, _) =>
           // named-datasource DB queue (reference: jobnetrunner.rb:100-105 —
           // --db-name resolves a datasource; the reference passes
@@ -659,13 +639,12 @@ object JobNetMain {
             () => store.cancelJobnet(jobnetId, "cleared by --clear-queue"))
         case (None, None, Some(p)) =>
           (new FileTaskQueue(p), () => { Files.deleteIfExists(p); () })
-        case (None, None, None) if effEnableQueue =>
+        case (None, None, None) if eff("enable-queue").contains("true") =>
           // derived file-queue path under the local state dir (reference:
           // jobnetrunner.rb:126-142 get_queue_file_path —
           // <state>/queue/<app>.<jobnet-id-dotted>; state dir from
           // --local-state-dir, bricolage.yml, or <home>/.bricolage)
-          val stateDir = opts.localStateDir
-            .orElse(saved("local-state-dir").map(Paths.get(_)))
+          val stateDir = eff("local-state-dir").map(Paths.get(_))
             .getOrElse(opts.home.resolve(".bricolage"))
           val p = stateDir.resolve("queue")
             .resolve(s"${Cli.appName(opts.home)}.${jobnetId.replace('/', '.')}.queue")
@@ -690,21 +669,9 @@ object JobNetMain {
     // restore persisted progress (DB queues bind here; the file queue
     // restored from its file at construction and re-reading is idempotent)
     queue.restore()
-    // log-path wiring (reference: application.rb:222-234 common options +
-    // jobnetrunner.rb:85-86 LogLocatorBuilder.for_options). Layering is
-    // per option (cmdline/env beat bricolage.yml); between the two,
-    // log-dir wins over log-path — the reference's own log_path_format
-    // order (application.rb:260-268)
-    val logFiles = LogFilePath.default(
-      opts.logDir.orElse(saved("log-dir")),
-      opts.logPath.orElse(saved("log-path")))
-    val logStore = opts.s3Log.orElse(saved("s3-log")).map { spec =>
-      val (dsName, key) = spec.split(":", 2) match {
-        case Array(ds, k) if k.trim.nonEmpty => (ds, k.trim)
-        case other => (other.head, "logs")
-      }
-      (ctx.registry.store(dsName), key)
-    }
+    // log-path wiring (reference: jobnetrunner.rb:85-86
+    // LogLocatorBuilder.for_options)
+    val logs = JobLogs(eff, ctx.registry)
     if (opts.listJobs || opts.checkOnly) {
       // reference: jobnetrunner.rb:69-83 — both operate on the QUEUE after
       // restore-or-enqueue, so a resumed jobnet lists/checks only its
@@ -719,7 +686,7 @@ object JobNetMain {
       } finally queue.close()
     }
     try {
-      val result = runner.run(netPath, queue, opts.varAssigns, logFiles, logStore)
+      val result = runner.run(netPath, queue, opts.varAssigns, logs)
       if (!result.success) System.err.println(result.message)
       result.exitCode
     } finally queue.close()

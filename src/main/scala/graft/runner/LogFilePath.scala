@@ -48,11 +48,4 @@ object LogFilePath {
   private val DateFmt = DateTimeFormatter.ofPattern("yyyyMMdd")
   /** strftime '%Y%m%d_%H%M%S%L' — millisecond suffix */
   private val TimeFmt = DateTimeFormatter.ofPattern("yyyyMMdd_HHmmssSSS")
-
-  /** `BRICOLAGE_LOG_DIR`-style default resolution
-    * (reference: logfilepath.rb:3-11), from explicit settings here.
-    */
-  def default(logDir: Option[String], logPath: Option[String]): Option[LogFilePath] =
-    logDir.map(d => new LogFilePath(s"$d/%{std}.log"))
-      .orElse(logPath.map(new LogFilePath(_)))
 }

@@ -236,14 +236,13 @@ final class JobNetRunner(ctx: JobContext,
 
   /** Run the full net through a queue; a restart with the same file queue
     * skips completed jobs (reference: jobnetrunner.rb:61-72,156-172).
-    * With `logFiles` set, each job's stdout/stderr is redirected to its
+    * With `logs` set, each job's stdout/stderr is redirected to its
     * templated log path (reference: jobnetrunner.rb:174-187 +
     * loglocator.rb).
     */
   def run(rootNet: Path, queue: TaskQueue = new MemoryTaskQueue,
       cliVariables: Variables = Variables.empty,
-      logFiles: Option[LogFilePath] = None,
-      logStore: Option[(graft.ds.ObjectStore, String)] = None): JobResult = {
+      logs: Option[JobLogs] = None): JobResult = {
     val jobnetStart = java.time.LocalDateTime.now()
     val jobnetId = (if (ctx.subsys.isEmpty) "" else ctx.subsys + "/") +
       rootNet.getFileName.toString.stripSuffix(".jobnet")
@@ -256,17 +255,8 @@ final class JobNetRunner(ctx: JobContext,
       def exec() =
         new Job(ref.name, jf, ctx.copy(subsys = ref.subsys), Map.empty, cliVariables,
           Some(jobFilePath(ref).toAbsolutePath)).execute()
-      val r = logFiles match {
-        case Some(lp) =>
-          val p = java.nio.file.Paths.get(
-            lp.format(ref, jobnetId, java.time.LocalDateTime.now(), jobnetStart))
-          // after the job, ship the log to the object store under the
-          // templated key (reference: loglocator.rb:60-76 S3 upload)
-          val upload = logStore.map { case (store, prefix) =>
-            (f: Path) => store.put(f,
-              prefix.stripSuffix("/") + "/" + f.getFileName.toString)
-          }
-          LogLocator.redirect(p, upload)(exec())
+      val r = logs match {
+        case Some(l) => l.redirect(ref, jobnetId, java.time.LocalDateTime.now(), jobnetStart)(exec())
         case None => exec()
       }
       JobListener.fire(listeners)(_.afterJob(ref, r))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.ds.{ObjectStore, SparkDataSource}
-import graft.jobclass.{Action, JobClass, JobContext}
+import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
 
 /** Micro-batch load from a filesystem object queue
   * (reference: jobclass/streaming_load.rb — the only "streaming" in the
@@ -28,7 +28,17 @@ import graft.jobclass.{Action, JobClass, JobContext}
   *     objects recorded in the load log are ever moved — a file that
   *     arrives mid-load stays queued for the next run.
   *
-  * Modes `noop/load-only/dequeue-only/skip-work` (:28-31) are honored.
+  * Modes `noop/load-only/dequeue-only/skip-work` (:28-31) are honored;
+  * none of them combines with `streaming: true` (a ParameterError at
+  * build).
+  *
+  * Objects are read through [[LoadOptions]], the same reader and COPY
+  * option bag as `load` (reference :228-237 COPYs with the user's load
+  * options): `load-options` sets maxerror, emptyasnull, date/time
+  * formats, removequotes and trimblanks, in both modes. As with `load`
+  * and Redshift COPY, a malformed object fails the load (FAILFAST) unless
+  * `maxerror` is set, and tsv treats `"` as data unless `removequotes` is
+  * set. Batch parquet maps columns by position, as `load` does.
   *
   * Delivery semantics: the reference wraps dest-insert + log-append in one
   * DB transaction; Spark-catalog parquet tables have no cross-table
@@ -36,9 +46,8 @@ import graft.jobclass.{Action, JobClass, JobContext}
   * re-loads that batch on rerun — **at-least-once on crash, exactly-once in
   * normal operation** (the crashed batch's files stay in the queue because
   * dequeue is log-driven). Smaller `batch-size` shrinks that window. For
-  * true exactly-once use the Structured Streaming path
-  * (`StructuredStreams`: `Trigger.AvailableNow` + checkpoint) behind the
-  * same job class.
+  * true exactly-once use `streaming: true` (`Trigger.AvailableNow` + a
+  * checkpointed file source) in this same job class.
   */
 object StreamingLoadJobClass extends JobClass("streaming_load") {
 
@@ -59,7 +68,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
     StringParam("ctl-prefix", optional = true),
     OptionalBoolParam("keep-ctl"),
     EnumParam("format", Seq("tsv", "csv", "json", "parquet"), Some("json")),
-    KeyValuePairsParam("load-options"),
+    KeyValuePairsParam("load-options"), // COPY option bag, read by LoadOptions
     SqlFileParam("sql-file", optional = true),
     IntParam("batch-size"), // max files per load batch; must be positive
     OptionalBoolParam("noop"), OptionalBoolParam("load-only"),
@@ -82,6 +91,23 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
       .getOrElse(TableSpec(dest.schema, dest.name + "_l"))
     val queuePath = vars.expand(p.string("queue-path"))
     val pattern = p.stringOpt("file-name").map(FileNamePattern.compile)
+    val format = p.string("format")
+    val loadOptions = p.pairs("load-options")
+    // the user SQL commits a work table into dest
+    def transform(sqlFile: String, workTable: String) =
+      bindSql(ctx.sqlText(sqlFile, vars),
+        vars.add("work_table", workTable).add("dest_table", ds.qualify(dest)), ctx)
+
+    val batchSize = p.longOpt("batch-size").getOrElse(100000L) match {
+      case n if n > Int.MaxValue =>
+        throw new ParameterError(s"streaming_load: batch-size $n exceeds ${Int.MaxValue}")
+      case n => n.toInt
+    }
+    val streaming = p.bool("streaming")
+    val modes = Seq("noop", "load-only", "dequeue-only", "skip-work").filter(p.bool)
+    if (streaming && modes.nonEmpty)
+      throw new ParameterError(
+        s"streaming_load: streaming: true cannot be combined with ${modes.mkString(", ")}")
 
     // base-relative candidate paths (works over local FS or s3a the same).
     // Hidden names (leading '.' or '_') are never queue objects BY
@@ -151,43 +177,35 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
       (sideIt("left_semi"), sideIt("left_anti"))
     }
 
-    val batchSize = p.longOpt("batch-size").map(_.toInt).getOrElse(100000)
-
-    if (p.bool("streaming"))
+    if (streaming)
       // Structured Streaming mode: the checkpointed file source IS the load
       // log (exactly-once per file, survives crashes); files stay queued —
       // retention is the checkpoint's job, not a dequeue move.
       return Seq(Action("streaming_load:stream") {
         val spark = ds.spark
-        val schema = ds.table(dest).schema
+        val (source, readerOptions, readSchema) =
+          LoadOptions.source(format, loadOptions, ds.table(dest).schema)
         // conservative glob from the %-pattern: directives match any run
         val glob = p.stringOpt("file-name")
           .map(_.replaceAll("%[YmdHMSQ*]", "*").replaceAll("\\*+", "*"))
-        var reader = spark.readStream.schema(schema)
-        glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-        val src = p.string("format") match {
-          case "json"    => reader.json(fs.urlString(queuePath))
-          case "tsv"     => reader.option("sep", "\t").csv(fs.urlString(queuePath))
-          case "csv"     => reader.csv(fs.urlString(queuePath))
-          case "parquet" => reader.parquet(fs.urlString(queuePath))
-        }
+        val src = spark.readStream.format(source).schema(readSchema)
+          .options(readerOptions ++ glob.map("pathGlobFilter" -> _))
+          .load(fs.urlString(queuePath))
         val ckpt = p.stringOpt("checkpoint-path").map(vars.expand).map(fs.urlString)
           .getOrElse(fs.urlString(queuePath.stripSuffix("/") + "_checkpoint"))
         val query = src.writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            p.stringOpt("sql-file") match {
+            val (df, release) = LoadOptions.checked(batch, format, loadOptions, queuePath)
+            try p.stringOpt("sql-file") match {
               case Some(sf) =>
-                batch.createOrReplaceTempView("stream_work_table")
-                val stmt = bindSql(ctx.sqlText(sf, vars),
-                  vars.add("work_table", "stream_work_table")
-                    .add("dest_table", ds.qualify(dest)), ctx)
-                stmt.statements.foreach(s => batch.sparkSession.sql(s))
+                df.createOrReplaceTempView("stream_work_table")
+                transform(sf, "stream_work_table").statements
+                  .foreach(s => batch.sparkSession.sql(s))
               case None =>
-                batch.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
-            }
-            ()
+                df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
+            } finally release()
           }
           .start()
         query.awaitTermination()
@@ -226,34 +244,25 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
         newFiles.grouped(batchSize).foreach { batchRel =>
           val batch = batchRel.map(fs.urlString)
           val startTime = java.sql.Timestamp.from(java.time.Instant.now())
-          // explicit file list = the reference's manifest (:207-226); COPY
-          // options map through LoadOptions semantics
-          val reader = spark.read.schema(ds.table(dest).schema)
-          val df = p.string("format") match {
-            case "json"    => reader.json(batch: _*)
-            case "tsv"     => reader.option("sep", "\t").csv(batch: _*)
-            case "csv"     => reader.csv(batch: _*)
-            case "parquet" => reader.parquet(batch: _*)
-          }
-          if (p.bool("skip-work")) {
-            // reference :31: "Skip work table and load directly into
-            // dest-table" — one append, no staging
-            df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
-          } else {
-            // load work table from the new files only (:165,202-237), then
-            // commit via user SQL or INSERT SELECT *
-            ds.dropForce(work)
-            df.write.saveAsTable(ds.qualify(work))
-            p.stringOpt("sql-file") match {
-              case Some(sf) =>
-                val stmt = bindSql(ctx.sqlText(sf, vars),
-                  vars.add("work_table", ds.qualify(work))
-                    .add("dest_table", ds.qualify(dest)), ctx)
-                ds.execScript(stmt)
-              case None =>
-                ds.sql(s"INSERT INTO ${ds.qualify(dest)} SELECT * FROM ${ds.qualify(work)}")
+          // explicit file list = the reference's manifest (:207-226)
+          LoadOptions.withRead(spark, batch, format, loadOptions,
+              ds.table(dest).schema) { df =>
+            if (p.bool("skip-work")) {
+              // reference :31: "Skip work table and load directly into
+              // dest-table" — one append, no staging
+              df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
+            } else {
+              // load work table from the new files only (:165,202-237), then
+              // commit via user SQL or INSERT SELECT *
+              ds.dropForce(work)
+              df.write.saveAsTable(ds.qualify(work))
+              p.stringOpt("sql-file") match {
+                case Some(sf) => ds.execScript(transform(sf, ds.qualify(work)))
+                case None =>
+                  ds.sql(s"INSERT INTO ${ds.qualify(dest)} SELECT * FROM ${ds.qualify(work)}")
+              }
+              ds.dropForce(work)
             }
-            ds.dropForce(work)
           }
           // append load log w/ NOT-IN guard (:314-330)
           val endTime = java.sql.Timestamp.from(java.time.Instant.now())

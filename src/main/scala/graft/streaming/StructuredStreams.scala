@@ -1,56 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** Idiomatic Structured Streaming counterparts to the batch-faithful
-  * [[StreamingLoadJobClass]] (SURVEY §2.11 option (b)) plus the streaming
-  * operators a training-data pipeline needs: watermarked windowed
-  * aggregation and custom sessionization state.
+/** The streaming operators a training-data pipeline needs: watermarked
+  * windowed aggregation and custom sessionization state. The exactly-once
+  * file load is the `streaming: true` mode of [[StreamingLoadJobClass]]
+  * (SURVEY §2.11 option (b)).
   *
-  * Scale notes: the file source lists the queue directory incrementally
-  * and the checkpoint records per-file progress — Spark's native
-  * exactly-once-per-file replaces the reference's load-log join dedup
-  * (jobclass/streaming_load.rb:282-330). State stores (windows, sessions)
-  * are partitioned by grouping key across executors and spill via RocksDB
-  * if configured; watermarks bound state growth.
+  * Scale notes: state stores (windows, sessions) are partitioned by
+  * grouping key across executors and spill via RocksDB if configured;
+  * watermarks bound state growth.
   */
 object StructuredStreams {
-
-  /** Exactly-once micro-batch load: stream new files under `queueDir`
-    * into parquet `destDir`, applying an optional per-batch SQL transform
-    * (the work-table step of the reference — `$work_table` is exposed as
-    * a temp view named `work_table`). `Trigger.AvailableNow` drains
-    * everything pending, then stops — the reference's one-shot semantics.
-    */
-  def loadAvailableNow(
-      spark: SparkSession,
-      queueDir: String,
-      schema: StructType,
-      format: String,
-      destDir: String,
-      checkpointDir: String,
-      transformSql: Option[String] = None): StreamingQuery = {
-    val src = spark.readStream.schema(schema).format(format)
-      .load(queueDir)
-    val q = src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = transformSql match {
-          case Some(sql) =>
-            batch.createOrReplaceTempView("work_table")
-            batch.sparkSession.sql(sql)
-          case None => batch
-        }
-        out.write.mode("append").parquet(destDir)
-        ()
-      }
-      .start()
-    q
-  }
 
   /** Watermarked tumbling-window aggregation over an event stream:
     * count + sum(value) per (window, event_type). Late data beyond the

@@ -10,121 +10,100 @@ import graft.runner.LogFilePath
 /** State machine + DB-queue semantics (reference:
   * test/test_databasetaskqueue.rb and lib/bricolage/dao/jobexecution.rb)
   * and log path templating (reference: test/test_logfilepath.rb:160-170).
-  * Every backend-generic case runs against BOTH stores: the in-process
-  * TSV store and the JDBC (embedded Derby) store with the reference's SQL
+  * The store is the JDBC (embedded Derby) one with the reference's SQL
   * locking idioms.
   */
 class ExecutionStoreSpec extends AnyFunSuite {
 
   private def ref(n: String) = JobRef("subsys", n, isNet = false)
 
-  private def backends: Seq[(String, () => ExecutionStoreApi)] = Seq(
-    "tsv" -> (() => new ExecutionStore()),
-    "jdbc" -> (() => JdbcExecutionStore.embedded(
-      graft.core.TempDirs.create("graft-derby").resolve("db"))))
+  private def mk(): JdbcExecutionStore = JdbcExecutionStore.embedded(
+    graft.core.TempDirs.create("graft-derby").resolve("db"))
 
-  for ((kind, mk) <- backends) {
-
-    test(s"[$kind] enqueue creates waiting executions in sequence order") {
-      val store = mk()
-      store.enqueueJob("subsys/net1", ref("job1"), 1)
-      store.enqueueJob("subsys/net1", ref("job2"), 2)
-      val q = store.enqueuedJobs("subsys/net1")
-      assert(q.map(_.jobName) == Seq("job1", "job2"))
-      assert(q.forall(_.status == ExecutionStatus.Waiting))
-    }
-
-    test(s"[$kind] legal transitions waiting -> running -> succeeded, with audit trail") {
-      val store = mk()
-      val e = store.enqueueJob("n", ref("j"), 1)
-      store.transitionToRunning(e.id)
-      assert(store.get(e.id).get.startedAt.isDefined)
-      store.transitionToSucceeded(e.id)
-      assert(store.get(e.id).get.status == ExecutionStatus.Succeeded)
-      assert(store.stateTransitions.map(_.status) ==
-        Seq("waiting", "running", "succeeded"))
-    }
-
-    test(s"[$kind] illegal transitions raise; running re-claim is legal") {
-      val store = mk()
-      val e = store.enqueueJob("n", ref("j"), 1)
-      intercept[IllegalJobStateException](store.transitionToSucceeded(e.id))
-      store.transitionToRunning(e.id)
-      // a crashed runner leaves 'running'; a restart must be able to
-      // re-claim it rather than demand --clear-queue
-      store.transitionToRunning(e.id)
-      store.transitionToSucceeded(e.id)
-      intercept[IllegalJobStateException](store.transitionToRunning(e.id))
-    }
-
-    test(s"[$kind] failed job can re-run (failed -> running)") {
-      val store = mk()
-      val e = store.enqueueJob("n", ref("j"), 1)
-      store.transitionToRunning(e.id)
-      store.transitionToFailed(e.id, "boom")
-      assert(store.get(e.id).get.message == "boom")
-      store.transitionToRunning(e.id)
-      assert(store.get(e.id).get.status == ExecutionStatus.Running)
-    }
-
-    test(s"[$kind] queue consume stops at first failure; restore skips succeeded") {
-      val store = mk()
-      val q = new DatabaseTaskQueue(store, "subsys/net1", "host:1")
-      Seq("a", "b", "c").foreach(n => q.enqueue(ref(n)))
-      val r = q.consumeEach { j =>
-        if (j.name == "b") JobResult.failure("b failed") else JobResult.success
-      }
-      assert(!r.success)
-      assert(store.enqueuedJobs("subsys/net1").map(_.jobName) == Seq("b", "c"))
-      // restart: a fresh queue restores only the unfinished jobs
-      val q2 = new DatabaseTaskQueue(store, "subsys/net1", "host:2")
-      assert(q2.restoreJobnet())
-      assert(q2.queued.map(_.name) == Seq("b", "c"))
-      assert(q2.consumeEach(_ => JobResult.success).success)
-      assert(store.enqueuedJobs("subsys/net1").isEmpty)
-    }
-
-    test(s"[$kind] unexpected exception still writes failed state") {
-      val store = mk()
-      val q = new DatabaseTaskQueue(store, "n", "host:1")
-      q.enqueue(ref("a"))
-      intercept[RuntimeException](q.consumeEach(_ => throw new RuntimeException("kaboom")))
-      assert(store.all.head.status == ExecutionStatus.Failed)
-    }
-
-    test(s"[$kind] jobnet lock excludes a second executor") {
-      val store = mk()
-      val q1 = new DatabaseTaskQueue(store, "n", "host:1", enableLock = true)
-      q1.enqueue(ref("a"))
-      store.lock("n", "host:9")
-      intercept[IllegalJobStateException](q1.consumeEach(_ => JobResult.success))
-      store.unlock("n", "host:9")
-      assert(q1.consumeEach(_ => JobResult.success).success)
-    }
-
-    test(s"[$kind] cancelJobnet cancels all non-terminal executions") {
-      val store = mk()
-      store.enqueueJob("n", ref("a"), 1)
-      store.enqueueJob("n", ref("b"), 2)
-      store.cancelJobnet("n", "operator cancel")
-      assert(store.all.forall(_.status == ExecutionStatus.Canceled))
-      assert(store.enqueuedJobs("n").isEmpty)
-    }
+  test("[jdbc] enqueue creates waiting executions in sequence order") {
+    val store = mk()
+    store.enqueueJob("subsys/net1", ref("job1"), 1)
+    store.enqueueJob("subsys/net1", ref("job2"), 2)
+    val q = store.enqueuedJobs("subsys/net1")
+    assert(q.map(_.jobName) == Seq("job1", "job2"))
+    assert(q.forall(_.status == ExecutionStatus.Waiting))
   }
 
-  test("tsv store persists and reloads across instances") {
-    val p = graft.core.TempDirs.create("graft-exec").resolve("state.tsv")
-    val s1 = new ExecutionStore(Some(p))
-    val e = s1.enqueueJob("n", ref("a\tweird\nname"), 1)
-    s1.transitionToRunning(e.id)
-    s1.transitionToFailed(e.id, "msg with\ttab")
-    val s2 = new ExecutionStore(Some(p))
-    val reloaded = s2.get(e.id).get
-    assert(reloaded.jobName == "a\tweird\nname")
-    assert(reloaded.status == ExecutionStatus.Failed)
-    assert(reloaded.message == "msg with\ttab")
-    // ids keep incrementing after reload
-    assert(s2.enqueueJob("n", ref("b"), 2).id > e.id)
+  test("[jdbc] legal transitions waiting -> running -> succeeded, with audit trail") {
+    val store = mk()
+    val e = store.enqueueJob("n", ref("j"), 1)
+    store.transitionToRunning(e.id)
+    assert(store.get(e.id).get.startedAt.isDefined)
+    store.transitionToSucceeded(e.id)
+    assert(store.get(e.id).get.status == ExecutionStatus.Succeeded)
+    assert(store.stateTransitions.map(_.status) ==
+      Seq("waiting", "running", "succeeded"))
+  }
+
+  test("[jdbc] illegal transitions raise; running re-claim is legal") {
+    val store = mk()
+    val e = store.enqueueJob("n", ref("j"), 1)
+    intercept[IllegalJobStateException](store.transitionToSucceeded(e.id))
+    store.transitionToRunning(e.id)
+    // a crashed runner leaves 'running'; a restart must be able to
+    // re-claim it rather than demand --clear-queue
+    store.transitionToRunning(e.id)
+    store.transitionToSucceeded(e.id)
+    intercept[IllegalJobStateException](store.transitionToRunning(e.id))
+  }
+
+  test("[jdbc] failed job can re-run (failed -> running)") {
+    val store = mk()
+    val e = store.enqueueJob("n", ref("j"), 1)
+    store.transitionToRunning(e.id)
+    store.transitionToFailed(e.id, "boom")
+    assert(store.get(e.id).get.message == "boom")
+    store.transitionToRunning(e.id)
+    assert(store.get(e.id).get.status == ExecutionStatus.Running)
+  }
+
+  test("[jdbc] queue consume stops at first failure; restore skips succeeded") {
+    val store = mk()
+    val q = new DatabaseTaskQueue(store, "subsys/net1", "host:1")
+    Seq("a", "b", "c").foreach(n => q.enqueue(ref(n)))
+    val r = q.consumeEach { j =>
+      if (j.name == "b") JobResult.failure("b failed") else JobResult.success
+    }
+    assert(!r.success)
+    assert(store.enqueuedJobs("subsys/net1").map(_.jobName) == Seq("b", "c"))
+    // restart: a fresh queue restores only the unfinished jobs
+    val q2 = new DatabaseTaskQueue(store, "subsys/net1", "host:2")
+    assert(q2.restoreJobnet())
+    assert(q2.queued.map(_.name) == Seq("b", "c"))
+    assert(q2.consumeEach(_ => JobResult.success).success)
+    assert(store.enqueuedJobs("subsys/net1").isEmpty)
+  }
+
+  test("[jdbc] unexpected exception still writes failed state") {
+    val store = mk()
+    val q = new DatabaseTaskQueue(store, "n", "host:1")
+    q.enqueue(ref("a"))
+    intercept[RuntimeException](q.consumeEach(_ => throw new RuntimeException("kaboom")))
+    assert(store.all.head.status == ExecutionStatus.Failed)
+  }
+
+  test("[jdbc] jobnet lock excludes a second executor") {
+    val store = mk()
+    val q1 = new DatabaseTaskQueue(store, "n", "host:1", enableLock = true)
+    q1.enqueue(ref("a"))
+    store.lock("n", "host:9")
+    intercept[IllegalJobStateException](q1.consumeEach(_ => JobResult.success))
+    store.unlock("n", "host:9")
+    assert(q1.consumeEach(_ => JobResult.success).success)
+  }
+
+  test("[jdbc] cancelJobnet cancels all non-terminal executions") {
+    val store = mk()
+    store.enqueueJob("n", ref("a"), 1)
+    store.enqueueJob("n", ref("b"), 2)
+    store.cancelJobnet("n", "operator cancel")
+    assert(store.all.forall(_.status == ExecutionStatus.Canceled))
+    assert(store.enqueuedJobs("n").isEmpty)
   }
 
   test("jdbc store persists and reloads across connections") {

@@ -32,7 +32,7 @@ class ReferenceDbQueueSpec extends AnyFunSuite {
     JdbcExecutionStore.embedded(
       graft.core.TempDirs.create("graft-dbq").resolve("db"))
 
-  private def enqueue(store: ExecutionStoreApi, jobnetId: String,
+  private def enqueue(store: JdbcExecutionStore, jobnetId: String,
       executorId: String, refs: Seq[JobRef],
       enableLock: Boolean = false): DatabaseTaskQueue = {
     val q = new DatabaseTaskQueue(store, jobnetId, executorId, enableLock)

@@ -5,13 +5,12 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Structured Streaming layer: AvailableNow exactly-once load, watermark +
-  * window aggregation, flatMapGroupsWithState sessionization.
+/** Structured Streaming layer: watermark + window aggregation,
+  * flatMapGroupsWithState sessionization.
   */
 class StructuredStreamsSpec extends AnyFunSuite {
 
@@ -140,43 +139,6 @@ class StructuredStreamsSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).toSeq
     assert(streamed.nonEmpty && streamed == batch,
       "stream-stream join must equal the batch interval join row for row")
-  }
-
-  test("loadAvailableNow drains queue once; re-run loads only new files") {
-    val queue = tmp("ss-queue")
-    val dest = tmp("ss-dest").resolve("out").toString
-    val ckpt = tmp("ss-ckpt").toString
-    val schema = StructType.fromDDL("id INT, name STRING")
-
-    Files.writeString(queue.resolve("f1.json"), """{"id":1,"name":"a"}""" + "\n")
-    Files.writeString(queue.resolve("f2.json"), """{"id":2,"name":"b"}""" + "\n")
-    StructuredStreams.loadAvailableNow(spark, queue.toString, schema, "json",
-      dest, ckpt).awaitTermination()
-    assert(spark.read.parquet(dest).count() == 2)
-
-    // second run: same files are NOT reloaded, a new file is
-    Files.writeString(queue.resolve("f3.json"), """{"id":3,"name":"c"}""" + "\n")
-    StructuredStreams.loadAvailableNow(spark, queue.toString, schema, "json",
-      dest, ckpt).awaitTermination()
-    val rows = spark.read.parquet(dest)
-    assert(rows.count() == 3)
-    assert(rows.agg(sum("id")).head.getLong(0) == 6)
-  }
-
-  test("loadAvailableNow applies the work_table SQL transform per batch") {
-    val queue = tmp("ss-queue2")
-    val dest = tmp("ss-dest2").resolve("out").toString
-    val ckpt = tmp("ss-ckpt2").toString
-    val schema = StructType.fromDDL("id INT, name STRING")
-    Files.writeString(queue.resolve("f1.json"),
-      """{"id":1,"name":"a"}""" + "\n" + """{"id":2,"name":"b"}""" + "\n")
-    StructuredStreams.loadAvailableNow(spark, queue.toString, schema, "json",
-      dest, ckpt,
-      Some("SELECT id * 10 AS id, upper(name) AS name FROM work_table"))
-      .awaitTermination()
-    val rows = spark.read.parquet(dest).orderBy("id").collect()
-    assert(rows.map(_.getInt(0)).toSeq == Seq(10, 20))
-    assert(rows.map(_.getString(1)).toSeq == Seq("A", "B"))
   }
 
   test("streaming near-dup flags exactly the batch simhash pair set across batches") {
