@@ -24,8 +24,6 @@ final class SqlStatement(val source: String, val declarations: Seq[String] = Nil
     s
   }
 
-  def isBound: Boolean = bound.isDefined
-
   def stripped: String =
     SqlStatement.stripMetadataComments(bound.getOrElse(
       throw new FatalError("SQL statement not bound")))

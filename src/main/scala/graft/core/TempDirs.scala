@@ -5,8 +5,9 @@ import java.util.Comparator
 
 /** Run-scoped temp directories with guaranteed cleanup.
   *
-  * Every scratch directory the engine creates (stream checkpoints, queue
-  * dirs, derby stores, spec fixtures) goes under ONE per-JVM root that a
+  * Every scratch directory the engine creates (stream checkpoints and
+  * sinks, queue dirs, derby stores, the layout/data-movement operators'
+  * rewrite targets, spec fixtures) goes under ONE per-JVM root that a
   * shutdown hook removes recursively. Before this existed, a full bench +
   * verify sweep left hundreds of `graft_stream_ckpt*` / queue / derby
   * directories in `/tmp` — harmless per run, but the sf1 scaling audit
@@ -22,8 +23,9 @@ object TempDirs {
 
   lazy val root: Path = {
     // SPARK_GRAFT_TMPROOT relocates all run-scoped scratch (stream
-    // checkpoints/sinks, queue dirs, derby stores) — e.g. onto a
-    // RAM-backed fs for I/O-bound sweeps. Default: java.io.tmpdir.
+    // checkpoints/sinks, queue dirs, derby stores, operator layouts) —
+    // e.g. onto a RAM-backed fs for I/O-bound sweeps. Default:
+    // java.io.tmpdir.
     val r = rootBase(sys.env.get("SPARK_GRAFT_TMPROOT")) match {
       case Some(base) =>
         Files.createTempDirectory(Files.createDirectories(base), "graft_run_")
@@ -51,6 +53,15 @@ object TempDirs {
     * `Files.createTempDirectory(prefix)` with end-of-run cleanup.
     */
   def create(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  /** The directory `<root>/<prefix>_<key>` (key sanitized to
+    * `[A-Za-z0-9_]`), created on first use and the SAME directory for
+    * every later call in this JVM — for operators that rewrite one
+    * scratch layout per input (e.g. per scale dir) and overwrite it on
+    * each run. Like every other scratch dir it goes at JVM exit.
+    */
+  def keyed(prefix: String, key: String): Path =
+    Files.createDirectories(root.resolve(s"${prefix}_${key.replaceAll("[^A-Za-z0-9]", "_")}"))
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -459,14 +459,6 @@ final class JdbcDataSource(val name: String, config: Map[String, String])
 
 final class FileDataSource(val name: String, val baseDir: Path) extends DataSource {
   def resolve(rel: String): Path = baseDir.resolve(rel)
-  def removeGlob(pattern: String): Int = {
-    val matcher = baseDir.getFileSystem.getPathMatcher("glob:" + pattern)
-    val removed = Files.walk(baseDir).iterator.asScala
-      .filter(p => Files.isRegularFile(p) && matcher.matches(baseDir.relativize(p)))
-      .toSeq
-    removed.foreach(Files.delete(_))
-    removed.size
-  }
 }
 
 /** Registry loaded from datasource.yml-style config

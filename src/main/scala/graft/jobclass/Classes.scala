@@ -3,9 +3,10 @@ package graft.jobclass
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.core._
-import graft.ds.CtTranslator
+import graft.ds.SparkDataSource
 
 /** The built-in job classes (reference: the jobclass directory, SURVEY §2.1). Each
   * `build` returns the action sequence the reference's script would run,
@@ -68,18 +69,12 @@ object InsertJobClass extends JobClass("insert") {
         if (p.bool("drop") && p.get("table-def").isDefined) {
           // rebuild path: stage into _wk from the .ct definition, then swap
           ds.stagedOverwrite(dest) { wk =>
-            val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-              Some(ds.qualify(wk)))
-            ds.sql(ct.createSql)
-            val retargeted = stmt.replace(java.util.regex.Pattern.quote(ds.qualify(dest)),
-              ds.qualify(wk))
-            ds.execScript(retargeted)
+            ds.sql(ctCreateSql(ds, ctx, p.string("table-def"), wk))
+            ds.execScript(retarget(stmt, ds, dest, wk))
           }
         } else {
           if (p.get("table-def").isDefined && !ds.tableExists(dest)) {
-            val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-              Some(ds.qualify(dest)))
-            ds.sql(ct.createSql)
+            ds.sql(ctCreateSql(ds, ctx, p.string("table-def"), dest))
           }
           ds.execScript(stmt)
         }
@@ -119,20 +114,20 @@ object InsertDeltaJobClass extends JobClass("insert-delta") {
           // delete-cond is implicit: overwritten partitions drop their old
           // rows (the reference's DELETE WHERE targets the same reload
           // window).
-          // newSession() shares the catalog but has its own SQLConf, so the
-          // dynamic overwrite mode is scoped to this statement — a
-          // concurrent job in the original session never observes it
-          val scoped = ds.spark.newSession()
-          scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          val insertSql = stmt.statements.mkString(";\n")
-            .replaceFirst("(?i)insert\\s+into", "INSERT OVERWRITE TABLE")
-          try scoped.sql(insertSql)
-          catch {
-            case e: JobError  => throw e
-            case e: Exception => throw new JobFailure(s"SQL failed: ${e.getMessage}", e)
+          // The dynamic overwrite mode lives in a clone of the job session
+          // (shared catalog, the job session's runtime conf copied), so it
+          // is scoped to this script: a concurrent job in the job session
+          // never observes it. The statements run one by one in the clone
+          // (a temp view made by one is visible to the next); only the
+          // INSERT INTO statements become overwrites.
+          val scoped = new SparkDataSource(ds.name, GraftBridge.sessionWithConf(ds.spark,
+            "spark.sql.sources.partitionOverwriteMode" -> "dynamic"), ds.defaultSchema)
+          stmt.statements.foreach { st =>
+            scoped.sql(if (SqlStatement.firstKeyword(st) != "insert") st
+              else st.replaceFirst("(?i)insert\\s+into", "INSERT OVERWRITE TABLE"))
           }
-          // the original session's relation cache is stale after a write
-          // from a cloned session — refresh so same-session reads see it
+          // the job session's relation cache is stale after a write from
+          // the clone — refresh so same-session reads see it
           ds.spark.catalog.refreshTable(ds.qualify(dest))
         case _ =>
           ds.stagedOverwrite(dest) { wk =>
@@ -140,9 +135,7 @@ object InsertDeltaJobClass extends JobClass("insert-delta") {
             ds.sql(s"CREATE TABLE ${ds.qualify(wk)} USING parquet AS " +
               s"SELECT * FROM ${ds.qualify(dest)} WHERE NOT ($cond)")
             // re-run the user INSERT against the staged table
-            val retargeted = stmt.replace(java.util.regex.Pattern.quote(ds.qualify(dest)),
-              ds.qualify(wk))
-            ds.execScript(retargeted)
+            ds.execScript(retarget(stmt, ds, dest, wk))
           }
       }
       if (p.bool("analyze")) ds.analyze(dest)
@@ -167,9 +160,7 @@ object CreateJobClass extends JobClass("create") {
     val dest = p.table("dest-table")
     Seq(Action("create") {
       if (p.bool("drop")) ds.dropForce(dest)
-      val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-        Some(ds.qualify(dest)))
-      ds.sql(ct.createSql)
+      ds.sql(ctCreateSql(ds, ctx, p.string("table-def"), dest))
       if (p.bool("analyze")) ds.analyze(dest)
     })
   }
@@ -219,9 +210,7 @@ object RebuildDropJobClass extends JobClass("rebuild-drop") {
     val stmt = bindSql(ctx.sqlText(p.string("sql-file"), vars), vars, ctx)
     Seq(Action("rebuild-drop") {
       ds.dropForce(dest)
-      val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-        Some(ds.qualify(dest)))
-      ds.sql(ct.createSql)
+      ds.sql(ctCreateSql(ds, ctx, p.string("table-def"), dest))
       ds.execScript(stmt)
       if (p.bool("analyze")) ds.analyze(dest)
     })
@@ -251,13 +240,9 @@ object RebuildRenameJobClass extends JobClass("rebuild-rename") {
       // dummy-create dest if absent so the rename pair always succeeds
       if (!ds.tableExists(dest)) ds.createDummyTable(dest)
       ds.stagedOverwrite(dest) { wk =>
-        val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-          Some(ds.qualify(wk)))
-        ds.sql(ct.createSql)
+        ds.sql(ctCreateSql(ds, ctx, p.string("table-def"), wk))
         // the reference rewrites $dest_table to the work table (:32-35)
-        val retargeted = stmt.replace(java.util.regex.Pattern.quote(ds.qualify(dest)),
-          ds.qualify(wk))
-        ds.execScript(retargeted)
+        ds.execScript(retarget(stmt, ds, dest, wk))
         if (p.bool("analyze")) ds.analyze(wk)
       }
     })
@@ -291,7 +276,7 @@ object LoadJobClass extends JobClass("load") {
       if (p.bool("drop")) {
         ds.dropForce(dest)
         p.stringOpt("table-def").foreach { td =>
-          ds.sql(CtTranslator.translate(ctx.ctText(td), Some(ds.qualify(dest))).createSql)
+          ds.sql(ctCreateSql(ds, ctx, td, dest))
         }
       } else if (p.bool("truncate")) {
         ds.truncate(dest)
@@ -299,7 +284,7 @@ object LoadJobClass extends JobClass("load") {
       if (!ds.tableExists(dest)) {
         p.stringOpt("table-def") match {
           case Some(td) =>
-            ds.sql(CtTranslator.translate(ctx.ctText(td), Some(ds.qualify(dest))).createSql)
+            ds.sql(ctCreateSql(ds, ctx, td, dest))
           case None => throw new JobError(s"load: table ${dest} does not exist and no table-def")
         }
       }

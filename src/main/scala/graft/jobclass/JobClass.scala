@@ -3,7 +3,7 @@ package graft.jobclass
 import java.nio.file.{Files, Path}
 
 import graft.core._
-import graft.ds.{DataSourceRegistry, SparkDataSource}
+import graft.ds.{CtTranslator, DataSourceRegistry, SparkDataSource}
 
 /** Execution context for compiled jobs (reference: lib/bricolage/context.rb):
   * home directory (fixture tree of subsystems), datasource registry, global
@@ -81,6 +81,20 @@ abstract class JobClass(val id: String) {
   protected def sparkDs(p: ParamValues, ctx: JobContext,
       param: String = "data-source", default: String = "sql"): SparkDataSource =
     ctx.registry.spark(p.stringOpt(param).getOrElse(default))
+
+  /** The CREATE TABLE statement of the `.ct` definition `tableDef`,
+    * retargeted at `table` (reference: user-authored DDL, SURVEY §1.2).
+    */
+  protected def ctCreateSql(ds: SparkDataSource, ctx: JobContext,
+      tableDef: String, table: TableSpec): String =
+    CtTranslator.translate(ctx.ctText(tableDef), Some(ds.qualify(table))).createSql
+
+  /** `stmt` with `$dest_table` (bound to dest's qualified name) rewritten
+    * to the work table `wk` (reference: rebuild-rename.rb:32-35).
+    */
+  protected def retarget(stmt: SqlStatement, ds: SparkDataSource,
+      dest: TableSpec, wk: TableSpec): SqlStatement =
+    stmt.replace(java.util.regex.Pattern.quote(ds.qualify(dest)), ds.qualify(wk))
 
   /** Bind a SQL script against the job's variables; ERB helpers see the
     * job's home/subsystem dirs (reference binds EmbeddedCodeAPI the same way).

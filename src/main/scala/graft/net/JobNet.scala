@@ -150,19 +150,6 @@ final class JobDAG(edges: Seq[(JobRef, JobRef)]) {
   private val succ: Map[String, Seq[JobRef]] =
     edges.groupBy(_._1.toString).view.mapValues(_.map(_._2)).toMap
 
-  /** Orphan diagnostic (reference: jobnet.rb:157-165 check_orphan — a
-    * non-dummy node with an empty dependency list is malformed). Flatten's
-    * dummy-start closure gives every real node a precedent, so nets built
-    * through `flatten` can't trip this; hand-built edge lists can.
-    */
-  def checkOrphans(): Unit = {
-    val hasPrecedent = edges.map(_._2.toString).toSet
-    nodes.filterNot(n => n.name.startsWith("@") || hasPrecedent.contains(n.toString))
-      .foreach { ref =>
-        throw new ParameterError(s"found orphan job in the jobnet: $ref")
-      }
-  }
-
   /** Kahn topological sort; raises on cycles (reference: jobnet.rb:148-155). */
   def sequentialJobs: Seq[JobRef] = {
     val inDeg = mutable.Map.empty[String, Int].withDefaultValue(0)

@@ -127,11 +127,9 @@ object ClusterOps {
     // would otherwise pick up the narrowed/widened width.
     val loopShuffle = math.max(8, p)
     val callerSpark = pairs.sparkSession
-    val loopSpark = org.apache.spark.sql.graftbridge.GraftBridge
-      .cloneSessionWithConf(callerSpark,
-        "spark.sql.shuffle.partitions" -> loopShuffle.toString)
     val edges = org.apache.spark.sql.graftbridge.GraftBridge
-      .ofRows(loopSpark, edgesRaw.repartition(p, col("src")).queryExecution.logical)
+      .withConf(edgesRaw.repartition(p, col("src")),
+        "spark.sql.shuffle.partitions" -> loopShuffle.toString)
       .persist()
 
     // persist (not an eager checkpoint — saves one job): round 0's two

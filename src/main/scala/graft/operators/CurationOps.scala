@@ -32,31 +32,12 @@ object CurationOps {
     * min(n/20, THIS) — the 5% fraction governs below `20 × cap` docs, the
     * absolute bound above). Production decontamination pipelines tune the
     * super-common-n-gram threshold per corpus (license headers vs forum
-    * boilerplate have very different df floors), so the bound is a
-    * documented knob, -Dgraft.containment.dfCap=N (default 512), not a
-    * constant buried in the operator. Read ONCE at class init so the
-    * REGISTERED pair — [[qContainment]]'s plan and [[qContainmentOracle]],
-    * both built from this value — can never disagree within one JVM.
-    * (Callers passing an explicit `dfCapAbs` to [[containment]] must pair
-    * it with [[containmentOracleSql]] at the same cap — see there.)
+    * boilerplate have very different df floors): such a caller passes its
+    * own `dfCapAbs` to [[containment]] and pairs it with
+    * [[containmentOracleSql]] at the same cap. The REGISTERED pair —
+    * [[qContainment]] and [[qContainmentOracle]] — both use this value.
     */
-  val containmentDfCap: Long = {
-    val raw = sys.props.getOrElse("graft.containment.dfCap", "512").trim
-    val v =
-      try raw.toLong
-      catch { case _: NumberFormatException =>
-        // fail fast WITH the knob's name: a bare .toLong here surfaces as
-        // ExceptionInInitializerError / NoClassDefFoundError far from the
-        // -D flag that caused it
-        throw new IllegalArgumentException(
-          s"-Dgraft.containment.dfCap must be a positive integer, got '$raw'")
-      }
-    require(v > 0,
-      s"-Dgraft.containment.dfCap must be positive, got $v (the operator" +
-        " and oracle would both floor it to 1 — reject the nonsensical" +
-        " setting instead of silently screening at df 1)")
-    v
-  }
+  val containmentDfCap: Long = 512L
 
   private val NumBuckets = 128 // hashed-feature dimensionality (DSIR uses
   // 10k buckets at production scale; the bucket table stays model-sized
@@ -459,10 +440,10 @@ object CurationOps {
   def containment(s: SparkSession, dir: String,
       dfCapAbs: Long = CurationOps.containmentDfCap): (DataFrame, () => Unit) = {
     // the df cap: the scale-invariant stopword FRACTION (df > 5% of docs)
-    // for small corpora, the absolute boilerplate bound (default 512,
-    // tunable — see [[CurationOps.containmentDfCap]]) at scale (see
-    // scaladoc); count(*) on parquet is a footer-metadata scalar, not a
-    // data scan
+    // for small corpora, the absolute boilerplate bound (512 unless the
+    // caller passes another, see [[CurationOps.containmentDfCap]]) at
+    // scale (see scaladoc); count(*) on parquet is a footer-metadata
+    // scalar, not a data scan
     val nDocs = graft.Tables.rowCount(s, dir, "documents")
     val dfCap = math.max(1L, math.min(nDocs / 20, dfCapAbs))
     // persisted: four consumers (df cap, eval side, train side, eval

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,9 +89,7 @@ object DataMovement {
     // key the scratch dir by scale dir: concurrent/interleaved runs at
     // different SFs (bench warmup at sf0.001, timed pass at sf0.1) must
     // not share a path
-    val out = Files.createDirectories(
-      Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_csv_roundtrip_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")).toString
+    val out = graft.core.TempDirs.keyed("graft_csv_roundtrip", dir).toString
     val src = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         round(col("l_quantity"), 2).as("qty"))
@@ -126,9 +122,7 @@ object DataMovement {
     * format a lake realistically has to ingest from.
     */
   def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createDirectories(
-      Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_orc_roundtrip_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")).toString
+    val out = graft.core.TempDirs.keyed("graft_orc_roundtrip", dir).toString
     t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       .write.mode(SaveMode.Overwrite).orc(out)
@@ -182,9 +176,7 @@ object DataMovement {
     * in LoadOptionsSpec.)
     */
   def qLoadMaxerror(s: SparkSession, dir: String): DataFrame = {
-    val out = Files.createDirectories(
-      Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_load_maxerror_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")).toString
+    val out = graft.core.TempDirs.keyed("graft_load_maxerror", dir).toString
     val src = t(s, dir, "lineitem")
       .select(col("l_orderkey"), round(col("l_quantity"), 2).as("qty"))
     src.select(concat_ws(",", col("l_orderkey"),

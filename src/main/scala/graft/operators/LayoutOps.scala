@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +28,7 @@ object LayoutOps {
   private def tag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   private def scratch(prefix: String, dir: String): String =
-    Files.createDirectories(
-      Paths.get(sys.props("java.io.tmpdir"), s"${prefix}_${tag(dir)}")).toString
+    graft.core.TempDirs.keyed(prefix, dir).toString
 
   /** Co-located join over bucketed tables: lineitem and orders are written
     * bucketed (8 buckets) + sorted on the join key, then joined. The merge
@@ -119,14 +116,6 @@ object LayoutOps {
       |  (SELECT min(strftime(ts, '%Y-%m-%d')) FROM events)
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** Default compacted-file size target. Conf-overridable
-    * (`graft.compaction.targetFileBytes`) so tests can exercise the
-    * byte-derived file count at toy scale factors.
-    */
-  private def targetFileBytes(s: SparkSession): Long =
-    s.conf.getOption("graft.compaction.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
-
   /** ceil(totalBytes / targetBytes), floored at one file. */
   private[operators] def compactionFileCount(totalBytes: Long, targetBytes: Long): Int =
     math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
@@ -160,12 +149,19 @@ object LayoutOps {
     * extra exchange re-buffers bytes the rewrite was going to move anyway
     * — compaction is IO-bound either way.
     */
-  def qCompaction(s: SparkSession, dir: String): DataFrame = {
+  def qCompaction(s: SparkSession, dir: String): DataFrame =
+    compaction(s, dir, 128L << 20)
+
+  /** [[qCompaction]] at any file-size target, so the spec can exercise
+    * the byte-derived file count at toy scale factors.
+    */
+  private[operators] def compaction(s: SparkSession, dir: String,
+      targetBytes: Long): DataFrame = {
     val smallDir = scratch("graft_smallfiles", dir)
     val compactDir = scratch("graft_compacted", dir)
     t(s, dir, "documents").repartition(64)
       .write.mode(SaveMode.Overwrite).parquet(smallDir)
-    val nFiles = compactionFileCount(dataBytes(s, smallDir), targetFileBytes(s))
+    val nFiles = compactionFileCount(dataBytes(s, smallDir), targetBytes)
     s.read.parquet(smallDir).repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(compactDir)
     s.read.parquet(compactDir)

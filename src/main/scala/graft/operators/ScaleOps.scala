@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.QueryDef
 import graft.Tables.t
@@ -310,42 +310,16 @@ object ScaleOps {
     * the fact table is dropped before the join exchange instead of after
     * it. Broadcast is disabled within the query scope because the bloom
     * path exists precisely for joins too big to broadcast (at real scale
-    * neither side fits); the query is materialized eagerly (a 2-row
-    * aggregate) so the conf scope closes with the call — later queries
-    * see untouched session confs. `ScaleOpsSpec` asserts the filter is
-    * present in the executed plan.
+    * neither side fits). The plan is built in the caller's session and
+    * scoped with `GraftBridge.withConf`, so the settings apply when the
+    * returned frame runs and never reach the caller's session;
+    * `ScaleOpsSpec` asserts the filter is in its executed plan.
     */
   def qRuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val rows = runtimeFilterAgg(s, dir).collect()
-      val schema = StructType(Seq(
-        StructField("l_linestatus", org.apache.spark.sql.types.StringType),
-        StructField("n_items", LongType),
-        StructField("revenue", org.apache.spark.sql.types.DoubleType)))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  /** The lazy join+aggregate under whatever confs the caller set —
-    * shared by [[qRuntimeFilter]] (bloom confs scoped around an eager
-    * collect) and `ScaleOpsSpec` (which executes it with the confs held
-    * open to assert `bloom_filter_might_contain` in the executed plan).
-    */
-  private[operators] def runtimeFilterAgg(s: SparkSession, dir: String): DataFrame = {
     val ord = t(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
-    t(s, dir, "lineitem")
+    val agg = t(s, dir, "lineitem")
       .select("l_orderkey", "l_linestatus", "l_extendedprice", "l_discount")
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy("l_linestatus")
@@ -356,6 +330,11 @@ object ScaleOps {
             .cast("decimal(30,6)")), 2).cast("double")
           .as("revenue"))
       .orderBy("l_linestatus")
+    GraftBridge.withConf(agg,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
   }
 
   val qRuntimeFilterOracle: String =
@@ -382,43 +361,19 @@ object ScaleOps {
     * asserts the optimized join tree differs from the written order and
     * that per-table row counts are present in the plan stats.
     *
-    * Conf scope closed by eager materialization (5-row aggregate), the
-    * [[qRuntimeFilter]] idiom. The managed-table writes are the ANALYZE
-    * surface (stats attach to catalog tables, not paths) — scratch
-    * tables keyed by scale dir, the [[LayoutOps.qBucketedJoin]] mold.
+    * The CBO settings scope the returned frame (the [[qRuntimeFilter]]
+    * idiom). The managed-table writes are the ANALYZE surface (stats
+    * attach to catalog tables, not paths) — scratch tables keyed by scale
+    * dir, the [[LayoutOps.qBucketedJoin]] mold.
     */
   def qCboReorder(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val rows = cboReorderAgg(s, dir).collect()
-      val schema = StructType(Seq(
-        StructField("o_orderpriority", org.apache.spark.sql.types.StringType),
-        StructField("n_orders", LongType),
-        StructField("total_price", org.apache.spark.sql.types.DoubleType)))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  /** Prepares ANALYZEd scratch tables and returns the lazy worst-order
-    * join — shared by [[qCboReorder]] and the spec (which compares the
-    * optimized join tree with CBO on vs off).
-    */
-  private[operators] def cboReorderAgg(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (ordT, custT, natT) = (s"ord_cbo_$tag", s"cust_cbo_$tag", s"nat_cbo_$tag")
     // external tables on a scratch path, dropped up front: a MANAGED
     // table's warehouse location outlives the in-memory catalog across
     // JVM runs, so a second process would hit LOCATION_ALREADY_EXISTS on
     // create (the driver's gate runs each query in a fresh JVM)
-    val base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_cbo_$tag")).toString
+    val base = graft.core.TempDirs.keyed("graft_cbo", dir).toString
     val srcs = Seq(
       ordT -> t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"),
@@ -440,14 +395,16 @@ object ScaleOps {
       df.write.mode("overwrite").option("path", s"$base/$tb").saveAsTable(tb)
       s.sql(s"ANALYZE TABLE $tb COMPUTE STATISTICS FOR COLUMNS ${statCols(tb)}")
     }
-    s.sql(
+    GraftBridge.withConf(s.sql(
       s"""SELECT o_orderpriority, count(*) AS n_orders,
          |  round(sum(o_totalprice), 2) AS total_price
          |FROM $ordT o
          |JOIN $custT c ON o.o_custkey = c.c_custkey
          |JOIN $natT n ON c.c_nationkey = n.n_nationkey
          |WHERE n.n_name = 'NATION_7'
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")
   }
 
   val qCboReorderOracle: String =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.QueryDef
@@ -20,32 +21,26 @@ import graft.QueryDef
   */
 object StreamOps {
 
-  /** Run `body` with `spark.sql.shuffle.partitions` = 2 (env-overridable),
-    * restoring the session value after. A stateful streaming query
-    * materializes ONE state-store instance (+ its checkpoint files) PER
-    * shuffle partition per stateful operator; at the correctness gate's
-    * data volume the batch-sized 32 leaves every store nearly empty while
-    * paying 32 stores' worth of checkpoint IO per micro-batch. The round-17
-    * width sweep (isolated min-of-4 per query at sf0.1, widths 8/4/2/1)
-    * measured 2 as the optimum: state-store-bound queries drop hard
-    * (sessions 2.04→1.56, join 3.11→2.71, enriched 1.97→1.82, cdc
-    * 1.53→1.42) while 1 serializes the stateful compute (join 4.19) and
-    * only the pure window aggregate pays ~0.1 s vs 8. Results are
-    * unchanged (the partition count is sealed into each fresh checkpoint,
-    * so this never conflicts with a resumed query). A production
-    * deployment sizes this to throughput via SPARK_GRAFT_STREAM_PARTITIONS,
-    * not to the batch session default. (The same sweep rejected the
-    * RocksDB provider for these drain-once queries — per-store instance
-    * startup regressed join 3.11→3.75 — and found a RAM-backed
+  /** The shuffle width every drained streaming query runs at. A stateful
+    * streaming query materializes ONE state-store instance (+ its
+    * checkpoint files) PER shuffle partition per stateful operator; at the
+    * correctness gate's data volume the batch-sized 32 leaves every store
+    * nearly empty while paying 32 stores' worth of checkpoint IO per
+    * micro-batch. The round-17 width sweep (isolated min-of-4 per query at
+    * sf0.1, widths 8/4/2/1) measured 2 as the optimum: state-store-bound
+    * queries drop hard (sessions 2.04→1.56, join 3.11→2.71, enriched
+    * 1.97→1.82, cdc 1.53→1.42) while 1 serializes the stateful compute
+    * (join 4.19) and only the pure window aggregate pays ~0.1 s vs 8.
+    * Results are unchanged (the partition count is sealed into each fresh
+    * checkpoint, so this never conflicts with a resumed query). These are
+    * oracle-gated operators, not a deployment path: a production stream
+    * sizes its width to throughput. (The same sweep rejected the RocksDB
+    * provider for these drain-once queries — per-store instance startup
+    * regressed join 3.11→3.75 — and found a RAM-backed
     * SPARK_GRAFT_TMPROOT worth ~0.2 s on sessions only, both left at
     * their defaults.)
     */
-  private def withStreamPartitions[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "2"))
-    try body finally s.conf.set(key, saved)
-  }
+  private val StreamPartitions = "2"
 
   /** File-stream source for `<dir>/<name>.parquet` in BOTH testdata
     * layouts: the driver's single-file-per-table layout (stream the
@@ -109,25 +104,32 @@ object StreamOps {
 
   /** Drain `stream` once — `Trigger.AvailableNow` over a fresh checkpoint,
     * so every call reprocesses the whole input — and read the result back
-    * as a batch frame. The output mode picks the sink. `complete` goes to
-    * a memory sink, the only sink that accepts complete mode; it holds
-    * the re-emitted aggregate on the driver, so only bounded aggregates
-    * use it. `append` goes to a parquet files sink, which keeps a
-    * corpus-proportional output on executors/disk; it is read back with
-    * the query's schema, so a zero-row drain reads back empty instead of
-    * failing schema inference.
+    * as a batch frame. Only the streaming query runs in a scoped session
+    * (`GraftBridge.withConf`) at [[StreamPartitions]] plus `confs`; the
+    * frame returned is in the caller's session, so batch plans built on it
+    * keep the caller's shuffle width. The output mode picks the sink.
+    * `complete` goes to a memory sink, the only sink that accepts complete
+    * mode; it holds the re-emitted aggregate on the driver, so only
+    * bounded aggregates use it. `append` goes to a parquet files sink,
+    * which keeps a corpus-proportional output on executors/disk; it is
+    * read back with the query's schema, so a zero-row drain reads back
+    * empty instead of failing schema inference.
     */
-  private def drain(stream: Dataset[_], outputMode: String): DataFrame = {
+  private def drain(stream: Dataset[_], outputMode: String,
+      confs: (String, String)*): DataFrame = {
     val s = stream.sparkSession
+    val scoped = GraftBridge.withConf(stream.toDF(),
+      ("spark.sql.shuffle.partitions" -> StreamPartitions) +: confs: _*)
     val ckpt = graft.core.TempDirs.create("graft_stream_ckpt")
-    val writer = stream.writeStream.outputMode(outputMode)
+    val writer = scoped.writeStream.outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckpt.toString)
     outputMode match {
       case "complete" =>
         val sink = "stream_" + ckpt.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
         writer.format("memory").queryName(sink).start().awaitTermination()
-        try s.table(sink) finally s.catalog.dropTempView(sink)
+        // the sink's view lives in the scoped session, dropped with it
+        GraftBridge.ofRows(s, scoped.sparkSession.table(sink).queryExecution.analyzed)
       case "append" =>
         val sinkDir = graft.core.TempDirs.create("graft_stream_sink").toString
         writer.format("parquet").option("path", sinkDir).start().awaitTermination()
@@ -147,7 +149,7 @@ object StreamOps {
     * watermark bounds the state store to open windows. At 100 TB the same
     * query runs incrementally over arriving files instead of draining.
     */
-  def qStreamHourly(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamHourly(s: SparkSession, dir: String): DataFrame = {
     val agg = graft.streaming.StructuredStreams
       .windowedEventStats(eventStream(s, dir), "1 hour", "1 hour")
     // complete re-emits all windows; append would hold open windows back
@@ -173,7 +175,7 @@ object StreamOps {
     * equal to the batch join + aggregate in DuckDB. The join is size
     * -chosen, not hinted (see the helper's doc).
     */
-  def qStreamEnriched(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamEnriched(s: SparkSession, dir: String): DataFrame = {
     val ev = eventStream(s, dir)
     val dim = graft.Tables.t(s, dir, "events")
       .select(col("user_id")).distinct()
@@ -206,7 +208,7 @@ object StreamOps {
     * each micro-batch's versions before the shuffle, exactly like the
     * batch plan.
     */
-  def qStreamCdcLatest(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamCdcLatest(s: SparkSession, dir: String): DataFrame = {
     val agg = eventStream(s, dir).groupBy("user_id")
       .agg(count(lit(1)).as("n_versions"),
         max(struct(col("ts"), col("event_id"),
@@ -248,7 +250,7 @@ object StreamOps {
     * p_value) BEFORE the sink so the materialized table is as narrow as
     * the downstream aggregate needs.
     */
-  def qStreamJoin(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
     def side(tp: String, pfx: String) = eventStream(s, dir)
       .filter(col("event_type") === tp)
       .select(col("user_id").as(s"${pfx}_user"), col("ts").as(s"${pfx}_ts"),
@@ -291,32 +293,22 @@ object StreamOps {
     * RocksDB store, shuffled by source key — admission of a firehose
     * costs a narrow (source, doc_id, n_tokens) shuffle, never the text.
     */
-  def qStreamTokenBudget(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamTokenBudget(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val budget = 700L
     val docs = streamTable(s, dir, "documents")
       .selectExpr("source", "doc_id",
         "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens")
       .as[graft.streaming.StructuredStreams.BudgetDoc]
-    // the v2 state API requires the RocksDB provider; scope it to this
-    // query so batch queries keep the session default
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // append: the emitted set is ONE ROW PER DOCUMENT (every admission
-      // decision), so the driver holds only the per-source Long state
-      drain(graft.streaming.StructuredStreams.streamingTokenBudget(docs, budget), "append")
-        .select(col("source"), col("doc_id"), col("admitted"),
-          col("spent_after"))
-        .orderBy("source", "doc_id")
-    } finally {
-      prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+    // append: the emitted set is ONE ROW PER DOCUMENT (every admission
+    // decision), so the driver holds only the per-source Long state. The
+    // v2 state API requires the RocksDB provider, scoped to the drain.
+    drain(graft.streaming.StructuredStreams.streamingTokenBudget(docs, budget), "append",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .select(col("source"), col("doc_id"), col("admitted"),
+        col("spent_after"))
+      .orderBy("source", "doc_id")
   }
 
   val qStreamTokenBudgetOracle: String =
@@ -355,7 +347,7 @@ object StreamOps {
     * priorities, weighted) per-stratum sample in O(k · strata) state,
     * emitted on every micro-batch in update/complete mode.
     */
-  def qStreamReservoir(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamReservoir(s: SparkSession, dir: String): DataFrame = {
     val docs = streamTable(s, dir, "documents")
       .select(col("lang"), md5(encode(col("text"), "UTF-8")).as("priority"),
         col("doc_id"))
@@ -395,7 +387,7 @@ object StreamOps {
     * operators the native `session_window`/window aggregates can't
     * express (arbitrary fold + explicit timeout policy).
     */
-  def qStreamSessions(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = eventStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
@@ -463,7 +455,7 @@ object StreamOps {
     * BECAUSE late rows are dropped — this operator is the measurement of
     * that trade.
     */
-  def qStreamLateDrop(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
+  def qStreamLateDrop(s: SparkSession, dir: String): DataFrame = {
     val base = graft.core.TempDirs.create("graft_stream_late").toString
     val cols = graft.Tables.t(s, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"))

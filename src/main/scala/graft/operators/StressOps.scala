@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.QueryDef
 import graft.Tables.t
@@ -134,60 +135,12 @@ object StressOps {
     * survivable at 100 TB (salting is for skew you know about; AQE is for
     * skew you don't). Thresholds are scoped down so the optimization
     * triggers at test SF (at production scale the defaults fire on real
-    * partition sizes).
-    * Conf scope is closed by eager materialization (the 50-row
-    * aggregate), the [[ScaleOps.qRuntimeFilter]] idiom; `StressOpsSpec`
-    * asserts `skew=true` lands in the executed join.
+    * partition sizes). The plan is built in the caller's session and scoped with
+    * `GraftBridge.withConf` (the [[ScaleOps.qRuntimeFilter]] idiom), so
+    * the split shows in the returned frame's own executed plan;
+    * `StressOpsSpec` asserts `skew=true` lands in it.
     */
   def qStressAqeSkew(s: SparkSession, dir: String): DataFrame = {
-    val confs = aqeSkewConfs(s, dir)
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val rows = aqeSkewAgg(s, dir).collect()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_events",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("weighted",
-          org.apache.spark.sql.types.LongType)))
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  /** Skew-split thresholds DERIVED FROM INPUT SIZE (one FS metadata call,
-    * never a data scan): the hot partition carries ~50% of the fact rows,
-    * so a threshold of input/32 sits well under it at every SF while the
-    * advisory size splits it into a handful of tasks instead of hundreds
-    * (a fixed byte constant either misses the split at toy SF or
-    * shatters the bench SF into confetti). Coalescing is disabled in
-    * scope — it otherwise merges the small partitions BEFORE skew
-    * detection sizes the median against the hot one.
-    */
-  private[operators] def aqeSkewConfs(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val len = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-    Seq(
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
-        math.max(512L, len / 64).toString,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-        math.max(256L, len / 128).toString,
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-  }
-
-  /** The lazy skewed join+aggregate — shared by [[qStressAqeSkew]] and
-    * the spec (which holds the confs open to inspect the executed plan).
-    */
-  private[operators] def aqeSkewAgg(s: SparkSession, dir: String): DataFrame = {
     // A skewed reduce partition can only be split on MAP-output block
     // boundaries, and the toy-SF events file is ONE parquet row group —
     // one non-empty map block, unsplittable no matter how skewed
@@ -211,7 +164,7 @@ object StressOps {
     // RDD-unpersist discipline.
     val dim = fact.select("k").distinct().withColumn("attr", col("k") + 1L)
       .localCheckpoint()
-    fact.join(dim.hint("merge"), Seq("k"))
+    val agg = fact.join(dim.hint("merge"), Seq("k"))
       // the explicit exchange decouples the aggregate from the join
       // stage: fused directly, the aggregate's required hash(k)
       // distribution pins the join output and OptimizeSkewedJoin backs
@@ -223,6 +176,32 @@ object StressOps {
       .agg(count(lit(1)).as("n_events"),
         sum(col("measure") * col("attr")).as("weighted"))
       .orderBy("k")
+    GraftBridge.withConf(agg, aqeSkewConfs(s, dir): _*)
+  }
+
+  /** Skew-split thresholds DERIVED FROM INPUT SIZE (one FS metadata call,
+    * never a data scan): the hot partition carries ~50% of the fact rows,
+    * so a threshold of input/32 sits well under it at every SF while the
+    * advisory size splits it into a handful of tasks instead of hundreds
+    * (a fixed byte constant either misses the split at toy SF or
+    * shatters the bench SF into confetti). Coalescing is disabled in
+    * scope — it otherwise merges the small partitions BEFORE skew
+    * detection sizes the median against the hot one.
+    */
+  private def aqeSkewConfs(s: SparkSession, dir: String): Seq[(String, String)] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+    val len = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    Seq(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        math.max(512L, len / 64).toString,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        math.max(256L, len / 128).toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
   }
 
   /** Two-phase aggregation under the same 50% hot key — the groupBy-side

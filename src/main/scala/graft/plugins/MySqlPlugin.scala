@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.ds.{CtTranslator, ObjectStore, SparkDataSource}
+import graft.ds.{ObjectStore, SparkDataSource}
 import graft.jobclass._
 
 /** Out-of-core job classes mirroring the bricolage-mysql plugin's surface
@@ -139,9 +139,8 @@ object MySqlPlugin {
         val dumped = applyDumpOptions(src.table(srcTable), dumpOpts)
         val url = dumpJsonGz(dumped, store, prefix, p.bool("gzip"),
           deleteObjects = dumpOpts.get("delete_objects").exists(String.valueOf(_) == "true"))
-        val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-          Some(destDs.qualify(dest)))
-        publishRebuild(destDs, dest, Some(ct.createSql), wk => {
+        publishRebuild(destDs, dest,
+          Some(ctCreateSql(destDs, ctx, p.string("table-def"), dest)), wk => {
           LoadOptions.withRead(destDs.spark, Seq(url), "json",
             p.pairs("options"), destDs.table(wk).schema) { df =>
             df.write.mode(SaveMode.Append).insertInto(destDs.qualify(wk))
@@ -207,9 +206,8 @@ object MySqlPlugin {
           throw new JobFailure(s"my-migrate: object exists (override: false): $s3File")
         store.put(tmpFile, s3File)
         if (p.bool("remove-tmp")) java.nio.file.Files.deleteIfExists(tmpFile)
-        val ct = CtTranslator.translate(ctx.ctText(p.string("table-def")),
-          Some(destDs.qualify(dest)))
-        publishRebuild(destDs, dest, Some(ct.createSql), wk => {
+        publishRebuild(destDs, dest,
+          Some(ctCreateSql(destDs, ctx, p.string("table-def"), dest)), wk => {
           LoadOptions.withRead(destDs.spark, Seq(store.urlString(s3File)), "json",
             p.pairs("options"), destDs.table(wk).schema) { df =>
             df.write.mode(SaveMode.Append).insertInto(destDs.qualify(wk))

@@ -40,7 +40,7 @@ object Cli {
     // The context comes first so its core count can be a builder option:
     // setting it on the built session instead would initialize the
     // session state eagerly (~0.5 s of startup) and keep the width from
-    // sessions made with newSession().
+    // any other session built on this context.
     val sc = SparkContext.getOrCreate(new SparkConf()
       .setMaster(master)
       .setAppName(appName)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The one `private[sql]` doorway a custom `LogicalPlan` operator needs:
-  * wrapping a hand-built logical node back into a `DataFrame`. Lives under
+/** The `private[sql]` doorways the engine needs: wrapping a hand-built
+  * logical node back into a `DataFrame`, running a plan under its own SQL
+  * settings, and releasing checkpoint blocks. Lives under
   * `org.apache.spark.sql` for package-private access — the standard
   * pattern of Spark-extension libraries (Delta, Iceberg, spark-rapids all
   * ship an identical shim); everything else in this repo stays on public
@@ -14,6 +15,32 @@ import org.apache.spark.sql.classic
 object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Clone the session (shared SparkContext + SharedState, so caches,
+    * checkpoints and catalog tables stay visible) with a copy of the
+    * caller's ENTIRE runtime SQL conf — a new session would silently drop
+    * runtime settings like the session time zone or the ObjectHashAggregate
+    * fallback threshold — then apply per-scope overrides. This is the one
+    * way a query or statement gets its own settings: the shared session's
+    * conf is never mutated, so nothing planning concurrently in it (test
+    * suites and jobs share one session) can observe the override.
+    */
+  def sessionWithConf(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val cloned = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    overrides.foreach { case (k, v) => cloned.conf.set(k, v) }
+    cloned
+  }
+
+  /** `df`'s plan re-rooted into a [[sessionWithConf]] clone of its
+    * session carrying `overrides`. Build the plan in the caller's session
+    * (so `graft.Tables.t`'s per-session read cache never pins a clone) and
+    * scope it afterwards: optimizer, planner and AQE settings all apply
+    * when the returned frame is planned and executed, so its own executed
+    * plan shows what the overrides did. The analyzed plan moves as is —
+    * no re-resolution of names in the clone.
+    */
+  def withConf(df: DataFrame, overrides: (String, String)*): DataFrame =
+    ofRows(sessionWithConf(df.sparkSession, overrides: _*), df.queryExecution.analyzed)
 
   /** Release the storage blocks behind a `localCheckpoint`ed DataFrame.
     *
@@ -26,20 +53,6 @@ object GraftBridge {
     * checkpointed RDD and unpersists it directly; silently a no-op for
     * any other plan shape, so callers can use it unconditionally.
     */
-  /** Clone the session (shared SparkContext + SharedState, so caches and
-    * checkpoints stay visible) with a copy of the caller's ENTIRE runtime
-    * SQL conf — `newSession()` would silently drop session tuning like
-    * the ObjectHashAggregate fallback threshold — then apply per-scope
-    * overrides. This is how an iterative kernel gets its own shuffle
-    * width without mutating the shared session's conf out from under
-    * concurrently-planning queries (test suites share one session).
-    */
-  def cloneSessionWithConf(spark: SparkSession, overrides: (String, String)*): SparkSession = {
-    val cloned = spark.asInstanceOf[classic.SparkSession].cloneSession()
-    overrides.foreach { case (k, v) => cloned.conf.set(k, v) }
-    cloned
-  }
-
   def unpersistLocalCheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.collectLeaves().foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD =>

@@ -143,6 +143,47 @@ class JobClassSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic")
   }
 
+  test("insert-delta with partitioned-by runs a multi-statement script") {
+    spark.sql("DROP TABLE IF EXISTS app.delta_ms")
+    spark.sql("CREATE TABLE app.delta_ms (v INT) USING parquet PARTITIONED BY (dt STRING)")
+    spark.sql("INSERT INTO app.delta_ms VALUES (1, '2024-08-06'), (2, '2024-08-07')")
+    // a temp view, then the INSERT that reads it: each statement runs on
+    // its own, in one scoped session
+    val r = run("deltams.sql.job",
+      """/* class: insert-delta
+        |data-source: sql
+        |dest-table: app.delta_ms
+        |partitioned-by: dt
+        |delete-cond: "dt = '$data_date'" */
+        |CREATE OR REPLACE TEMP VIEW delta_ms_src AS SELECT 30 AS v, '$data_date' AS dt;
+        |INSERT INTO app.delta_ms SELECT v, dt FROM delta_ms_src;""".stripMargin)
+    assert(r.success, r.message)
+    val rows = spark.sql("SELECT dt, v FROM app.delta_ms ORDER BY dt").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(rows == Seq(("2024-08-06", 1), ("2024-08-07", 30)))
+  }
+
+  test("insert-delta with partitioned-by keeps the job session's runtime confs") {
+    spark.sql("DROP TABLE IF EXISTS app.delta_tz")
+    spark.sql("CREATE TABLE app.delta_tz (tz STRING) USING parquet PARTITIONED BY (dt STRING)")
+    spark.sql("INSERT INTO app.delta_tz VALUES ('none', '2024-08-06')")
+    val key = "spark.sql.session.timeZone"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    val r = try run("deltatz.sql.job",
+      """/* class: insert-delta
+        |data-source: sql
+        |dest-table: app.delta_tz
+        |partitioned-by: dt
+        |delete-cond: "dt = '$data_date'" */
+        |INSERT INTO app.delta_tz SELECT current_timezone(), '$data_date';""".stripMargin)
+    finally spark.conf.set(key, prior)
+    assert(r.success, r.message)
+    val rows = spark.sql("SELECT dt, tz FROM app.delta_tz ORDER BY dt").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows == Seq(("2024-08-06", "none"), ("2024-08-07", "America/Los_Angeles")))
+  }
+
   test("rebuild-rename swaps atomically and keeps old data on failure") {
     write("big.ct", "create table big (v int);")
     spark.sql("DROP TABLE IF EXISTS app.big")

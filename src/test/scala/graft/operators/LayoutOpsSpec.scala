@@ -63,17 +63,14 @@ class LayoutOpsSpec extends AnyFunSuite {
   }
 
   test("compaction derives its file count from bytes, content intact") {
-    import java.nio.file.{Files, Paths}
-    def parts(prefix: String, d: String): Long = {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val p = Paths.get(sys.props("java.io.tmpdir"), s"${prefix}_$tag")
-      Files.list(p).filter(_.toString.endsWith(".parquet")).count()
-    }
-    def smallBytes(d: String): Long = {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      LayoutOps.dataBytes(spark,
-        Paths.get(sys.props("java.io.tmpdir"), s"graft_smallfiles_$tag").toString)
-    }
+    import java.nio.file.{Files, Path}
+    // the operator's scratch layouts live under the run's TempDirs root
+    def scratch(prefix: String, d: String): Path =
+      graft.core.TempDirs.root.resolve(s"${prefix}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
+    def parts(prefix: String, d: String): Long =
+      Files.list(scratch(prefix, d)).filter(_.toString.endsWith(".parquet")).count()
+    def smallBytes(d: String): Long =
+      LayoutOps.dataBytes(spark, scratch("graft_smallfiles", d).toString)
     // at the default 128 MB target a toy table compacts to exactly 1 file
     val rows = LayoutOps.qCompaction(spark, dir).collect()
     assert(parts("graft_smallfiles", dir) >= 32, "fragmented layout not created")
@@ -84,17 +81,14 @@ class LayoutOpsSpec extends AnyFunSuite {
     // with a small target the derived count scales with input bytes: run
     // the same op at two SFs and check ceil(bytes/target) lands on disk
     val target = 64L * 1024
-    spark.conf.set("graft.compaction.targetFileBytes", target.toString)
-    try {
-      Seq(dir, "/root/testdata/sf0.1").foreach { d =>
-        LayoutOps.qCompaction(spark, d).collect()
-        val expected = LayoutOps.compactionFileCount(smallBytes(d), target)
-        assert(parts("graft_compacted", d) == expected,
-          s"$d: expected $expected derived files")
-      }
-      assert(smallBytes("/root/testdata/sf0.1") > smallBytes(dir),
-        "sf0.1 input must be larger for the scaling check to mean anything")
-    } finally spark.conf.unset("graft.compaction.targetFileBytes")
+    Seq(dir, "/root/testdata/sf0.1").foreach { d =>
+      LayoutOps.compaction(spark, d, target).collect()
+      val expected = LayoutOps.compactionFileCount(smallBytes(d), target)
+      assert(parts("graft_compacted", d) == expected,
+        s"$d: expected $expected derived files")
+    }
+    assert(smallBytes("/root/testdata/sf0.1") > smallBytes(dir),
+      "sf0.1 input must be larger for the scaling check to mean anything")
   }
 
   test("compactionFileCount is ceil(bytes/target) floored at one") {

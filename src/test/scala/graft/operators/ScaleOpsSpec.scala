@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -84,60 +87,54 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("runtime bloom filter lands in the lineitem scan and preserves results") {
-    val s = spark
-    val confs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val df = ScaleOps.runtimeFilterAgg(s, dir)
-      val filtered = df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      // BloomFilterMightContain prints as `might_contain`; the creation
-      // side shows up as the `bloom_filter_agg` subquery it reads
-      assert(plan.contains("might_contain") && plan.contains("bloom_filter_agg"),
-        s"no runtime bloom filter in plan:\n$plan")
-      // the public query (confs scoped internally) returns the same rows
-      val pub = ScaleOps.qRuntimeFilter(s, dir).collect()
-      assert(pub.map(_.toSeq).toSeq == filtered.map(_.toSeq).toSeq)
-      // and the session confs are back to what they were
-      confs.foreach { case (k, v) => assert(s.conf.get(k) == v) }
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+    val df = ScaleOps.qRuntimeFilter(spark, dir)
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    // BloomFilterMightContain prints as `might_contain`; the creation
+    // side shows up as the `bloom_filter_agg` subquery it reads
+    assert(plan.contains("might_contain") && plan.contains("bloom_filter_agg"),
+      s"no runtime bloom filter in plan:\n$plan")
+    // the same plan without the filter returns the same rows
+    val plain = GraftBridge.withConf(df,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")
+    assert(plain.collect().map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
+    assert(!plain.queryExecution.executedPlan.toString.contains("might_contain"))
   }
 
   test("CBO reorders the worst-order join using ANALYZE stats") {
-    val s = spark
-    val confs = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = confs.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      confs.foreach(k => s.conf.set(k, "false"))
-      val offDf = ScaleOps.cboReorderAgg(s, dir)
-      val offPlan = offDf.queryExecution.optimizedPlan.toString
-      val offRows = offDf.collect().map(_.toSeq).toSeq
-      confs.foreach(k => s.conf.set(k, "true"))
-      val onDf = ScaleOps.cboReorderAgg(s, dir)
-      val onPlan = onDf.queryExecution.optimizedPlan.toString
-      val onRows = onDf.collect().map(_.toSeq).toSeq
-      // stats exist and the optimizer used them to change the join tree
-      assert(onPlan != offPlan,
-        s"CBO did not reorder the join:\nON:\n$onPlan\nOFF:\n$offPlan")
-      assert(onRows == offRows, "reordering changed results")
-      // ANALYZE attached row counts the reorder can cost with
-      val leafStats = onDf.queryExecution.optimizedPlan.collectLeaves()
-        .map(_.stats.rowCount)
-      assert(leafStats.forall(_.nonEmpty), s"missing rowCount stats: $leafStats")
-      // the public query matches
-      val pub = ScaleOps.qCboReorder(s, dir).collect().map(_.toSeq).toSeq
-      assert(pub == onRows)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
+    val on = ScaleOps.qCboReorder(spark, dir)
+    val onRows = on.collect().map(_.toSeq).toSeq
+    assert(on.queryExecution.executedPlan.toString.contains("Join"),
+      s"no join executed:\n${on.queryExecution.executedPlan}")
+    val off = GraftBridge.withConf(on,
+      "spark.sql.cbo.enabled" -> "false", "spark.sql.cbo.joinReorder.enabled" -> "false")
+    val onPlan = on.queryExecution.optimizedPlan.toString
+    val offPlan = off.queryExecution.optimizedPlan.toString
+    // stats exist and the optimizer used them to change the join tree
+    assert(onPlan != offPlan,
+      s"CBO did not reorder the join:\nON:\n$onPlan\nOFF:\n$offPlan")
+    assert(off.collect().map(_.toSeq).toSeq == onRows, "reordering changed results")
+    // ANALYZE attached row counts the reorder can cost with
+    val rowCounts = on.queryExecution.optimizedPlan.collectLeaves().map {
+      case r: LogicalRelation => r.catalogTable.flatMap(_.stats).flatMap(_.rowCount)
+      case _ => None
+    }
+    assert(rowCounts.length == 3 && rowCounts.forall(_.nonEmpty),
+      s"missing rowCount stats: $rowCounts")
+  }
+
+  test("building, running and explaining scoped queries leaves the caller's confs unchanged") {
+    val queries = Seq[(SparkSession, String) => DataFrame](
+      ScaleOps.qRuntimeFilter, ScaleOps.qCboReorder, StressOps.qStressAqeSkew,
+      StreamOps.qStreamTokenBudget)
+    // a first build applies the session's one-time read settings
+    queries.foreach(q => q(spark, dir))
+    val before = spark.conf.getAll
+    queries.foreach { q =>
+      val df = q(spark, dir)
+      df.collect()
+      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(spark.conf.getAll == before)
     }
   }
 

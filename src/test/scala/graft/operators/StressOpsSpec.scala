@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.SparkTestBase
 import graft.Tables.t
@@ -44,8 +45,11 @@ class StressOpsSpec extends AnyFunSuite {
     // parallel sub-reads. Thresholds are lowered so the toy skew (50% of
     // rows on one key) crosses them; broadcast is disabled so the join
     // stays a shuffle join, the shape AQE skew handling applies to.
-    val s = spark
-    val tuned = Map(
+    val fact = spark.range(0, 60000).select(
+      when(col("id") % 2 === 0, 0L).otherwise(col("id")).as("k"),
+      col("id").as("v"))
+    val dim = spark.range(0, 2000).select(col("id").as("k"), (col("id") * 2).as("w"))
+    val joined = GraftBridge.withConf(fact.join(dim, Seq("k")),
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -53,46 +57,23 @@ class StressOpsSpec extends AnyFunSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = tuned.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      tuned.foreach { case (k, v) => s.conf.set(k, v) }
-      val fact = s.range(0, 60000).select(
-        when(col("id") % 2 === 0, 0L).otherwise(col("id")).as("k"),
-        col("id").as("v"))
-      val dim = s.range(0, 2000).select(col("id").as("k"), (col("id") * 2).as("w"))
-      val joined = fact.join(dim, Seq("k"))
-      // execute THIS plan (count() would build a separate QueryExecution
-      // and leave this one un-finalized) so AQE finalizes it
-      assert(joined.collect().length > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"AQE did not mark the skewed join:\n$plan")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
+    // execute THIS plan (count() would build a separate QueryExecution
+    // and leave this one un-finalized) so AQE finalizes it
+    assert(joined.collect().length > 0)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("skew=true"),
+      s"AQE did not mark the skewed join:\n$plan")
   }
 
   test("q_stress_aqe_skew gets skew=true on the real hot-key join") {
-    val s = spark
     // sf0.01: at sf0.001 the whole fact shuffle is a few KB and the skew
     // detector has nothing meaningful to size against
-    val skewDir = "/root/testdata/sf0.01"
-    val tuned = StressOps.aqeSkewConfs(s, skewDir).toMap
-    val saved = tuned.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      tuned.foreach { case (k, v) => s.conf.set(k, v) }
-      val df = StressOps.aqeSkewAgg(s, skewDir)
-      val rows = df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"AQE did not mark the hot-key join:\n$plan")
-      // the public query (confs scoped internally) returns the same rows
-      // and leaves the session confs untouched
-      val pub = StressOps.qStressAqeSkew(s, skewDir).collect()
-      assert(pub.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
-      tuned.foreach { case (k, v) => assert(s.conf.get(k) == v) }
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
+    val df = StressOps.qStressAqeSkew(spark, "/root/testdata/sf0.01")
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("skew=true"), s"AQE did not mark the hot-key join:\n$plan")
+    // the same plan without the split returns the same rows
+    val unsplit = GraftBridge.withConf(df, "spark.sql.adaptive.skewJoin.enabled" -> "false")
+    assert(unsplit.collect().map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
   }
 }

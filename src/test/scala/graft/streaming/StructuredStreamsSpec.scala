@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -366,27 +367,20 @@ class StructuredStreamsSpec extends AnyFunSuite {
 
     // the v2 state API requires the RocksDB provider; scope it to this
     // query so the rest of the suite keeps the default provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[BudgetDoc]
-      val q = StructuredStreams.streamingTokenBudget(in.toDS(), budget)
-        .writeStream.format("memory").queryName("budget_stream")
-        .outputMode("append").start()
-      in.addData(first.toSeq)
-      q.processAllAvailable()
-      in.addData(second.toSeq)
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-    val got = spark.table("budget_stream").collect()
+    val in = MemoryStream[BudgetDoc]
+    val scoped = GraftBridge.withConf(
+      StructuredStreams.streamingTokenBudget(in.toDS(), budget).toDF(),
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val q = scoped.writeStream.format("memory").queryName("budget_stream")
+      .outputMode("append").start()
+    in.addData(first.toSeq)
+    q.processAllAvailable()
+    in.addData(second.toSeq)
+    q.processAllAvailable()
+    q.stop()
+    // the memory sink's view lives in the scoped session
+    val got = scoped.sparkSession.table("budget_stream").collect()
       .map(r => StructuredStreams.BudgetDecision(
         r.getString(0), r.getLong(1), r.getBoolean(2), r.getLong(3))).toSet
     assert(got == expected,

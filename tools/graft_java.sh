@@ -30,13 +30,15 @@ MAIN="$1"; shift
 
 # Sweep scratch litter from pre-TempDirs rounds and from runs whose JVM
 # died before its shutdown hook (a fatal sf10 OOM leaves the graft_run_
-# root behind). The per-sf-dir caches (graft_bucketed__*, graft_cbo__*,
-# ...) are kept on purpose: they're bounded (one per sf dir) and reused.
-# Liveness, not mtime, decides: each graft_run_ root carries an
-# owner.pid (TempDirs) — a run alive longer than any mtime window (sf10
-# benches exceed 2h) must never have its scratch deleted mid-run.
-# Pidless dirs are pre-pidfile litter and keep the 2h mtime guard.
-for d in /tmp/graft_run_* /tmp/graft_stream_ckpt*; do
+# root behind). Liveness, not mtime, decides: each graft_run_ root
+# carries an owner.pid (TempDirs) — a run alive longer than any mtime
+# window (sf10 benches exceed 2h) must never have its scratch deleted
+# mid-run. Pidless dirs are litter of older builds and keep the 2h mtime
+# guard: stream checkpoints, and the per-sf-dir operator layouts
+# (graft_bucketed_*, graft_cbo_*, ...) that now live under the run root.
+for d in /tmp/graft_run_* /tmp/graft_stream_ckpt* \
+    /tmp/graft_{bucketed,day_part,smallfiles,compacted,schema_evo,dpp,cbo}_* \
+    /tmp/graft_{csv_roundtrip,orc_roundtrip,load_maxerror}_*; do
   [ -d "$d" ] || continue
   pid=$(cat "$d/owner.pid" 2>/dev/null || true)
   if [ -n "$pid" ] && kill -0 "$pid" 2>/dev/null; then continue; fi
