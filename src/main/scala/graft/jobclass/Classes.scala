@@ -100,11 +100,22 @@ object InsertDeltaJobClass extends JobClass("insert-delta") {
     StringParam("partitioned-by", optional = true),
     OptionalBoolParam("vacuum"), OptionalBoolParam("analyze"),
   )
+  /** The INSERT a `partitioned-by` script turns into an overwrite — found
+    * anywhere in a statement, so `WITH src AS (…) INSERT INTO …` counts.
+    */
+  private val InsertInto = "(?i)insert\\s+into"
+
   def build(p: ParamValues, vars: Variables, ctx: JobContext): Seq[Action] = {
     val ds = sparkDs(p, ctx)
     val dest = p.table("dest-table")
     val cond = vars.expand(p.string("delete-cond"))
     val stmt = bindSql(ctx.sqlText(p.string("sql-file"), vars), vars, ctx)
+    // each INSERT becomes its own partition overwrite, so a second one
+    // into the same partition would silently wipe the first one's rows
+    if (p.stringOpt("partitioned-by").isDefined &&
+        stmt.statements.map(InsertInto.r.findAllIn(_).size).sum > 1)
+      throw new ParameterError(
+        "insert-delta: a partitioned-by script must have at most one INSERT INTO")
     Seq(Action.explainable("insert-delta")(ds.explainScript(stmt)) {
       p.stringOpt("partitioned-by") match {
         case Some(_) if ds.tableExists(dest) =>
@@ -118,13 +129,12 @@ object InsertDeltaJobClass extends JobClass("insert-delta") {
           // (shared catalog, the job session's runtime conf copied), so it
           // is scoped to this script: a concurrent job in the job session
           // never observes it. The statements run one by one in the clone
-          // (a temp view made by one is visible to the next); only the
-          // INSERT INTO statements become overwrites.
+          // (a temp view made by one is visible to the next); the script's
+          // one INSERT INTO becomes the overwrite.
           val scoped = new SparkDataSource(ds.name, GraftBridge.sessionWithConf(ds.spark,
             "spark.sql.sources.partitionOverwriteMode" -> "dynamic"), ds.defaultSchema)
           stmt.statements.foreach { st =>
-            scoped.sql(if (SqlStatement.firstKeyword(st) != "insert") st
-              else st.replaceFirst("(?i)insert\\s+into", "INSERT OVERWRITE TABLE"))
+            scoped.sql(st.replaceFirst(InsertInto, "INSERT OVERWRITE TABLE"))
           }
           // the job session's relation cache is stale after a write from
           // the clone — refresh so same-session reads see it

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.QueryDef
 
@@ -105,9 +105,10 @@ object StreamOps {
   /** Drain `stream` once — `Trigger.AvailableNow` over a fresh checkpoint,
     * so every call reprocesses the whole input — and read the result back
     * as a batch frame. Only the streaming query runs in a scoped session
-    * (`GraftBridge.withConf`) at [[StreamPartitions]] plus `confs`; the
-    * frame returned is in the caller's session, so batch plans built on it
-    * keep the caller's shuffle width. The output mode picks the sink.
+    * (`GraftBridge.withConf`) at [[StreamPartitions]] plus `confs`, and
+    * its streaming listeners are released when it ends; the frame returned
+    * is in the caller's session, so batch plans built on it keep the
+    * caller's shuffle width. The output mode picks the sink.
     * `complete` goes to a memory sink, the only sink that accepts complete
     * mode; it holds the re-emitted aggregate on the driver, so only
     * bounded aggregates use it. `append` goes to a parquet files sink,
@@ -124,15 +125,19 @@ object StreamOps {
     val writer = scoped.writeStream.outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckpt.toString)
+    def run(w: DataStreamWriter[Row]): Unit = {
+      val q = w.start()
+      try q.awaitTermination() finally GraftBridge.releaseStreams(q)
+    }
     outputMode match {
       case "complete" =>
         val sink = "stream_" + ckpt.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
-        writer.format("memory").queryName(sink).start().awaitTermination()
+        run(writer.format("memory").queryName(sink))
         // the sink's view lives in the scoped session, dropped with it
         GraftBridge.ofRows(s, scoped.sparkSession.table(sink).queryExecution.analyzed)
       case "append" =>
         val sinkDir = graft.core.TempDirs.create("graft_stream_sink").toString
-        writer.format("parquet").option("path", sinkDir).start().awaitTermination()
+        run(writer.format("parquet").option("path", sinkDir))
         s.read.schema(stream.schema).parquet(sinkDir)
     }
   }

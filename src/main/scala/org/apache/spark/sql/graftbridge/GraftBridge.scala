@@ -1,16 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The `private[sql]` doorways the engine needs: wrapping a hand-built
   * logical node back into a `DataFrame`, running a plan under its own SQL
-  * settings, and releasing checkpoint blocks. Lives under
-  * `org.apache.spark.sql` for package-private access — the standard
-  * pattern of Spark-extension libraries (Delta, Iceberg, spark-rapids all
-  * ship an identical shim); everything else in this repo stays on public
-  * APIs.
+  * settings, and releasing checkpoint blocks and streaming listeners.
+  * Lives under `org.apache.spark.sql` for package-private access — the
+  * standard pattern of Spark-extension libraries (Delta, Iceberg,
+  * spark-rapids all ship an identical shim); everything else in this repo
+  * stays on public APIs.
   */
 object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -41,6 +44,24 @@ object GraftBridge {
     */
   def withConf(df: DataFrame, overrides: (String, String)*): DataFrame =
     ofRows(sessionWithConf(df.sparkSession, overrides: _*), df.queryExecution.analyzed)
+
+  /** Detach the streaming-query listener buses of `query`, a finished
+    * query started in a scoped session. A session's first streaming query
+    * builds its `StreamingQueryManager`, whose bus joins the context's
+    * listener bus and is never removed; a query makes two such sessions,
+    * the one it was started in and the clone it executes in (its state
+    * store coordinator lives there). Left attached, each drain would add
+    * two listeners that see every later event of the process.
+    */
+  def releaseStreams(query: StreamingQuery): Unit = {
+    val busField = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    busField.setAccessible(true)
+    val q = query.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    Seq(q.sparkSession, q.sparkSessionForStream).foreach { s =>
+      s.sparkContext.listenerBus.removeListener(
+        busField.get(s.streams).asInstanceOf[SparkListenerInterface])
+    }
+  }
 
   /** Release the storage blocks behind a `localCheckpoint`ed DataFrame.
     *

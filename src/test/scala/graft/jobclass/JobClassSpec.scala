@@ -163,6 +163,45 @@ class JobClassSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == Seq(("2024-08-06", 1), ("2024-08-07", 30)))
   }
 
+  test("insert-delta with partitioned-by overwrites for a CTE-prefixed INSERT") {
+    spark.sql("DROP TABLE IF EXISTS app.delta_cte")
+    spark.sql("CREATE TABLE app.delta_cte (v INT) USING parquet PARTITIONED BY (dt STRING)")
+    spark.sql("INSERT INTO app.delta_cte VALUES (1, '2024-08-06'), (2, '2024-08-07')")
+    val job =
+      """/* class: insert-delta
+        |data-source: sql
+        |dest-table: app.delta_cte
+        |partitioned-by: dt
+        |delete-cond: "dt = '$data_date'" */
+        |WITH src AS (SELECT 40 AS v, '$data_date' AS dt)
+        |INSERT INTO app.delta_cte SELECT v, dt FROM src;""".stripMargin
+    assert(run("deltacte.sql.job", job).success)
+    assert(run("deltacte.sql.job", job).success) // re-run replaces, never doubles
+    val rows = spark.sql("SELECT dt, v FROM app.delta_cte ORDER BY dt").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(rows == Seq(("2024-08-06", 1), ("2024-08-07", 40)))
+  }
+
+  test("insert-delta with partitioned-by rejects a second INSERT INTO") {
+    spark.sql("DROP TABLE IF EXISTS app.delta_two")
+    spark.sql("CREATE TABLE app.delta_two (v INT) USING parquet PARTITIONED BY (dt STRING)")
+    spark.sql("INSERT INTO app.delta_two VALUES (2, '2024-08-07')")
+    // as two overwrites the second would wipe the first one's rows
+    val r = run("deltatwo.sql.job",
+      """/* class: insert-delta
+        |data-source: sql
+        |dest-table: app.delta_two
+        |partitioned-by: dt
+        |delete-cond: "dt = '$data_date'" */
+        |INSERT INTO app.delta_two SELECT 50, '$data_date';
+        |INSERT INTO app.delta_two SELECT 60, '$data_date';""".stripMargin)
+    assert(!r.success)
+    assert(r.message.contains("at most one INSERT INTO"), r.message)
+    val rows = spark.sql("SELECT dt, v FROM app.delta_two").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(rows == Seq(("2024-08-07", 2)))
+  }
+
   test("insert-delta with partitioned-by keeps the job session's runtime confs") {
     spark.sql("DROP TABLE IF EXISTS app.delta_tz")
     spark.sql("CREATE TABLE app.delta_tz (tz STRING) USING parquet PARTITIONED BY (dt STRING)")

@@ -65,8 +65,7 @@ class LayoutOpsSpec extends AnyFunSuite {
   test("compaction derives its file count from bytes, content intact") {
     import java.nio.file.{Files, Path}
     // the operator's scratch layouts live under the run's TempDirs root
-    def scratch(prefix: String, d: String): Path =
-      graft.core.TempDirs.root.resolve(s"${prefix}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
+    def scratch(prefix: String, d: String): Path = graft.core.TempDirs.keyed(prefix, d)
     def parts(prefix: String, d: String): Long =
       Files.list(scratch(prefix, d)).filter(_.toString.endsWith(".parquet")).count()
     def smallBytes(d: String): Long =

@@ -123,18 +123,29 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"missing rowCount stats: $rowCounts")
   }
 
-  test("building, running and explaining scoped queries leaves the caller's confs unchanged") {
+  test("scoped queries leave the caller's confs unchanged, apart from the first read's settings") {
     val queries = Seq[(SparkSession, String) => DataFrame](
       ScaleOps.qRuntimeFilter, ScaleOps.qCboReorder, StressOps.qStressAqeSkew,
       StreamOps.qStreamTokenBudget)
-    // a first build applies the session's one-time read settings
-    queries.foreach(q => q(spark, dir))
-    val before = spark.conf.getAll
-    queries.foreach { q =>
+    def buildRunExplain(q: (SparkSession, String) => DataFrame): Unit = {
       val df = q(spark, dir)
       df.collect()
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      assert(spark.conf.getAll == before)
+    }
+    // graft.Tables.t and the events stream set these two read settings on
+    // the caller's session at its first table read and keep them (an open
+    // ROADMAP item); no other key may change, on the first build or later
+    val readSettings = Set("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    val start = spark.conf.getAll -- readSettings
+    queries.foreach { q =>
+      buildRunExplain(q)
+      assert(spark.conf.getAll -- readSettings == start)
+    }
+    val warm = spark.conf.getAll
+    queries.foreach { q =>
+      buildRunExplain(q)
+      assert(spark.conf.getAll == warm)
     }
   }
 
