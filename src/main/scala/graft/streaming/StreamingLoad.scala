@@ -6,6 +6,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.core._
 import graft.ds.{ObjectStore, SparkDataSource}
@@ -18,12 +19,17 @@ import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
   *  1. snapshot the queue ONCE: list objects matching a filename pattern
   *     with `%Y%m%d...%Q` time captures (reference: :415-473);
   *  2. partition the snapshot against the load log on `data_file`
-  *     (reference: :137-153, 166-196 partition_loaded_objects) — the join
-  *     runs as a Spark job; `loaded` objects (left over from a crashed
-  *     prior run) are dequeued immediately, `not_loaded` go on to load;
-  *  3. load new files into the work table in bounded batches, insert into
-  *     dest (reference: :202-237), append each batch to the load log with a
-  *     NOT-IN anti-join guard (:314-330), then dequeue that batch;
+  *     (reference: :137-153, 166-196 partition_loaded_objects) — one
+  *     semi-join collects the logged subset; `loaded` objects (left over
+  *     from a crashed prior run) are dequeued immediately, `not_loaded` go
+  *     on to load;
+  *  3. load new files in bounded batches straight into dest (reference:
+  *     :202-237), append each batch to the load log with a NOT-IN
+  *     anti-join guard (:314-330), then dequeue that batch. The work
+  *     table (`work-table`, default `<dest>_wk`) is staged only when a
+  *     `sql-file` reads it as `$work_table`: the reference COPYs into it
+  *     because Redshift's COPY must land in a table before user SQL runs,
+  *     which a Spark frame does not need;
   *  4. dequeue = move each object to the persistent path (:502-514). Only
   *     objects recorded in the load log are ever moved — a file that
   *     arrives mid-load stays queued for the next run.
@@ -45,9 +51,12 @@ import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
   * transaction, so a crash between a batch's dest insert and its log append
   * re-loads that batch on rerun — **at-least-once on crash, exactly-once in
   * normal operation** (the crashed batch's files stay in the queue because
-  * dequeue is log-driven). Smaller `batch-size` shrinks that window. For
-  * true exactly-once use `streaming: true` (`Trigger.AvailableNow` + a
-  * checkpointed file source) in this same job class.
+  * dequeue is log-driven). Smaller `batch-size` shrinks that window.
+  * `streaming: true` (`Trigger.AvailableNow` + a checkpointed file source)
+  * has the same caveat: its `foreachBatch` append carries no `batchId`
+  * guard, so a crash between the sink write and the checkpoint commit
+  * replays that micro-batch. Both modes are at-least-once on a crash
+  * (ROADMAP direction 3 plans one batch-id mechanism for both).
   */
 object StreamingLoadJobClass extends JobClass("streaming_load") {
 
@@ -60,7 +69,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
     DataSourceParam("spark", "dest-ds", optional = true),
     DataSourceParam("spark", "redshift-ds", optional = true), // reference name (:22)
     DestTableParam(),
-    StringParam("work-table", optional = true),
+    StringParam("work-table", optional = true), // staged only for a sql-file
     StringParam("log-table", optional = true),
     // manifest-bucket knobs (reference :15-17); our manifest is the explicit
     // file list passed to the reader, so ctl-* only affect bookkeeping
@@ -152,35 +161,28 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
         visible && pattern.forall(_.matches(segs.last))
       }
 
-    // Partition a queue snapshot against the load log on data_file
-    // (reference :294-312 partition_loaded_objects). Runs as a Spark join.
-    // BOTH sides stream through toLocalIterator so an unbounded queue
-    // never sits fully in driver memory — consumers pull one dequeue/load
-    // batch of names at a time (the cursor-batch idiom,
-    // DataSource.queryBatch). The `loaded` side is usually tiny (crash
-    // leftovers from one prior run) but CAN be the whole queue listing
-    // when dequeue lags, so it gets the same treatment.
-    def partitionBySnapshot(candidates: Seq[String])
-        : (Iterator[String], Iterator[String]) = {
-      if (candidates.isEmpty) return (Iterator.empty, Iterator.empty)
+    // Partition a queue snapshot into (logged, not logged) against the load
+    // log on data_file (reference :294-312 partition_loaded_objects): one
+    // Spark semi-join collects the logged subset, and the listing splits
+    // on the driver in listing order. The listing is already a driver Seq
+    // (fs.listRelative), so the collected subset is never bigger than it;
+    // the split is complete before the first batch appends to the log.
+    def partitionBySnapshot(candidates: Seq[String]): (Seq[String], Seq[String]) = {
+      if (candidates.isEmpty) return (Nil, Nil)
       val spark = ds.spark
       import spark.implicits._
       ensureLogTable(ds, log)
-      val cand = candidates.map(r => (r, fs.urlString(r))).toDF("rel", "data_file")
-      val logged = ds.table(log).select(col("data_file"))
-      def sideIt(joinType: String): Iterator[String] = {
-        import scala.jdk.CollectionConverters._
-        cand.join(logged, Seq("data_file"), joinType)
-          .orderBy("rel").select("rel").as[String]
-          .toLocalIterator().asScala
-      }
-      (sideIt("left_semi"), sideIt("left_anti"))
+      val logged = candidates.map(fs.urlString).toDF("data_file")
+        .join(ds.table(log).select("data_file"), Seq("data_file"), "left_semi")
+        .as[String].collect().toSet
+      candidates.partition(r => logged(fs.urlString(r)))
     }
 
     if (streaming)
-      // Structured Streaming mode: the checkpointed file source IS the load
-      // log (exactly-once per file, survives crashes); files stay queued —
-      // retention is the checkpoint's job, not a dequeue move.
+      // Structured Streaming mode: the checkpointed file source is the load
+      // log (once per file in normal operation; at-least-once on a crash,
+      // see the class doc); files stay queued — retention is the
+      // checkpoint's job, not a dequeue move.
       return Seq(Action("streaming_load:stream") {
         val spark = ds.spark
         val (source, readerOptions, readSchema) =
@@ -193,7 +195,9 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
           .load(fs.urlString(queuePath))
         val ckpt = p.stringOpt("checkpoint-path").map(vars.expand).map(fs.urlString)
           .getOrElse(fs.urlString(queuePath.stripSuffix("/") + "_checkpoint"))
-        val query = src.writeStream
+        // started in a scoped clone, as StreamOps.drain does, so releasing
+        // its listener buses never detaches the job session's own
+        val query = GraftBridge.withConf(src).writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -208,7 +212,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
             } finally release()
           }
           .start()
-        query.awaitTermination()
+        try query.awaitTermination() finally GraftBridge.releaseStreams(query)
         // the microbatch writes ran in a cloned session; drop this
         // session's cached relation so readers see the new files
         spark.catalog.refreshTable(ds.qualify(dest))
@@ -230,38 +234,33 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
       // ONE queue snapshot drives the whole run (reference :166-170):
       // files arriving after this point are next run's work.
       val (alreadyLoaded, newFiles) = partitionBySnapshot(listCandidates())
-      // leftovers from a crashed prior run: logged but never dequeued.
-      // Batched pulls off the iterator — never the whole listing at once.
+      // leftovers from a crashed prior run: logged but never dequeued
       if (!p.bool("load-only"))
         alreadyLoaded.grouped(batchSize).foreach(b => dequeue(fs, queuePath, b, p, vars))
       if (newFiles.nonEmpty) {
         val spark = ds.spark
         import spark.implicits._
         val jobProcessId = java.util.UUID.randomUUID().toString
-        // bounded batches keep the driver-side manifest and the
-        // crash-replay window small (reference loads one manifest per run;
-        // an unbounded queue would otherwise sit in driver memory)
+        val destSchema = ds.table(dest).schema
+        // reference :31 skip-work: "Skip work table and load directly into
+        // dest-table", so it also bypasses a sql-file
+        val sqlFile = p.stringOpt("sql-file").filterNot(_ => p.bool("skip-work"))
+        // bounded batches keep the reader's manifest and the crash-replay
+        // window small (the reference loads one manifest per run)
         newFiles.grouped(batchSize).foreach { batchRel =>
           val batch = batchRel.map(fs.urlString)
           val startTime = java.sql.Timestamp.from(java.time.Instant.now())
           // explicit file list = the reference's manifest (:207-226)
-          LoadOptions.withRead(spark, batch, format, loadOptions,
-              ds.table(dest).schema) { df =>
-            if (p.bool("skip-work")) {
-              // reference :31: "Skip work table and load directly into
-              // dest-table" — one append, no staging
-              df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
-            } else {
-              // load work table from the new files only (:165,202-237), then
-              // commit via user SQL or INSERT SELECT *
-              ds.dropForce(work)
-              df.write.saveAsTable(ds.qualify(work))
-              p.stringOpt("sql-file") match {
-                case Some(sf) => ds.execScript(transform(sf, ds.qualify(work)))
-                case None =>
-                  ds.sql(s"INSERT INTO ${ds.qualify(dest)} SELECT * FROM ${ds.qualify(work)}")
-              }
-              ds.dropForce(work)
+          LoadOptions.withRead(spark, batch, format, loadOptions, destSchema) { df =>
+            sqlFile match {
+              case Some(sf) =>
+                // the user SQL reads the new files as $work_table
+                // (:165,202-237) and commits them into dest
+                ds.dropForce(work)
+                df.write.saveAsTable(ds.qualify(work))
+                ds.execScript(transform(sf, ds.qualify(work)))
+                ds.dropForce(work)
+              case None => df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
             }
           }
           // append load log w/ NOT-IN guard (:314-330)
@@ -275,7 +274,8 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
           val guarded = entries.join(ds.table(log).select(col("data_file")),
             Seq("data_file"), "left_anti")
             .select("job_process_id", "start_time", "end_time", "target_table", "data_file")
-          guarded.write.mode(SaveMode.Append).insertInto(ds.qualify(log))
+          // one log file per batch, not one per default-parallelism slice
+          guarded.coalesce(1).write.mode(SaveMode.Append).insertInto(ds.qualify(log))
           // dequeue this batch now that it is logged (reference :186-190)
           if (!p.bool("load-only")) dequeue(fs, queuePath, batchRel, p, vars)
         }
