@@ -136,8 +136,8 @@ object Explain {
         "value-bounded frame makes tied timestamps deterministic " +
         "without a unique tiebreaker."),
       "q_asof_native" -> ("AsOfJoinExec is the custom physical operator " +
-        "(LogicalPlan + Strategy + SparkPlan via extraStrategies / " +
-        "GraftExtensions); EnsureRequirements inserted the per-side " +
+        "(LogicalPlan + Strategy + SparkPlan via GraftExtensions); " +
+        "EnsureRequirements inserted the per-side " +
         "exchanges and sorts from its declared distribution/ordering, " +
         "exactly as for sort-merge join. Each side shuffles only " +
         "itself (right side: 3 columns), vs the union+window plan " +

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.StructType
 
 /** A declared query: Spark-side DataFrame builder + optional DuckDB oracle
   * SQL over the same parquet tables. Column names/aliases MUST match between
@@ -21,12 +23,10 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized per (session, dir, name): `spark.read.parquet` re-lists the
-  // directory and re-reads footers on every call; reusing the resolved
-  // DataFrame shares one FileIndex/schema across all queries of a run
-  // (plans are immutable, so sharing is safe).
-  private val readCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  // Parquet INT64 TIMESTAMP(NANOS), which Spark's schema inference
+  // rejects, infers as a long that `normalizeTs` repairs. Set only on the
+  // reader session below, never on a caller's.
+  private val ReadConf = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
   // Timestamp-bearing columns per table: every one of these is exposed
   // to the same drift the r6 testdata regen hit on events.ts (INT64
@@ -37,50 +37,57 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "orders" -> Seq("o_orderdate"))
 
-  // Session-level execution tuning, applied once per session (keyed by
-  // the session object) the first time any query touches a table.
-  private val tuned =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  /** One reader session per SparkContext (a scoped clone carrying
+    * [[ReadConf]]) and its normalized relations by (dir, name).
+    * `spark.read.parquet` re-lists the directory and re-reads footers on
+    * every call; one resolved relation shares its FileIndex and schema
+    * across all queries of a run (plans are immutable, so sharing is
+    * safe). Only schema inference needs [[ReadConf]]; scans read each
+    * column as the resolved schema says, so callers plan and run these
+    * relations in their own sessions without it.
+    */
+  private final class Reader(val session: SparkSession) {
+    val relations = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  }
+  private val reader = new java.util.concurrent.atomic.AtomicReference[Reader]()
 
-  private def applySessionTuning(spark: SparkSession): Unit =
-    if (tuned.add(spark)) {
-      // The bounded typed Aggregators (TopKAggregator / MinKAggregator)
-      // plan as ObjectHashAggregateExec, which silently falls back to
-      // SORT-based aggregation after only 128 distinct keys per task
-      // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-      // default). For the kNN-graph builds that aggregate a
-      // cell-blocked pair stream down to k rows per node, the fallback
-      // turns a size-k-heap-per-key hash pass into a full sort of every
-      // scored pair WITH per-row buffer serialization — measured 221×
-      // time for 100× pairs on q_pagerank at sf10 before this. Each
-      // buffer is a ≤k-tuple vector (~300 B), so 1M keys per task is
-      // ~300 MB worst-case — far under executor memory at any partition
-      // sizing this engine produces, and partitions passing 1M distinct
-      // group keys should be split wider anyway.
-      spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    }
-
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    applySessionTuning(spark)
-    readCache.computeIfAbsent((spark, dir, name), { _ =>
-      if (tsColumns.contains(name)) {
-        // these tables have shipped timestamps as parquet INT64
-        // TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-        // hence nanosAsLong) and as native TIMESTAMP(MICROS); repair
-        // whatever the file carries. Only `events` additionally casts
-        // NTZ to session-TZ timestamp (its consumers are windows /
-        // watermarks); lineitem/orders keep NTZ as read — a cast there
-        // would wrap the column and break parquet filter pushdown on
-        // every date predicate.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        tsColumns(name).foldLeft(spark.read.parquet(s"$dir/$name.parquet"))(
-          (df, c) => normalizeTs(df, c, castNtz = name == "events"))
-      } else if (name == "embeddings") {
-        normalizeEmbedding(spark.read.parquet(s"$dir/$name.parquet"))
-      } else spark.read.parquet(s"$dir/$name.parquet")
+  private def relation(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val r = reader.updateAndGet(r =>
+      if (r != null && (r.session.sparkContext eq spark.sparkContext)) r
+      else new Reader(GraftBridge.sessionWithConf(spark, ReadConf)))
+    r.relations.computeIfAbsent((dir, name), { _ =>
+      val raw = r.session.read.parquet(s"$dir/$name.parquet")
+      if (tsColumns.contains(name))
+        // Only `events` additionally casts NTZ to session-TZ timestamp
+        // (its consumers are windows / watermarks); lineitem/orders keep
+        // NTZ as read, since a cast there would wrap the column and break
+        // parquet filter pushdown on every date predicate.
+        tsColumns(name).foldLeft(raw)((df, c) => normalizeTs(df, c, castNtz = name == "events"))
+      else if (name == "embeddings") normalizeEmbedding(raw)
+      else raw
     })
+  }
+
+  /** Testdata table `<dir>/<name>.parquet`, normalized, in `spark`. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    GraftBridge.ofRows(spark, relation(spark, dir, name).queryExecution.analyzed)
+
+  /** The schema of `<dir>/<name>.parquet` as the reader session resolves
+    * it, before any normalization: the schema a stream of the same files
+    * reads with.
+    */
+  def rawSchema(spark: SparkSession, dir: String, name: String): StructType =
+    relation(spark, dir, name).queryExecution.analyzed.collectLeaves().head.schema
+
+  /** Run SQL `statements` in order over the testdata tables of `dir`;
+    * the last one's frame. The tables are temp views of a scoped clone of
+    * `spark`, and so is anything the statements create, so no view
+    * shadows a catalog table of the caller's.
+    */
+  def sql(spark: SparkSession, dir: String, statements: String*): DataFrame = {
+    val scoped = GraftBridge.sessionWithConf(spark)
+    names.foreach(n => t(scoped, dir, n).createOrReplaceTempView(n))
+    statements.map(scoped.sql).last
   }
 
   /** Normalize `embeddings.embedding` to array<float> — the type every
@@ -126,11 +133,6 @@ object Tables {
     }
   }
 
-  /** Back-compat alias for the events-specific form (streaming readers
-    * normalize through this after providing the batch-resolved schema).
-    */
-  def normalizeEventsTs(df: DataFrame): DataFrame = normalizeTs(df, "ts")
-
   // Memoized per (dir, name): footer counts are immutable for a testdata
   // layout, and several queries re-derive the same corpus size.
   private val countCache =
@@ -167,8 +169,4 @@ object Tables {
           .map(f => rows(f.getPath)).sum
       else rows(root)
     })
-
-  /** Register every testdata table as a temp view for spark.sql use. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }

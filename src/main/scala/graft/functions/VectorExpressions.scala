@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -753,8 +752,8 @@ case class DHash56(child: Expression) extends UnaryExpression {
 }
 
 object VectorFunctions {
-  /** Every graft SQL function: name, expression class and builder. Both
-    * [[register]] and [[GraftExtensions]] install exactly this table.
+  /** Every graft SQL function: name, expression class and builder.
+    * [[GraftExtensions]] installs exactly this table.
     */
   val all: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
     ("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
@@ -769,23 +768,14 @@ object VectorFunctions {
     ("bigrams2", classOf[Bigrams2], e => Bigrams2(e.head)),
     ("bigrams2_sorted", classOf[Bigrams2Sorted], e => Bigrams2Sorted(e.head)),
     ("grams4w", classOf[Grams4W], e => Grams4W(e.head)))
-
-  /** Register the functions in [[all]] on the session, so
-    * `expr("vec_dot(a, b)")` resolves to the codegen'd expressions.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    all.foreach { case (name, _, build) =>
-      registry.createOrReplaceTempFunction(name, build, "built-in")
-    }
-  }
 }
 
-/** Session-extension installer: add
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`) and the vector
-  * functions resolve in every session without manual registration —
-  * the deployment path for a shared cluster.
+/** Session-extension installer: graft's SQL functions and the native
+  * as-of join planner strategy. The session factory
+  * `graft.runner.Cli.buildSpark` sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, so both are in
+  * every session it builds and in every clone or new session of that
+  * context; nothing else installs them.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier

@@ -84,9 +84,8 @@ object AsOfJoin {
   /** [[asOf]] as the custom physical operator
     * [[graft.plans.AsOfJoinExec]] — same contract, same tie rules (see
     * the node's doc for why the separate-sides merge beats the
-    * union+window composition at scale). The strategy is appended to
-    * `spark.experimental.extraStrategies` idempotently; deployments
-    * using `GraftExtensions` get it injected at session build instead.
+    * union+window composition at scale). Its planner strategy comes with
+    * `GraftExtensions`, which the session factory installs.
     *
     * Left columns pass through unchanged; `outCol` carries the matched
     * right id (null when no right row precedes). Key and `rightId` must
@@ -94,11 +93,8 @@ object AsOfJoin {
     */
   def asOfNative(left: DataFrame, right: DataFrame, key: String, ts: String,
       rightId: String, outCol: String): DataFrame = {
-    import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
+    import graft.plans.AsOfJoinNode
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     // fresh aliases on the right side mint new exprIds, so a self-join
     // (both sides carved from the same table — exactly this query) can
     // never present one attribute id from two children

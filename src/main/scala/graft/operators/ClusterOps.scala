@@ -507,7 +507,6 @@ object ClusterOps {
     * ordering is engine-stable, with doc_id as the total tie-break.
     */
   def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val docs = t(s, dir, "documents")
     val sigs = docs.select(col("doc_id"), expr("simhash48(text)").as("sig"))
       .persist() // band explode reads it 2× through the self-join
@@ -587,7 +586,6 @@ object ClusterOps {
     * shapes restricted to 1% of buckets.
     */
   def qKeepBestAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val docs = t(s, dir, "documents")
     val sigs = docs.select(col("doc_id"), expr("simhash48(text)").as("sig"))
     // filter AFTER the bucket-count join: bucket_n (and with it the
@@ -892,7 +890,6 @@ object ClusterOps {
     * recomputed. The recovery is a rerun.
     */
   def qPagerank(s: SparkSession, dir: String, iters: Int = 3, k: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
         expr(Similarity.normExpr).as("nrm"))
@@ -1019,7 +1016,6 @@ object ClusterOps {
     * recomputed. The recovery is a rerun.
     */
   def qLabelProp(s: SparkSession, dir: String, rounds: Int = 2, k: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // plane count sized to the corpus (log₂(n/8), floor 8 — see
     // Similarity.planesFor): the candidate bucket space must grow with n
     // or bucket occupancy — and the bucket-blocked scored join's pair

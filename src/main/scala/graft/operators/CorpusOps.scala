@@ -33,7 +33,6 @@ object CorpusOps {
     * the standard query and the hot-gram bench stress.
     */
   private[graft] def contaminationFrom(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val grams = docs
       .select(col("doc_id"), explode(expr("bigrams2(text)")).as("gram"))
     val train = grams.filter(col("doc_id") % 10 =!= 0)
@@ -168,7 +167,6 @@ object CorpusOps {
     * corpus size.
     */
   def qRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "documents")
       .withColumn("ws", split(col("text"), " "))
       .select(col("doc_id"),
@@ -337,7 +335,6 @@ object CorpusOps {
     */
   def qPipelineE2e(s: SparkSession, dir: String, budget: Int = 2048): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val docs = t(s, dir, "documents")
     val dedupW = Window.partitionBy("text").orderBy("doc_id")
     val deduped = docs

@@ -73,7 +73,6 @@ object CurationOps {
     * count K bounds the candidate surface exactly like an IVF index.
     */
   def qSemDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(Similarity.normExpr).as("nrm"))
     val best = array_max(Similarity.centScores(Similarity.seedCentroids(e)))
@@ -456,12 +455,9 @@ object CurationOps {
     // grow linearly with a natural-text corpus (see Dedup.grams4Spark for
     // the measured sf10 blowup) — the decontamination-standard long-gram
     // regime keeps per-gram df bounded at every scale
-    val grams = {
-      graft.functions.VectorFunctions.register(s)
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(expr("grams4w(text)")).as("gram"))
-        .persist()
-    }
+    val grams = t(s, dir, "documents")
+      .select(col("doc_id"), explode(expr("grams4w(text)")).as("gram"))
+      .persist()
     // count(*), not countDistinct(doc_id): grams4Spark is array_distinct
     // per doc, so (doc_id, gram) rows are already unique and the two are
     // equal by construction — but countDistinct plans a two-phase

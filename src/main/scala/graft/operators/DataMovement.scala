@@ -148,7 +148,6 @@ object DataMovement {
     * SqlStatement bind+split path against temp views.
     */
   def qMultiStatement(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(s, dir)
     val script = new SqlStatement(
       """--dest-table: $dest
         |CREATE OR REPLACE TEMP VIEW $dest AS
@@ -156,9 +155,7 @@ object DataMovement {
         |  WHERE o_orderpriority <> 'X;Y' GROUP BY o_orderpriority;
         |SELECT o_orderpriority, cnt FROM $dest ORDER BY o_orderpriority""".stripMargin)
       .bind(Variables("dest" -> "prio_summary"))
-    var last: DataFrame = null
-    script.statements.foreach(stmt => last = s.sql(stmt))
-    last
+    Tables.sql(s, dir, script.statements: _*)
   }
 
   val qMultiStatementOracle: String =

@@ -208,7 +208,6 @@ object Dedup {
     // form paid an interpreted zip_with lambda per shingle plus
     // interpreted array_sort comparisons; semantics pinned element-wise
     // by DedupSpec against array_sort(gramsSpark)
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs.select((col("doc_id") +: carry.map(col) :+
       expr("bigrams2_sorted(text)").as("grams")): _*)
   }
@@ -227,7 +226,6 @@ object Dedup {
     * the unchanged `q_minhash_sig` oracle gates it against DuckDB).
     */
   private[operators] def sigOf(grams: DataFrame, carry: String*): DataFrame = {
-    graft.functions.VectorFunctions.register(grams.sparkSession)
     grams.select((col("doc_id") +: carry.map(col) :+
       expr("minhash32(grams)").as("sig")): _*)
   }
@@ -288,7 +286,6 @@ object Dedup {
     */
   private[operators] def scorePairs(cand: DataFrame, grams: DataFrame,
       bcastGrams: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.register(cand.sparkSession)
     // Default shape: two doc-keyed shuffle joins — right for the LSH
     // family, whose banded candidate sets are small multiples of the
     // true-dup count while the gram index is corpus-sized (at 100 TB the
@@ -406,7 +403,6 @@ object Dedup {
     * (consecutive doc ids) — the exact-verification kernel of near-dedup.
     */
   def qNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val grams = gramsOf(t(s, dir, "documents"))
     val a = grams.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("grams", "grams_a")
     val b = grams.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("grams", "grams_b")
@@ -436,7 +432,6 @@ object Dedup {
     * doc-keyed hash aggregate for what is inherently per-row compute).
     */
   def qSimhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "documents")
       .select(col("doc_id"), expr("simhash16(text)").as("simhash"))
       .orderBy("doc_id")
@@ -489,7 +484,6 @@ object Dedup {
     * replica.
     */
   def qSimhashNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val sigs = t(s, dir, "documents")
       .select(col("doc_id"), expr("simhash48(text)").as("sig"))
       .persist() // band explode + two verify joins read it; caller clears
@@ -639,7 +633,6 @@ object Dedup {
     * duplicate density, never corpus².
     */
   def qDedupEnsemble(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val grams = gramsOf(t(s, dir, "documents")).persist()
     val bands = bandsOf(sigOf(grams)).persist()
     val mhCand = bandPairs(bands, BandKey, "doc_id")

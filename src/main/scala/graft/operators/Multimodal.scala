@@ -81,7 +81,6 @@ object Multimodal {
     * changes, the plan shape stays.
     */
   def qDecodeStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     assets(s, dir)
       .select(col("asset_id"), col("meta.codec").as("codec"),
         expr("container_decode(payload)").as("dec"))
@@ -270,7 +269,6 @@ object Multimodal {
     * body at evenly spaced offsets — (asset_id, px: array<int>).
     */
   private[operators] def pixelGrids(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // fused codegen sampler (graft.functions.PixelGrid64): the former
     // transform(sequence(0,63), k -> ascii(substring(txt, …, 1))) paid an
     // interpreted lambda per sample and each substring is an O(pos)
@@ -288,7 +286,6 @@ object Multimodal {
     * pixel darker than its row neighbor.
     */
   private[operators] def phashOf(grids: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(grids.sparkSession)
     // fused codegen dHash (graft.functions.DHash56) — the former
     // aggregate(sequence(0,55), …) fold paid an interpreted lambda call
     // per bit per asset (higher-order functions never enter whole-stage

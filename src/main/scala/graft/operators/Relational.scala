@@ -354,11 +354,8 @@ object Relational {
     * re-selected (the pre-Expand child attribute survives by name), while
     * the SQL analyzer resolves the same plan unambiguously.
     */
-  def qRollup(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "region").createOrReplaceTempView("region")
-    t(s, dir, "nation").createOrReplaceTempView("nation")
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    s.sql(
+  def qRollup(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir,
       """SELECT coalesce(r_name, 'ALL') AS r_name, coalesce(n_name, 'ALL') AS n_name,
         | count(*) AS cust_cnt, round(sum(c_acctbal), 2) AS acct_total
         |FROM region
@@ -366,7 +363,6 @@ object Relational {
         |JOIN customer ON n_nationkey = c_nationkey
         |GROUP BY ROLLUP(r_name, n_name)
         |ORDER BY r_name, n_name""".stripMargin)
-  }
 
   val qRollupOracle: String =
     """SELECT coalesce(r_name, 'ALL') AS r_name, coalesce(n_name, 'ALL') AS n_name,
@@ -381,11 +377,7 @@ object Relational {
     * one pass — Catalyst expands to a single Expand + hash aggregate, so
     * the input is scanned once regardless of grouping-set count.
     */
-  def qCube(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(cubeSql)
-  }
+  def qCube(s: SparkSession, dir: String): DataFrame = Tables.sql(s, dir, cubeSql)
 
   private val cubeSql =
     """SELECT coalesce(c_mktsegment, 'ALL') AS segment,
@@ -401,10 +393,8 @@ object Relational {
   /** Explicit GROUPING SETS: per-clerk and per-priority totals in one
     * scan, distinguished via GROUPING() flags.
     */
-  def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    s.sql(groupingSetsSql)
-  }
+  def qGroupingSets(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir, groupingSetsSql)
 
   private val groupingSetsSql =
     """SELECT coalesce(o_orderstatus, '-') AS status, coalesce(o_orderpriority, '-') AS priority,
@@ -562,9 +552,8 @@ object Relational {
     * twin of the pointer-jump closure in `ClusterOps`. The DuckDB oracle
     * is the same recursion in its own dialect.
     */
-  def qRecursiveCte(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(s, dir)
-    s.sql(
+  def qRecursiveCte(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir,
       """WITH RECURSIVE walk(orig, cur, d) AS (
         |  SELECT DISTINCT user_id, user_id, 0 FROM events
         |  UNION ALL
@@ -572,7 +561,6 @@ object Relational {
         |SELECT d AS depth, count(*) AS n_users
         |FROM walk WHERE cur = 0
         |GROUP BY d ORDER BY depth""".stripMargin)
-  }
 
   val qRecursiveCteOracle: String =
     """WITH RECURSIVE walk(orig, cur, d) AS (
@@ -590,10 +578,8 @@ object Relational {
     * filter costs two key-equality shuffles, never a per-row subquery
     * probe. The oracle runs the identical SQL.
     */
-  def qExistsSubquery(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(s, dir)
-    s.sql(existsSql)
-  }
+  def qExistsSubquery(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir, existsSql)
 
   private val existsSql: String =
     """SELECT c_mktsegment, count(*) AS n_cust
@@ -614,10 +600,8 @@ object Relational {
     * shuffle, not a per-row probe. The oracle runs the identical SQL
     * (DuckDB executes LATERAL natively).
     */
-  def qLateralJoin(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(s, dir)
-    s.sql(lateralSql)
-  }
+  def qLateralJoin(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir, lateralSql)
 
   private val lateralSql: String =
     """SELECT c.c_mktsegment, count(*) AS n_cust,

@@ -37,7 +37,6 @@ object Similarity {
     * partition ever shuffle.
     */
   def qCosineTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val q = e.filter(col("vec_id") < 3)
@@ -94,7 +93,6 @@ object Similarity {
     // Norms are precomputed per vector BEFORE the pair join: per-pair work
     // drops from three array folds to one (the dot product). Same double
     // arithmetic, so the oracle match is unaffected.
-    graft.functions.VectorFunctions.register(s)
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"), expr(normExpr).as("nrm"))
     nearDupPairs(base, blockTarget)
@@ -236,7 +234,6 @@ object Similarity {
   }
 
   def qLshBuckets(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
     e.select(col("vec_id"), col("label"), hyperplaneBucket.as("bucket"))
       .groupBy("bucket")
@@ -270,7 +267,6 @@ object Similarity {
     * rather than rows-only.
     */
   def qAnnNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"), expr(normExpr).as("nrm"),
         hyperplaneBucket.as("bucket"))
@@ -321,7 +317,6 @@ object Similarity {
     * of every eval scores and ranks exactly like the oracle.
     */
   private final class AnnEval(s: SparkSession, dir: String) {
-    graft.functions.VectorFunctions.register(s)
     private val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"),
         hyperplaneBucket.as("bucket"))
@@ -784,7 +779,6 @@ object Similarity {
     * broadcast, and ranking is the bounded top-k aggregator.
     */
   def qIvfPqSearch(s: SparkSession, dir: String, nprobe: Int = 2, k: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     import s.implicits._
     val e = t(s, dir, "embeddings")
     val en = e.select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
@@ -971,7 +965,6 @@ object Similarity {
     * order-independent, unlike a float avg).
     */
   def qIvfAssign(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val best = array_max(centScores(seedCentroids(e)))
@@ -1017,7 +1010,6 @@ object Similarity {
     * shuffle, same as [[qCosineTopK]]).
     */
   def qIvfSearch(s: SparkSession, dir: String, nprobe: Int = 2, k: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val scores = centScores(seedCentroids(e))
@@ -1099,7 +1091,6 @@ object Similarity {
     * sum/n in 1e-4 units).
     */
   def qKmeansStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val best = array_max(centScores(seedCentroids(e)))
@@ -1270,7 +1261,6 @@ object Similarity {
     * extra shuffle column; the pack is lossless while labels < 100.
     */
   def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"), expr(normExpr).as("nrm"))
     val q = e.filter(pmod(col("vec_id"), lit(25)) === 0)
@@ -1340,7 +1330,6 @@ object Similarity {
     * so the dedup pass removes near-dups, not merely related docs.
     */
   def qCosineCurve(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"), expr(normExpr).as("nrm"))
     nearDupPairs(base, 4096L)
@@ -1377,7 +1366,6 @@ object Similarity {
     * 10-row-per-query frames.
     */
   def qTruncRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr(normExpr).as("nrm"),
@@ -1460,7 +1448,6 @@ object Similarity {
     * projection; nothing pairs the corpus with itself.
     */
   def qModalityAgreement(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val grams = Dedup.gramsOf(t(s, dir, "documents")).persist()
     val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
     val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")

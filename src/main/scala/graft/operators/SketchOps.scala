@@ -54,7 +54,6 @@ object SketchOps {
     * a candidate pass; here the exact side doubles as the oracle anchor.
     */
   def qCmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val occ = t(s, dir, "documents")
       .select(col("doc_id"), explode(expr("bigrams2(text)")).as("g"))
     // ONE corpus-wide aggregate produces per-gram counts; both the sketch

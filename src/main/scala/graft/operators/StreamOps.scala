@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.QueryDef
 
@@ -52,39 +52,24 @@ object StreamOps {
     */
   private def streamTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val rawSchema = s.read.parquet(path).schema
+    // inferred by the Tables reader, whose setting only schema inference
+    // needs: given this schema, the stream reads an INT64
+    // TIMESTAMP(NANOS) column as the long it names
+    val rawSchema = graft.Tables.rawSchema(s, dir, name)
     // Layout probe through Hadoop's FileSystem — NOT java.io.File, which
     // answers false for any non-local scheme (hdfs://, s3x://) and would
     // silently route a directory table into the glob branch → zero rows,
     // the exact failure mode this helper exists to prevent.
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val isDir = fs.getFileStatus(hPath).isDirectory
-    // Fail LOUDLY if the chosen layout branch would stream nothing. The
-    // original layout bug — glob matched nothing against a directory of
-    // part files — survived a bench, a verify, and a "0 failed" summary
-    // because an empty stream is indistinguishable from a completed one.
-    // The row probe reads parquet FOOTERS on the driver (the same
-    // metadata the scan planner reads anyway) instead of running a batch
-    // isEmpty job: the guard fires per stream-source construction, and a
-    // limit-1 Spark job per source was pure scheduling overhead next to
-    // a footer's row count — semantics identical (a valid-layout but
-    // zero-row table still refuses, StructuredStreamsSpec pins it).
-    def footerRows(p: org.apache.hadoop.fs.Path): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, s.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    val hasRows =
-      if (isDir) fs.listStatus(hPath).iterator
-        .filter(f => f.isFile && {
-          val n = f.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
-        })
-        .exists(f => footerRows(f.getPath) > 0)
-      else footerRows(hPath) > 0
-    require(hasRows,
+    val isDir = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(hPath).isDirectory
+    // Fail LOUDLY if the table would stream nothing: an empty stream is
+    // indistinguishable from a completed one, which is how the original
+    // layout bug (a name glob matching nothing in a directory of part
+    // files) survived a bench, a verify and a "0 failed" summary. The
+    // count comes from parquet footers on the driver, so a valid-layout
+    // but zero-row table refuses too (StructuredStreamsSpec pins it).
+    require(graft.Tables.rowCount(s, dir, name) > 0,
       s"streamTable($path): the ${if (isDir) "directory" else "glob"} " +
         "layout branch matches 0 rows — refusing to stream an empty " +
         "table (layout mismatch or bad path?)")
@@ -94,13 +79,10 @@ object StreamOps {
   }
 
   /** The events table as a stream, `ts` normalized as [[graft.Tables.t]]
-    * does it (the batch reader's resolved schema provides the streaming
-    * schema).
+    * does it.
     */
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    streamTable(s, dir, "events").transform(graft.Tables.normalizeEventsTs)
-  }
+  private def eventStream(s: SparkSession, dir: String): DataFrame =
+    streamTable(s, dir, "events").transform(graft.Tables.normalizeTs(_, "ts"))
 
   /** Drain `stream` once — `Trigger.AvailableNow` over a fresh checkpoint,
     * so every call reprocesses the whole input — and read the result back
@@ -125,19 +107,15 @@ object StreamOps {
     val writer = scoped.writeStream.outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ckpt.toString)
-    def run(w: DataStreamWriter[Row]): Unit = {
-      val q = w.start()
-      try q.awaitTermination() finally GraftBridge.releaseStreams(q)
-    }
     outputMode match {
       case "complete" =>
         val sink = "stream_" + ckpt.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
-        run(writer.format("memory").queryName(sink))
+        GraftBridge.runStream(writer.format("memory").queryName(sink))
         // the sink's view lives in the scoped session, dropped with it
         GraftBridge.ofRows(s, scoped.sparkSession.table(sink).queryExecution.analyzed)
       case "append" =>
         val sinkDir = graft.core.TempDirs.create("graft_stream_sink").toString
-        run(writer.format("parquet").option("path", sinkDir))
+        GraftBridge.runStream(writer.format("parquet").option("path", sinkDir))
         s.read.schema(stream.schema).parquet(sinkDir)
     }
   }

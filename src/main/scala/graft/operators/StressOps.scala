@@ -29,7 +29,6 @@ object StressOps {
     * cold labels stay unreplicated.
     */
   def qStressHotNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"),
         expr("CASE WHEN vec_id % 2 = 0 THEN -1 ELSE label END").as("label"),
@@ -263,7 +262,6 @@ object StressOps {
     * oracle replays the subdivision exactly.
     */
   def qStressHotBand(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val sigs = t(s, dir, "documents").select(col("doc_id"),
         expr("CASE WHEN doc_id % 4 = 0 THEN simhash48(text) & -65536 ELSE simhash48(text) END").as("sig"))
       .persist() // the band pass + counts join read it twice; caller clears

@@ -57,9 +57,9 @@ case class AsOfJoinNode(
 }
 
 /** Planner rule: one custom logical node → one custom physical node.
-  * Injected via `SparkSessionExtensions.injectPlannerStrategy` (the
-  * deployment path) or appended to `spark.experimental.extraStrategies`
-  * (the per-session path [[graft.operators.AsOfJoin.asOfNative]] uses).
+  * Injected by `GraftExtensions` through
+  * `SparkSessionExtensions.injectPlannerStrategy` when the session
+  * factory builds a session.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

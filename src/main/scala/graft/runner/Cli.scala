@@ -33,6 +33,13 @@ object Cli {
     * The master is `SPARK_MASTER` (a deployment address), else
     * `local[$SPARK_GRAFT_CPUS]`, else every local core. Shuffle width is
     * the master's core count. `conf` adds per-caller settings.
+    *
+    * This is also the one place session-wide state is installed:
+    * [[graft.functions.GraftExtensions]] (graft's SQL functions and the
+    * as-of join planner strategy, inherited by every clone and new
+    * session of this context) and the ObjectHashAggregate fallback
+    * threshold. Operators and table reads never change the session they
+    * are given.
     */
   def buildSpark(appName: String, conf: (String, String)*): SparkSession = {
     val master = sys.env.getOrElse("SPARK_MASTER",
@@ -45,12 +52,26 @@ object Cli {
       .setMaster(master)
       .setAppName(appName)
       .set("spark.ui.enabled", "false")
+      // read from the context's conf when the session is built, so it
+      // must be set here, not on the session builder
+      .set("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
       .setAll(conf))
     // the builder reuses `sc` on purpose; silence its warning about that
     sc.setLogLevel("ERROR")
     val s = SparkSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", sc.defaultParallelism.toLong)
+      // The bounded typed Aggregators (TopKAggregator / MinKAggregator)
+      // plan as ObjectHashAggregateExec, which falls back to sort-based
+      // aggregation after 128 distinct keys per task by default. For the
+      // kNN-graph builds that aggregate a cell-blocked pair stream down
+      // to k rows per node, the fallback turns a size-k-heap-per-key hash
+      // pass into a full sort of every scored pair with per-row buffer
+      // serialization (221x time for 100x pairs on q_pagerank at sf10).
+      // Each buffer is a <=k-tuple vector (~300 B), so 1M keys per task
+      // is ~300 MB worst-case; partitions past 1M distinct group keys
+      // should be split wider anyway.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1000000L)
       .getOrCreate()
     sc.setLogLevel("WARN")
     s

@@ -197,7 +197,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
           .getOrElse(fs.urlString(queuePath.stripSuffix("/") + "_checkpoint"))
         // started in a scoped clone, as StreamOps.drain does, so releasing
         // its listener buses never detaches the job session's own
-        val query = GraftBridge.withConf(src).writeStream
+        GraftBridge.runStream(GraftBridge.withConf(src).writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -210,9 +210,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
               case None =>
                 df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
             } finally release()
-          }
-          .start()
-        try query.awaitTermination() finally GraftBridge.releaseStreams(query)
+          })
         // the microbatch writes ran in a cloned session; drop this
         // session's cached relation so readers see the new files
         spark.catalog.refreshTable(ds.qualify(dest))

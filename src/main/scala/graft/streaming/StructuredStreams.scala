@@ -189,7 +189,6 @@ object StructuredStreams {
   def streamingNearDup(docs: Dataset[(Long, String)],
       maxPerBucket: Int = 64): Dataset[(Long, Long, Long)] = {
     val s = docs.sparkSession
-    graft.functions.VectorFunctions.register(s)
     import s.implicits._
     docs.toDF("doc_id", "text")
       .select(col("doc_id"), expr("simhash48(text)").as("sig"))

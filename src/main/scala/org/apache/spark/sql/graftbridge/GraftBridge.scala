@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** The `private[sql]` doorways the engine needs: wrapping a hand-built
   * logical node back into a `DataFrame`, running a plan under its own SQL
@@ -36,8 +36,7 @@ object GraftBridge {
 
   /** `df`'s plan re-rooted into a [[sessionWithConf]] clone of its
     * session carrying `overrides`. Build the plan in the caller's session
-    * (so `graft.Tables.t`'s per-session read cache never pins a clone) and
-    * scope it afterwards: optimizer, planner and AQE settings all apply
+    * and scope it afterwards: optimizer, planner and AQE settings all apply
     * when the returned frame is planned and executed, so its own executed
     * plan shows what the overrides did. The analyzed plan moves as is —
     * no re-resolution of names in the clone.
@@ -45,15 +44,25 @@ object GraftBridge {
   def withConf(df: DataFrame, overrides: (String, String)*): DataFrame =
     ofRows(sessionWithConf(df.sparkSession, overrides: _*), df.queryExecution.analyzed)
 
+  /** Start `writer`'s streaming query, wait for it to end and release its
+    * streaming listeners. The one way a streaming query runs: start it on
+    * a frame scoped with [[withConf]], so the sessions it builds are its
+    * own.
+    */
+  def runStream(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.awaitTermination() finally releaseStreams(q)
+  }
+
   /** Detach the streaming-query listener buses of `query`, a finished
     * query started in a scoped session. A session's first streaming query
     * builds its `StreamingQueryManager`, whose bus joins the context's
     * listener bus and is never removed; a query makes two such sessions,
     * the one it was started in and the clone it executes in (its state
-    * store coordinator lives there). Left attached, each drain would add
+    * store coordinator lives there). Left attached, each run would add
     * two listeners that see every later event of the process.
     */
-  def releaseStreams(query: StreamingQuery): Unit = {
+  private def releaseStreams(query: StreamingQuery): Unit = {
     val busField = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
     busField.setAccessible(true)
     val q = query.asInstanceOf[StreamingQueryWrapper].streamingQuery

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,14 +51,68 @@ class TablesSpec extends AnyFunSuite {
     assert(out.schema("embedding").dataType.simpleString == "array<float>")
   }
 
-  test("first table read raises the ObjectHashAggregate fallback threshold") {
+  test("the factory session raises the ObjectHashAggregate fallback threshold") {
     // The bounded top-k Aggregators plan as ObjectHashAggregateExec, which
     // silently degrades to sort-based aggregation (full sort of every
     // scored pair + per-row buffer serialization) after only 128 distinct
     // keys per task — measured 221x time for 100x pairs on q_pagerank at
-    // sf10 before Tables.t started raising the threshold per session.
-    Tables.t(spark, "/root/testdata/sf0.001", "region").count()
+    // sf10 before the threshold was raised. Cli.buildSpark sets it on
+    // every session it builds, before any table is read.
     assert(spark.conf.get(
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "1000000")
+  }
+
+  /** A fresh `<dir>/events.parquet` whose `ts` is INT64 TIMESTAMP(NANOS),
+    * the encoding earlier testdata shipped; each row is (event_id, ts in
+    * nanoseconds, user_id, event_type, value). Returns `dir`.
+    */
+  private def nanosEvents(rows: (Long, Long, Long, String, Double)*): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = graft.core.TempDirs.create("tables-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id; required binary event_type (STRING); required double value; }
+        |""".stripMargin)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    val group = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, ts, user, tp, v) =>
+      w.write(group.newGroup().append("event_id", id).append("ts", ts)
+        .append("user_id", user).append("event_type", tp).append("value", v))
+    } finally w.close()
+    dir
+  }
+
+  // 2024-08-07 10:00:00 UTC in nanoseconds
+  private val ns0 = 1723024800L * 1000000000L
+
+  test("an INT64 TIMESTAMP(NANOS) table reads through Tables.t and leaves the caller's conf alone") {
+    val dir = nanosEvents((1L, ns0 + 123456789L, 7L, "view", 1.0))
+    // a fresh caller: no earlier read in this JVM can have set anything on it
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    val df = Tables.t(caller, dir, "events")
+    assert(df.schema("ts").dataType == TimestampType)
+    val got = df.select("ts").collect().map(_.getTimestamp(0).toInstant).toSeq
+    // microsecond precision, as every other timestamp column
+    assert(got == Seq(java.time.Instant.ofEpochSecond(1723024800L, 123456000L)))
+    assert(caller.conf.getAll == before)
+  }
+
+  test("an INT64 TIMESTAMP(NANOS) events table streams as it reads in batch") {
+    // user 7's latest version by ts is event 1, not the higher event id
+    val dir = nanosEvents((1L, ns0 + 2000000000L, 7L, "view", 1.0),
+      (2L, ns0 + 1000000000L, 7L, "buy", 2.0), (3L, ns0, 8L, "view", 3.0))
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    val expected = Seq(Row(7L, 2L, "view", 1.0), Row(8L, 1L, "view", 3.0))
+    assert(graft.operators.LakeOps.qCdcLatest(caller, dir).collect().toSeq == expected)
+    assert(graft.operators.StreamOps.qStreamCdcLatest(caller, dir).collect().toSeq == expected)
+    assert(caller.conf.getAll == before)
   }
 }

@@ -15,8 +15,8 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("GraftExtensions makes vec_dot resolve without manual registration") {
     import spark.implicits._
-    // SparkTestBase sets spark.sql.extensions=graft.functions.GraftExtensions;
-    // no VectorFunctions.register call here
+    // SparkTestBase is built by the session factory, which installs
+    // GraftExtensions; nothing registers the functions by hand
     val r = Seq((Array(2.0f, 3.0f), Array(4.0f, 5.0f))).toDF("qv", "embedding")
       .selectExpr("vec_dot(qv, embedding)").head
     assert(r.getDouble(0) == 23.0)
@@ -24,7 +24,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   private def df = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     Seq(
       (1L, Some(Array(1.0f, 2.0f, 3.0f)), Some(Array(4.0f, 5.0f, 6.0f))),
       (2L, Some(Array(0.5f, -1.5f)), Some(Array(2.0f, 2.0f))),
@@ -57,7 +56,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("jaccard4 matches the array_intersect/array_union round(4) formulation") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // randomized-but-deterministic word arrays, incl. empty and disjoint
     val rnd = new scala.util.Random(42)
     val vocab = (0 until 40).map(i => s"w$i")
@@ -95,7 +93,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("simhash16 matches the per-bit majority-vote reference and split semantics") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // reference implementation over split(text, ' ') with unlimited
     // limit, word-bigram features (one-word texts fall back to the
     // unigram) — the SimHashHelper contract

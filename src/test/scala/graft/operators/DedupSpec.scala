@@ -92,7 +92,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhash48 chunks agree with a driver-side reference hash") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.VectorFunctions.register(spark)
     val got = graft.Tables.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"), expr("simhash48(text)").as("sig"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -121,7 +120,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhash near-dup: exact duplicates verify at hamming 0") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.VectorFunctions.register(spark)
     val hist = Dedup.qSimhashNearDup(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hist.keys.forall(h => h >= 0 && h <= 8))
@@ -214,7 +212,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("fused shingle builders equal the SQL zip_with/array_distinct/array_sort forms") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { d =>
       val docs = graft.Tables.t(spark, d, "documents")
       val rows = Dedup.withWords(docs)
@@ -526,7 +523,6 @@ class DedupSpec extends AnyFunSuite {
     *    regime) — minhash-LSH is the ensemble's high-recall arm.
     */
   test("planted-pair recall floors: simhash >= 0.8 tight, minhash-LSH >= 0.99, minhash is the high-recall arm") {
-    graft.functions.VectorFunctions.register(spark)
     val nPairs = 200
 
     val tight = plantedDocs(nPairs, wordsPerDoc = 200, nMutations = 1)

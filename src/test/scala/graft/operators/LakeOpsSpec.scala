@@ -68,8 +68,7 @@ class LakeOpsSpec extends AnyFunSuite {
   test("cdc latest matches the row_number window formulation") {
     val viaStruct = LakeOps.qCdcLatest(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    graft.Tables.registerAll(spark, dir)
-    val viaWindow = spark.sql(
+    val viaWindow = graft.Tables.sql(spark, dir,
       """SELECT user_id, n_versions, event_type FROM (
         |  SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id

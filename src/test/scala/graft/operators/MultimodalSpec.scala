@@ -72,7 +72,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("pixelgrid64 expression matches the transform-HOF sampler element-wise") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val rows = Multimodal.assets(spark, dir)
       .select(col("asset_id"),
         decode(expr(s"substring(payload, ${Multimodal.HeaderBytes + 1}, " +
@@ -92,7 +91,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("dhash56 expression is bit-identical to the aggregate-HOF fold") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     // both arms of the production input shape: raw grids and the
     // +1-brightness twins (transform-produced int arrays)
     val base = Multimodal.pixelGrids(spark, dir)

@@ -123,7 +123,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"missing rowCount stats: $rowCounts")
   }
 
-  test("scoped queries leave the caller's confs unchanged, apart from the first read's settings") {
+  test("scoped queries leave the caller's confs unchanged") {
     val queries = Seq[(SparkSession, String) => DataFrame](
       ScaleOps.qRuntimeFilter, ScaleOps.qCboReorder, StressOps.qStressAqeSkew,
       StreamOps.qStreamTokenBudget)
@@ -132,20 +132,11 @@ class ScaleOpsSpec extends AnyFunSuite {
       df.collect()
       df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     }
-    // graft.Tables.t and the events stream set these two read settings on
-    // the caller's session at its first table read and keep them (an open
-    // ROADMAP item); no other key may change, on the first build or later
-    val readSettings = Set("spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    val start = spark.conf.getAll -- readSettings
-    queries.foreach { q =>
+    // no key may change, on the first build or later
+    val start = spark.conf.getAll
+    (queries ++ queries).foreach { q =>
       buildRunExplain(q)
-      assert(spark.conf.getAll -- readSettings == start)
-    }
-    val warm = spark.conf.getAll
-    queries.foreach { q =>
-      buildRunExplain(q)
-      assert(spark.conf.getAll == warm)
+      assert(spark.conf.getAll == start)
     }
   }
 

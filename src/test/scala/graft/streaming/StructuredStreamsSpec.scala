@@ -151,7 +151,6 @@ class StructuredStreamsSpec extends AnyFunSuite {
 
     // expected: band-collision candidates verified at hamming <= 8,
     // computed with the batch kernel's own column expressions
-    graft.functions.VectorFunctions.register(spark)
     val sigs = spark.createDataset(docs.toSeq).toDF("doc_id", "text")
       .select(col("doc_id"), expr("simhash48(text)").as("sig"))
     val bands = sigs.select(col("doc_id"), col("sig"),

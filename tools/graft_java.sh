@@ -2,8 +2,9 @@
 # Run a graft main class directly on the compiled classes — no sbt lock,
 # no ~12 s sbt startup. Shares build.sbt's forked-JVM flags: the JDK-17
 # add-opens list is the one argfile tools/add-opens.args, and the heap is
-# SPARK_DRIVER_MEM. Session settings (master, shuffle width, UTC, UI off)
-# come from the session factory graft.runner.Cli.buildSpark. Prereq: the
+# SPARK_DRIVER_MEM. Session settings (master, shuffle width, UTC, UI off,
+# graft's SQL extensions, the ObjectHashAggregate fallback threshold) come
+# from the session factory graft.runner.Cli.buildSpark. Prereq: the
 # classes are current (`sbt -batch compile` once per source change); this
 # script does NOT compile.
 #
