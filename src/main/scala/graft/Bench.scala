@@ -9,13 +9,13 @@ object Bench {
     // re-measurement of specific queries (the driver passes no args)
     val only = SparkEntry.nameFilter(args.lift(0))
     var spark = Cli.buildSpark("graft-bench")
-    // Untimed per-query warmup immediately before each timed slot:
-    // whole-stage codegen caches at most 100 generated classes, so with
-    // this many queries any earlier warm pass is long evicted by the time
-    // a query's slot arrives — running the SAME query at sf0.001 with
-    // nothing in between guarantees the timed runs hit the codegen cache
-    // instead of paying a fresh Janino compile (~1-7s for the widest
-    // plans). A code path that only materializes at sf scale (e.g. an AQE
+    // Untimed per-query warmup immediately before each timed slot: the
+    // SAME query at sf0.001 with nothing in between. It pays the query's
+    // Janino compiles (~1-7s for the widest plans) outside the timed runs
+    // (the factory's codegen cache holds every class the suite compiles,
+    // so they stay cached), and it runs the query's own code paths just
+    // before they are timed, so C2 has compiled the hot ones. A code path
+    // that only materializes at sf scale (e.g. an AQE
     // skew-split variant that never triggers on the tiny warm input)
     // still compiles inside the FIRST timed run — but min-of-2 means the
     // second run, which hits the cached classes, is the one reported, so

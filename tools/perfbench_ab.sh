@@ -11,11 +11,13 @@
 # each, PAIRS times with seeds SEED0.. (default 1), alternating which side
 # runs first. Prints each side's median and interquartile range per
 # end-to-end metric and how many pairs the change wins (lower or higher
-# is better as BENCHMARK.json says). The per-run JSON lines stay in
+# is better as BENCHMARK.json says), and each side's median live heap
+# (`live_heap_mb`, read after the first timed pass), so memory a change
+# moves shows too. The per-run JSON lines and each run's raw.json stay in
 # <dir>/runs; both source copies are deleted on exit.
 set -euo pipefail
 
-[ $# -ge 3 ] || { sed -n '2,16p' "$0" >&2; exit 2; }
+[ $# -ge 3 ] || { sed -n '2,17p' "$0" >&2; exit 2; }
 rev="$1" workload="$2" pairs="$3" seed0="${4:-1}"
 repo="$(cd "$(dirname "$0")/.." && pwd)"
 
@@ -34,6 +36,7 @@ run() {  # side pair seed
   if (cd "$dir/$1" && python3 perfbench/run.py --workload "$workload" \
       --seed "$3" --seconds 10) > "$dir/runs/$1.$2.log" 2>&1; then
     tail -n 1 "$dir/runs/$1.$2.log" > "$out"
+    cp "$dir/$1/.bench_run/$workload/raw.json" "$dir/runs/$1.$2.raw.json"
     echo "pair $2 seed $3 $1: ok"
   else
     echo "pair $2 seed $3 $1: FAILED (see $dir/runs/$1.$2.log)"
@@ -51,8 +54,8 @@ import json, os, statistics, sys
 runs, pairs, bench = sys.argv[1], int(sys.argv[2]), json.load(open(sys.argv[3]))
 better = {m["name"]: m["better"] for m in bench["end_to_end"]}
 
-def load(side, i):
-    p = os.path.join(runs, f"{side}.{i}.json")
+def load(side, i, ext="json"):
+    p = os.path.join(runs, f"{side}.{i}.{ext}")
     return json.load(open(p)) if os.path.exists(p) else None
 
 res = {s: [load(s, i) for i in range(1, pairs + 1)] for s in ("parent", "change")}
@@ -81,4 +84,10 @@ for m, b in better.items():
             wins += (y < x) if b == "lower" else (y > x)
     (pm, pi), (cm, ci) = quart(pv), quart(cv)
     print(f"{m:14s} {pm:11.4g} {pi:9.3g} {cm:11.4g} {ci:9.3g}  {wins}/{n}")
+
+for s in res:
+    heap = [r["live_heap_mb"] for r in
+            (load(s, i, "raw.json") for i in range(1, pairs + 1)) if r]
+    if heap:
+        print(f"{s}: median live_heap_mb {statistics.median(heap):.1f} over {len(heap)} runs")
 EOF
