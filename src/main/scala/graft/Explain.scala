@@ -11,8 +11,9 @@ import graft.runner.Cli
   * Usage: runMain graft.Explain [sfDir] [outFile] [q_a,q_b,...]
   *
   * The optional third argument replaces the headline list with any
-  * registered queries (the filter Bench and Verify take), so a plan diff
-  * around a code change is two runs and a `diff`.
+  * registered queries (the filter Bench and Verify take);
+  * `tools/plan_diff.sh` runs it on a parent revision and the working tree
+  * and diffs the masked plans.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

@@ -41,8 +41,9 @@ object SparkEntry {
     arg.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
   /** Release what a query left persisted before the next one runs:
-    * catalog-cached tables (signature/hash tables whose lifetime the
-    * operators hand to the caller) and RDD-level blocks, which
+    * catalog-cached tables (among them the frames of an LSH index, such as
+    * `Dedup.minhashIndex`, that a query returning a lazy plan over the
+    * index leaves cached) and RDD-level blocks, which
     * `catalog.clearCache()` misses. The iterative operators (pointer-jump
     * CC, PageRank, label-prop) localCheckpoint each round, and those
     * blocks otherwise sit in the BlockManager until the async

@@ -471,10 +471,6 @@ final class DataSourceRegistry(sources: Map[String, DataSource]) {
     case s: SparkDataSource => s
     case _ => throw new JobError(s"not a spark datasource: $name")
   }
-  def fs(name: String): FsDataSource = get(name) match {
-    case s: FsDataSource => s
-    case _ => throw new JobError(s"not a fs datasource: $name")
-  }
   def store(name: String): ObjectStore = get(name) match {
     case s: ObjectStore => s
     case _ => throw new JobError(s"not an object-store datasource: $name")

@@ -45,18 +45,9 @@ object ClusterOps {
     * member count, max member) — the "keep one, drop n-1" manifest.
     */
   def qDedupClusters(s: SparkSession, dir: String, maxIter: Int = 20): DataFrame = {
-    val grams = Dedup.gramsOf(t(s, dir, "documents")).persist()
-    // persisted: the self-join below reads it on BOTH branches — without
-    // this the signature pass (explode + min-hash agg) runs twice
-    val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
-    val pairs = Dedup.verifyPairs(cand, grams, 0.8).select("doc_a", "doc_b")
-    val labels = connectedComponents(pairs, maxIter)
-    // blocking: the gram/band caches are the big allocations of this
-    // query — release them HERE rather than letting the async cleaner
-    // charge the work to whatever query runs next
-    grams.unpersist(blocking = true)
-    bands.unpersist(blocking = true)
+    val index = Dedup.minhashIndex(t(s, dir, "documents"))
+    val labels = connectedComponents(index.pairs(0.8).select("doc_a", "doc_b"), maxIter)
+    index.release()
     labels.groupBy(col("lbl").as("cluster_rep"))
       .agg(count(lit(1)).as("n_docs"), max("id").as("max_doc"))
       .orderBy("cluster_rep")
@@ -233,12 +224,7 @@ object ClusterOps {
   }
 
   val qDedupClustersOracle: String =
-    s"""WITH RECURSIVE ${Dedup.lshCtesDuck()},
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands2 a JOIN bands2 b
-      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
-      |pairs AS (SELECT doc_a, doc_b FROM (${Dedup.lshVerifySelectDuck("0.8")}) v),
+    s"""WITH RECURSIVE ${Dedup.lshPairsDuck(0.8)},
       |edges AS (
       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -267,8 +253,7 @@ object ClusterOps {
   def qCrossDedup(s: SparkSession, dir: String): DataFrame = {
     val refSrcs = (0 until 4).map(i => s"src$i")
     val docs = t(s, dir, "documents")
-    val grams = Dedup.gramsOf(docs, "source").persist()
-    val bands = Dedup.bandsOf(Dedup.sigOf(grams, "source"), "source").persist()
+    val Dedup.MinhashIndex(grams, bands) = Dedup.minhashIndex(docs, "source")
     val cand = bands.filter(!col("source").isInCollection(refSrcs)).as("a")
       .join(bands.filter(col("source").isInCollection(refSrcs)).as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -278,8 +263,6 @@ object ClusterOps {
     val flagged = Dedup.verifyPairs(cand, grams, 0.8)
       .select(col("doc_a").as("doc_id")).distinct()
       .withColumn("flag", lit(1L))
-    // the returned plan reads the persisted gram/band tables — caller
-    // owns their lifetime (see qMinhashLsh note)
     docs.filter(!col("source").isInCollection(refSrcs))
       .select("doc_id", "source")
       .join(flagged, Seq("doc_id"), "left")
@@ -362,13 +345,9 @@ object ClusterOps {
   def qClusterSizeHist(s: SparkSession, dir: String, maxIter: Int = 20): DataFrame = {
     val docs = t(s, dir, "documents")
     val nDocs = graft.Tables.rowCount(s, dir, "documents")
-    val grams = Dedup.gramsOf(docs).persist()
-    val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
-    val pairs = Dedup.verifyPairs(cand, grams, 0.8).select("doc_a", "doc_b")
-    val labels = connectedComponents(pairs, maxIter)
-    grams.unpersist(blocking = true)
-    bands.unpersist(blocking = true)
+    val index = Dedup.minhashIndex(docs)
+    val labels = connectedComponents(index.pairs(0.8).select("doc_a", "doc_b"), maxIter)
+    index.release()
     val clustered = labels.groupBy("lbl").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_clusters"))
     val clusteredDocs = clustered
@@ -382,12 +361,7 @@ object ClusterOps {
   }
 
   val qClusterSizeHistOracle: String =
-    s"""WITH RECURSIVE ${Dedup.lshCtesDuck()},
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands2 a JOIN bands2 b
-      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
-      |pairs AS (SELECT doc_a, doc_b FROM (${Dedup.lshVerifySelectDuck("0.8")}) v),
+    s"""WITH RECURSIVE ${Dedup.lshPairsDuck(0.8)},
       |edges AS (
       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -501,20 +475,18 @@ object ClusterOps {
     * Scale shape: the component graph is the duplicate surface only;
     * the quality join is doc-keyed; the keep-best windows partition by
     * cluster label (cluster-sized partitions, never corpus-sorted); the
-    * band join runs through [[Dedup.simhashBandPairs]]'s hot-bucket
+    * band join runs through [[Dedup.SimhashIndex]]'s hot-bucket
     * subdivision, so no band bucket's pair count grows quadratically
     * with corpus size. The ttr quality column is 4-dp fixed so the DESC
     * ordering is engine-stable, with doc_id as the total tie-break.
     */
   def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val sigs = docs.select(col("doc_id"), expr("simhash48(text)").as("sig"))
-      .persist() // band explode reads it 2× through the self-join
-    val pairs = Dedup.simhashBandPairs(sigs)
+    val index = Dedup.simhashIndex(docs)
+    val labels = connectedComponents(index.pairs
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 8)
-      .select("doc_a", "doc_b")
-    val labels = connectedComponents(pairs, 20)
-    sigs.unpersist(blocking = true)
+      .select("doc_a", "doc_b"), 20)
+    index.release()
     val ttr = docs.select(col("doc_id"),
       round(size(array_distinct(split(col("text"), " "))) /
         size(split(col("text"), " ")).cast("double"), 4).as("ttr"))
@@ -592,11 +564,7 @@ object ClusterOps {
     // hot-bucket subdivision) must be computed on the FULL corpus, like
     // the query under audit — sampling first would undercount buckets
     // past the cap and silently skip the subdivision path
-    // persisted: perBand plus both self-join sides read this frame; the
-    // caller owns cache lifetime (Bench, Verify and Explain release between
-    // queries — same discipline as simhashBandPairs). An unpersist here
-    // would run eagerly while BUILDING the lazy plan, before the
-    // returned DataFrame executes, and the cache would never be used.
+    // persisted: perBand plus both self-join sides read this frame
     val keyed = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
         cap = Dedup.BandBucketCap)
       .filter((col("band_idx") * 31 + col("band_sig")) % 97 === 0)

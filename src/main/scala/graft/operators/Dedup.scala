@@ -311,6 +311,42 @@ object Dedup {
       .withColumn("jaccard", expr("jaccard4(grams_a, grams_b)"))
   }
 
+  /** The frames an LSH index builder persisted, with one blocking release.
+    *
+    * Cache lifetime, for every index below: a query that materializes its
+    * pairs before it returns (the connected-components sites
+    * [[ClusterOps.qDedupClusters]], [[ClusterOps.qClusterSizeHist]] and
+    * [[ClusterOps.qDedupKeepBest]]) calls `release()` once they are
+    * materialized, so the next query does not pay for freeing them. A query
+    * that returns a lazy plan over the index leaves it cached: an unpersist
+    * while building the plan would run before the plan executes, and the
+    * cache would never be read. [[graft.SparkEntry.release]] frees those
+    * frames between queries; a pipeline embedding such a query keeps the
+    * index alive on purpose, since it is the reusable LSH index.
+    */
+  private[operators] sealed abstract class LshIndex(frames: DataFrame*) {
+    // dependents first, so no unpersist re-caches a frame built on another
+    def release(): Unit = frames.reverse.foreach(_.unpersist(blocking = true))
+  }
+
+  /** MinHash index: the [[gramsOf]] frame, persisted because the signature
+    * pass and both verify joins read it, and its [[bandsOf]] signature
+    * table, persisted so the band self-join runs the signature pass once.
+    * At scale the two are ~1% the width of the corpus.
+    */
+  private[operators] final case class MinhashIndex(grams: DataFrame, bands: DataFrame)
+      extends LshIndex(grams, bands) {
+    /** Band-collision pairs verified at jaccard ≥ minJ (doc_a < doc_b). */
+    def pairs(minJ: Double): DataFrame =
+      verifyPairs(bandPairs(bands, BandKey, "doc_id"), grams, minJ)
+  }
+
+  /** Builds the [[MinhashIndex]] of `docs(doc_id, text [, carry…])`. */
+  private[operators] def minhashIndex(docs: DataFrame, carry: String*): MinhashIndex = {
+    val grams = gramsOf(docs, carry: _*).persist()
+    MinhashIndex(grams, bandsOf(sigOf(grams, carry: _*), carry: _*).persist())
+  }
+
   // ---- DuckDB oracle builders for the same kernels, parameterized over
   // carry columns so the cross-corpus variant can thread `source` through.
   private[operators] def mhExprsDuck: String = (0 until NumHashes).map { i =>
@@ -344,6 +380,18 @@ object Dedup {
       |JOIN ths tb ON tb.doc_id = doc_b
       |WHERE round(len(list_intersect(ta.grams, tb.grams)) / CAST(len(list_distinct(list_concat(ta.grams, tb.grams))) AS DOUBLE), 4) >= $minJ""".stripMargin
 
+  /** [[MinhashIndex.pairs]] in DuckDB: the [[lshCtesDuck]] chain, the
+    * band-collision `cand(doc_a, doc_b)` and the verified
+    * `pairs(doc_a, doc_b, jaccard)`.
+    */
+  private[operators] def lshPairsDuck(minJ: Double): String =
+    s"""${lshCtesDuck()},
+      |cand AS (
+      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM bands2 a JOIN bands2 b
+      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
+      |pairs AS (${lshVerifySelectDuck(minJ.toString)})""".stripMargin
+
   /** MinHash signatures (32 permutations) over distinct word-bigram
     * shingles, via the fused one-pass [[graft.functions.MinHash32]]
     * (see [[sigOf]]). A `transform`/`array_min` SQL formulation would
@@ -374,30 +422,12 @@ object Dedup {
     * The band join is the only shuffle and only collides near-duplicates —
     * this is the 100 TB-safe shape (no all-pairs comparison).
     */
-  def qMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    // grams are persisted (reused by the signature pass + both verify
-    // joins); the signature is computed codegen-only (explode + hash-agg,
-    // see qMinhashSig) and the tiny band table is persisted so the band
-    // self-join doesn't recompute it. At scale these persisted projections
-    // are the standard LSH "signature table" — ~1% the width of the corpus.
-    val grams = gramsOf(t(s, dir, "documents")).persist()
-    val bands = bandsOf(sigOf(grams)).persist()
-    val cand = bandPairs(bands, BandKey, "doc_id")
-    // NOTE the returned plan reads the persisted gram/band tables — the
-    // caller owns their lifetime (Bench, Verify and Explain release it
-    // between queries; a pipeline embedding this keeps the signature
-    // table alive deliberately, it IS the reusable LSH index)
-    verifyPairs(cand, grams, 0.8).orderBy("doc_a", "doc_b")
-  }
+  def qMinhashLsh(s: SparkSession, dir: String): DataFrame =
+    minhashIndex(t(s, dir, "documents")).pairs(0.8).orderBy("doc_a", "doc_b")
 
   val qMinhashLshOracle: String =
-    s"""WITH ${lshCtesDuck()},
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands2 a JOIN bands2 b
-      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id)
-      |${lshVerifySelectDuck("0.8")}
-      |ORDER BY doc_a, doc_b""".stripMargin
+    s"""WITH ${lshPairsDuck(0.8)}
+      |SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b""".stripMargin
 
   /** n-gram (word bigram) Jaccard similarity on a deterministic pair subset
     * (consecutive doc ids) — the exact-verification kernel of near-dedup.
@@ -483,17 +513,13 @@ object Dedup {
     * keeps every intermediate inside signed-64 for the SQL oracle
     * replica.
     */
-  def qSimhashNearDup(s: SparkSession, dir: String): DataFrame = {
-    val sigs = t(s, dir, "documents")
-      .select(col("doc_id"), expr("simhash48(text)").as("sig"))
-      .persist() // band explode + two verify joins read it; caller clears
-    simhashBandPairs(sigs)
+  def qSimhashNearDup(s: SparkSession, dir: String): DataFrame =
+    simhashIndex(t(s, dir, "documents")).pairs
       .withColumn("hamming",
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
       .filter(col("hamming") <= 8)
       .groupBy("hamming").agg(count(lit(1)).as("n_pairs"))
       .orderBy("hamming")
-  }
 
   /** Band-bucket occupancy cap of the simhash and phash bands: buckets
     * holding more rows than this get their join key extended by
@@ -541,19 +567,26 @@ object Dedup {
         when(col("bucket_n") > cap, col("sub_key")).otherwise(lit(0L)))
   }
 
-  /** Distinct simhash candidate pairs (doc_a, doc_b, sig_a, sig_b) via
-    * the capped/subdivided band join of [[cappedBands]] over a
-    * (doc_id, sig) frame. Shared by [[qSimhashNearDup]],
-    * [[qDedupEnsemble]] and [[ClusterOps.qDedupKeepBest]].
+  /** Simhash index: the (doc_id, sig) frame of
+    * [[graft.functions.SimHash48]], persisted because the band explode and
+    * both pair sides read it, and its [[cappedBands]] frame (3 × 16 bits),
+    * persisted so the self-join runs the band explode and bucket-count
+    * aggregate once. Shared by [[qSimhashNearDup]], [[qDedupEnsemble]] and
+    * [[ClusterOps.qDedupKeepBest]]; cache lifetime as on [[LshIndex]].
     */
-  private[operators] def simhashBandPairs(sigs: DataFrame): DataFrame = {
-    // persisted: the self-join reads the banded+counted frame twice, and
-    // without the cache the band explode + bucket-count aggregate run
-    // once per side (same discipline as qMinhashLsh's band table; the
-    // caller owns cache lifetime, Bench/Verify clear between queries)
-    val keyed = cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
-      cap = BandBucketCap).persist()
-    bandPairs(keyed, BandKey :+ "sub", "doc_id", "sig")
+  private[operators] final case class SimhashIndex(sigs: DataFrame, keyed: DataFrame)
+      extends LshIndex(sigs, keyed) {
+    /** Distinct candidate pairs (doc_a, doc_b, sig_a, sig_b) of the capped
+      * band join.
+      */
+    def pairs: DataFrame = bandPairs(keyed, BandKey :+ "sub", "doc_id", "sig")
+  }
+
+  /** Builds the [[SimhashIndex]] of `docs(doc_id, text)`. */
+  private[operators] def simhashIndex(docs: DataFrame): SimhashIndex = {
+    val sigs = docs.select(col("doc_id"), expr("simhash48(text)").as("sig")).persist()
+    SimhashIndex(sigs, cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
+      cap = BandBucketCap).persist())
   }
 
   /** DuckDB CTE fragment replicating the 48-bit simhash signature pass:
@@ -582,23 +615,31 @@ object Dedup {
       |      (a, x) -> a + x) AS sig
       |  FROM ths)""".stripMargin
 
-  /** DuckDB CTE fragment replicating [[cappedBands]] (3 × 16 bits) +
-    * [[simhashBandPairs]]: reads a CTE named `sigs(doc_id, sig)`, defines
-    * `bands`, `counts`, `keyed`, and `cand(doc_a, doc_b, sig_a, sig_b)`.
+  /** [[cappedBands]] in DuckDB over a CTE or table `src(id, hash, …)`:
+    * defines `bands`, `counts` and `keyed(id, hash, band_idx, band_sig,
+    * sub_key, bucket_n, sub)`.
     */
-  val simhashCandDuck: String =
+  private[operators] def cappedBandsDuck(src: String, id: String, hash: String,
+      bands: Int, width: Int): String =
     s"""bands AS (
-      |  SELECT doc_id, sig, m AS band_idx,
-      |    (sig >> CAST(m * 16 AS INTEGER)) & 65535 AS band_sig,
-      |    (sig >> CAST(((m + 1) % 3) * 16 AS INTEGER)) & 255 AS sub_key
-      |  FROM sigs, (SELECT unnest(range(0, 3)) AS m) mm),
+      |  SELECT $id, $hash, m AS band_idx,
+      |    ($hash >> CAST(m * $width AS INTEGER)) & ${(1L << width) - 1} AS band_sig,
+      |    ($hash >> CAST(((m + 1) % $bands) * $width AS INTEGER)) & ${(1 << BandSubBits) - 1} AS sub_key
+      |  FROM $src, (SELECT unnest(range(0, $bands)) AS m) mm),
       |counts AS (
       |  SELECT band_idx, band_sig, count(*) AS bucket_n
       |  FROM bands GROUP BY 1, 2),
       |keyed AS (
       |  SELECT b.*, c.bucket_n,
       |    CASE WHEN c.bucket_n > $BandBucketCap THEN b.sub_key ELSE CAST(0 AS BIGINT) END AS sub
-      |  FROM bands b JOIN counts c USING (band_idx, band_sig)),
+      |  FROM bands b JOIN counts c USING (band_idx, band_sig))""".stripMargin
+
+  /** [[SimhashIndex.pairs]] in DuckDB: reads a CTE named
+    * `sigs(doc_id, sig)`, defines the [[cappedBandsDuck]] CTEs (3 × 16
+    * bits) and `cand(doc_a, doc_b, sig_a, sig_b)`.
+    */
+  val simhashCandDuck: String =
+    s"""${cappedBandsDuck("sigs", "doc_id", "sig", bands = 3, width = 16)},
       |cand AS (
       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
       |    a.sig AS sig_a, b.sig AS sig_b
@@ -633,15 +674,10 @@ object Dedup {
     * duplicate density, never corpus².
     */
   def qDedupEnsemble(s: SparkSession, dir: String): DataFrame = {
-    val grams = gramsOf(t(s, dir, "documents")).persist()
-    val bands = bandsOf(sigOf(grams)).persist()
-    val mhCand = bandPairs(bands, BandKey, "doc_id")
-    val mh = verifyPairs(mhCand, grams, 0.8)
+    val docs = t(s, dir, "documents")
+    val mh = minhashIndex(docs).pairs(0.8)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("mh"))
-    val sigs = t(s, dir, "documents")
-      .select(col("doc_id"), expr("simhash48(text)").as("sig"))
-      .persist()
-    val sh = simhashBandPairs(sigs)
+    val sh = simhashIndex(docs).pairs
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 8)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("sh"))
     mh.join(sh, Seq("doc_a", "doc_b"), "full_outer")
@@ -658,13 +694,8 @@ object Dedup {
   val qDedupEnsembleOracle: String =
     s"""WITH mh AS (
       |  SELECT doc_a, doc_b FROM (
-      |    WITH ${lshCtesDuck()},
-      |    cand AS (
-      |      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |      FROM bands2 a JOIN bands2 b
-      |        ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig
-      |        AND a.doc_id < b.doc_id)
-      |    ${lshVerifySelectDuck("0.8")}) q1),
+      |    WITH ${lshPairsDuck(0.8)}
+      |    SELECT doc_a, doc_b FROM pairs) q1),
       |sh AS (
       |  SELECT doc_a, doc_b FROM (
       |    WITH $simhash48SigsDuck,
@@ -857,25 +888,16 @@ object Dedup {
     * being tuned; scale shape is [[qMinhashLsh]] verbatim (persisted
     * signature table, key-equality band join, gram-set verify joins).
     */
-  def qJaccardCurve(s: SparkSession, dir: String): DataFrame = {
-    val grams = gramsOf(t(s, dir, "documents")).persist()
-    val bands = bandsOf(sigOf(grams)).persist()
-    val cand = bandPairs(bands, BandKey, "doc_id")
-    verifyPairs(cand, grams, 0.5)
+  def qJaccardCurve(s: SparkSession, dir: String): DataFrame =
+    minhashIndex(t(s, dir, "documents")).pairs(0.5)
       .withColumn("bin20", floor(col("jaccard") * 20).cast("long"))
       .groupBy("bin20").agg(count(lit(1)).as("n_pairs"))
       .orderBy("bin20")
-  }
 
   val qJaccardCurveOracle: String =
-    s"""WITH ${lshCtesDuck()},
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands2 a JOIN bands2 b
-      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
-      |v AS (${lshVerifySelectDuck("0.5")})
+    s"""WITH ${lshPairsDuck(0.5)}
       |SELECT CAST(floor(jaccard * 20) AS BIGINT) AS bin20, count(*) AS n_pairs
-      |FROM v GROUP BY 1 ORDER BY 1""".stripMargin
+      |FROM pairs GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Incremental ingest dedup — the daily-pipeline shape: a new batch
     * (docs with doc_id % 7 == 3 standing in for "today's crawl") is
@@ -932,8 +954,7 @@ object Dedup {
     * arrive in.
     */
   def qIncrementalLsh(s: SparkSession, dir: String): DataFrame = {
-    val grams = gramsOf(t(s, dir, "documents")).persist()
-    val bands = bandsOf(sigOf(grams)).persist()
+    val MinhashIndex(grams, bands) = minhashIndex(t(s, dir, "documents"))
     val delta = bands.filter(col("doc_id") % 10 === 7)
     val cand = bands.as("a").join(delta.as("b"),
         col("a.band_idx") === col("b.band_idx") &&

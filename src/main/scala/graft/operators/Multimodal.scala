@@ -302,8 +302,7 @@ object Multimodal {
     val brightened = base.select((col("asset_id") + 1000000L).as("asset_id"),
       expr("transform(px, p -> p + 1)").as("px"))
     val hashes = phashOf(base.unionByName(brightened))
-      .persist() // both sides of the band self-join read it; caller
-                 // (Bench/Verify) owns cache lifetime, like qCmsHeavyHitters
+      .persist() // both sides of the band self-join read it
     val keyed = Dedup.cappedBands(hashes, "asset_id", "phash", bands = 4, width = 14,
       cap = Dedup.BandBucketCap)
     Dedup.bandPairs(keyed, Dedup.BandKey :+ "sub", "asset_id", "phash")
@@ -314,7 +313,7 @@ object Multimodal {
   }
 
   val qPhashNearDupOracle: String =
-    """WITH px0 AS (
+    s"""WITH px0 AS (
       |  SELECT doc_id AS asset_id,
       |    list_transform(range(0, 64), k ->
       |      ascii(substr(text, CAST(1 + (k * length(text)) // 64 AS INT), 1))) AS px
@@ -333,18 +332,7 @@ object Multimodal {
       |        ELSE CAST(0 AS BIGINT) END)),
       |      (a, x) -> a + x) AS phash
       |  FROM px),
-      |bands AS (
-      |  SELECT asset_id, phash, m.m AS band_idx,
-      |    (phash >> CAST(14 * m.m AS INT)) & 16383 AS band_sig,
-      |    (phash >> CAST(((m.m + 1) % 4) * 14 AS INT)) & 255 AS sub_key
-      |  FROM h, range(4) AS m(m)),
-      |counts AS (
-      |  SELECT band_idx, band_sig, count(*) AS bucket_n
-      |  FROM bands GROUP BY 1, 2),
-      |keyed AS (
-      |  SELECT b.*, CASE WHEN c.bucket_n > 32 THEN b.sub_key ELSE 0 END AS sub
-      |  FROM bands b JOIN counts c
-      |    ON c.band_idx = b.band_idx AND c.band_sig = b.band_sig),
+      |${Dedup.cappedBandsDuck("h", "asset_id", "phash", bands = 4, width = 14)},
       |cand AS (
       |  SELECT DISTINCT a.asset_id AS asset_a, b.asset_id AS asset_b,
       |    a.phash AS ha, b.phash AS hb

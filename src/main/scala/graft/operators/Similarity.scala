@@ -1448,10 +1448,7 @@ object Similarity {
     * projection; nothing pairs the corpus with itself.
     */
   def qModalityAgreement(s: SparkSession, dir: String): DataFrame = {
-    val grams = Dedup.gramsOf(t(s, dir, "documents")).persist()
-    val bands = Dedup.bandsOf(Dedup.sigOf(grams)).persist()
-    val cand = Dedup.bandPairs(bands, Dedup.BandKey, "doc_id")
-    val pairs = Dedup.verifyPairs(cand, grams, 0.8)
+    val pairs = Dedup.minhashIndex(t(s, dir, "documents")).pairs(0.8)
     val e = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
     val scored = pairs
@@ -1469,17 +1466,11 @@ object Similarity {
   }
 
   val qModalityAgreementOracle: String =
-    s"""WITH ${Dedup.lshCtesDuck()},
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM bands2 a JOIN bands2 b
-      |    ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
-      |verified AS (
-      |${Dedup.lshVerifySelectDuck("0.8")}),
+    s"""WITH ${Dedup.lshPairsDuck(0.8)},
       |pr AS (
       |  SELECT v.doc_a, v.doc_b,
       |    unnest(ea.embedding)::DOUBLE AS x, unnest(eb.embedding)::DOUBLE AS y
-      |  FROM verified v
+      |  FROM pairs v
       |  JOIN embeddings ea ON ea.vec_id = v.doc_a
       |  JOIN embeddings eb ON eb.vec_id = v.doc_b),
       |sc AS (

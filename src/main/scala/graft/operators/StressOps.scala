@@ -261,36 +261,17 @@ object StressOps {
     * through untouched. Deterministic arithmetic end to end, so the
     * oracle replays the subdivision exactly.
     */
-  def qStressHotBand(s: SparkSession, dir: String): DataFrame = {
-    val sigs = t(s, dir, "documents").select(col("doc_id"),
-        expr("CASE WHEN doc_id % 4 = 0 THEN simhash48(text) & -65536 ELSE simhash48(text) END").as("sig"))
-      .persist() // the band pass + counts join read it twice; caller clears
-    val keyed = Dedup.cappedBands(sigs, "doc_id", "sig", bands = 3, width = 16,
-      cap = Dedup.BandBucketCap)
-    keyed.groupBy("band_idx", "band_sig", "sub")
-      .agg(count(lit(1)).as("sub_n"), max("bucket_n").as("bucket_n"))
-      .groupBy(col("band_idx").cast("long").as("band_idx"))
-      .agg(max("bucket_n").as("max_raw_bucket"),
-        max("sub_n").as("max_sub_bucket"),
-        count(lit(1)).as("n_buckets"))
-      .orderBy("band_idx")
-  }
+  def qStressHotBand(s: SparkSession, dir: String): DataFrame =
+    hotBucketAudit(t(s, dir, "documents").select(col("doc_id"),
+        expr("CASE WHEN doc_id % 4 = 0 THEN simhash48(text) & -65536 ELSE simhash48(text) END").as("sig")),
+      "doc_id", "sig", bands = 3, width = 16)
 
   val qStressHotBandOracle: String =
-    s"""WITH ${Dedup.simhash48SigsDuck},
+    hotBucketAuditDuck(s"""${Dedup.simhash48SigsDuck},
       |sigs AS (
       |  SELECT doc_id,
       |    CASE WHEN doc_id % 4 = 0 THEN sig & -65536 ELSE sig END AS sig
-      |  FROM base_sigs),
-      |${Dedup.simhashCandDuck},
-      |sub_sizes AS (
-      |  SELECT band_idx, band_sig, sub, count(*) AS sub_n, max(bucket_n) AS bucket_n
-      |  FROM keyed GROUP BY 1, 2, 3)
-      |SELECT CAST(band_idx AS BIGINT) AS band_idx,
-      |  max(bucket_n) AS max_raw_bucket,
-      |  max(sub_n) AS max_sub_bucket,
-      |  count(*) AS n_buckets
-      |FROM sub_sizes GROUP BY 1 ORDER BY 1""".stripMargin
+      |  FROM base_sigs)""".stripMargin, "doc_id", "sig", bands = 3, width = 16)
 
   /** Hot-bucket stress for the phash band join, mirroring
     * [[qStressHotBand]]: 25% of assets get their low 14 signature bits
@@ -301,14 +282,29 @@ object StressOps {
     * band: the hot bucket must shrink to cells bounded by the next
     * band's 8 subdivision bits while cold bands stay untouched.
     */
-  def qStressHotPhash(s: SparkSession, dir: String): DataFrame = {
-    val sigs = Multimodal.phashOf(Multimodal.pixelGrids(s, dir))
-      .select(col("asset_id"),
-        expr("CASE WHEN asset_id % 4 = 0 THEN phash & -16384 ELSE phash END")
-          .as("phash"))
-      .persist() // band pass + counts join read it twice; caller clears
-    Dedup.cappedBands(sigs, "asset_id", "phash", bands = 4, width = 14,
-        cap = Dedup.BandBucketCap)
+  def qStressHotPhash(s: SparkSession, dir: String): DataFrame =
+    hotBucketAudit(Multimodal.phashOf(Multimodal.pixelGrids(s, dir))
+        .select(col("asset_id"),
+          expr("CASE WHEN asset_id % 4 = 0 THEN phash & -16384 ELSE phash END")
+            .as("phash")),
+      "asset_id", "phash", bands = 4, width = 14)
+
+  val qStressHotPhashOracle: String =
+    hotBucketAuditDuck(s"""${Multimodal.phashSigsDuck},
+      |sigs AS (
+      |  SELECT asset_id,
+      |    CASE WHEN asset_id % 4 = 0 THEN phash & -16384 ELSE phash END AS phash
+      |  FROM h)""".stripMargin, "asset_id", "phash", bands = 4, width = 14)
+
+  /** The hot-bucket audit of [[qStressHotBand]] and [[qStressHotPhash]]:
+    * [[Dedup.cappedBands]] over `sigs(id, hash)`, then per band the raw
+    * max bucket occupancy, the max occupancy after subdivision and the
+    * number of (bucket, sub) cells.
+    */
+  private def hotBucketAudit(sigs: DataFrame, id: String, hash: String,
+      bands: Int, width: Int): DataFrame =
+    // persisted: the band pass and the counts join read it twice
+    Dedup.cappedBands(sigs.persist(), id, hash, bands, width, cap = Dedup.BandBucketCap)
       .groupBy("band_idx", "band_sig", "sub")
       .agg(count(lit(1)).as("sub_n"), max("bucket_n").as("bucket_n"))
       .groupBy(col("band_idx").cast("long").as("band_idx"))
@@ -316,27 +312,14 @@ object StressOps {
         max("sub_n").as("max_sub_bucket"),
         count(lit(1)).as("n_buckets"))
       .orderBy("band_idx")
-  }
 
-  val qStressHotPhashOracle: String =
-    s"""WITH ${Multimodal.phashSigsDuck},
-      |sigs AS (
-      |  SELECT asset_id,
-      |    CASE WHEN asset_id % 4 = 0 THEN phash & -16384 ELSE phash END AS phash
-      |  FROM h),
-      |bands AS (
-      |  SELECT asset_id, phash, m.m AS band_idx,
-      |    (phash >> CAST(14 * m.m AS INT)) & 16383 AS band_sig,
-      |    (phash >> CAST(((m.m + 1) % 4) * 14 AS INT)) & 255 AS sub_key
-      |  FROM sigs, range(4) AS m(m)),
-      |counts AS (
-      |  SELECT band_idx, band_sig, count(*) AS bucket_n
-      |  FROM bands GROUP BY 1, 2),
-      |keyed AS (
-      |  SELECT b.*, c.bucket_n,
-      |    CASE WHEN c.bucket_n > 32 THEN b.sub_key ELSE 0 END AS sub
-      |  FROM bands b JOIN counts c
-      |    ON c.band_idx = b.band_idx AND c.band_sig = b.band_sig),
+  /** [[hotBucketAudit]] in DuckDB: `sigsCtes` defines a CTE named
+    * `sigs(id, hash)`.
+    */
+  private def hotBucketAuditDuck(sigsCtes: String, id: String, hash: String,
+      bands: Int, width: Int): String =
+    s"""WITH $sigsCtes,
+      |${Dedup.cappedBandsDuck("sigs", id, hash, bands, width)},
       |sub_sizes AS (
       |  SELECT band_idx, band_sig, sub, count(*) AS sub_n, max(bucket_n) AS bucket_n
       |  FROM keyed GROUP BY 1, 2, 3)

@@ -1,14 +1,45 @@
 package graft.operators
 
+import org.apache.spark.sql.classic
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase}
 
 /** Dedup-family invariants not already enforced by the oracle gate. */
 class DedupSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.001"
+
+  private def nothingCached: Boolean =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  test("minhashIndex: release() uncaches both index frames") {
+    val index = Dedup.minhashIndex(graft.Tables.t(spark, dir, "documents"))
+    index.pairs(0.8).collect()
+    assert(index.grams.storageLevel != StorageLevel.NONE)
+    assert(index.bands.storageLevel != StorageLevel.NONE)
+    index.release()
+    assert(index.grams.storageLevel == StorageLevel.NONE)
+    assert(index.bands.storageLevel == StorageLevel.NONE)
+  }
+
+  test("the connected-components queries release their index once the pairs are materialized") {
+    for (name <- Seq("q_dedup_clusters", "q_cluster_size_hist", "q_dedup_keep_best")) {
+      SparkEntry.release(spark)
+      SparkEntry.queries(name)(spark, dir).collect()
+      assert(nothingCached, s"$name left persisted frames in the cache manager")
+    }
+  }
+
+  test("q_minhash_lsh's lazy plan keeps its index cached until SparkEntry.release") {
+    SparkEntry.release(spark)
+    SparkEntry.queries("q_minhash_lsh")(spark, dir).collect()
+    assert(!nothingCached, "the returned plan reads the cached index")
+    SparkEntry.release(spark)
+    assert(nothingCached)
+  }
 
   test("boilerplate strip matches an exact driver-side reference at toy scale") {
     val rows = Dedup.qBoilerplateStrip(spark, dir).collect()
@@ -486,20 +517,21 @@ class DedupSpec extends AnyFunSuite {
       nPairs: Int): Double = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val sigs = docs.select(col("doc_id"), expr("simhash48(text)").as("sig"))
-    plantedRecall(Dedup.simhashBandPairs(sigs)
+    val index = Dedup.simhashIndex(docs)
+    val pairs = index.pairs
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 8)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet, nPairs)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    index.release()
+    plantedRecall(pairs, nPairs)
   }
 
   private def minhashPlantedRecall(docs: org.apache.spark.sql.DataFrame,
       nPairs: Int): Double = {
     import spark.implicits._
-    val grams = Dedup.gramsOf(docs).persist()
-    val cand = Dedup.bandPairs(Dedup.bandsOf(Dedup.sigOf(grams)), Dedup.BandKey, "doc_id")
-    val pairs = Dedup.verifyPairs(cand, grams, 0.8)
+    val index = Dedup.minhashIndex(docs)
+    val pairs = index.pairs(0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    grams.unpersist()
+    index.release()
     plantedRecall(pairs, nPairs)
   }
 

@@ -150,7 +150,7 @@ class CliSpec extends AnyFunSuite {
         |""".stripMargin)
     val ctx = Cli.loadContext(home, "", SparkTestBase.spark)
     assert(ctx.registry.spark("sql").defaultSchema == "cli_test")
-    assert(ctx.registry.fs("work").base.toString == "/tmp/cli-work")
+    assert(ctx.registry.store("work").urlString("a/b.tsv") == "/tmp/cli-work/a/b.tsv")
   }
 
   test("loadContext falls back to database.yml and merges password.yml") {
